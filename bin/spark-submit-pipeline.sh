@@ -7,7 +7,10 @@
 #                                                 #  all graft.Main flags pass through)
 #   bin/spark-submit-pipeline.sh bench            # Bench JSON (scaling + queries)
 #   bin/spark-submit-pipeline.sh verify SF OUT    # correctness dump
-#   bin/spark-submit-pipeline.sh probe N UNITS [TOKENS_SCALE]  # per-stage timings
+#
+# Cores and driver heap default to the host running it: SPARK_GRAFT_CPUS = nproc, and
+# SPARK_DRIVER_MEM = half of MemTotal, clamped to 2g..8g. Set either to
+# override.
 #
 # On a real cluster swap --master local[*] for the cluster master and drop
 # nothing else: the code never assumes local mode (all parallelism comes from
@@ -27,14 +30,16 @@ case "$MODE" in
   run)    CLASS=graft.Main;       shift || true ;;
   bench)  CLASS=graft.Bench;      shift || true ;;
   verify) CLASS=graft.Verify;     shift || true ;;
-  probe)  CLASS=graft.StageProbe; shift || true ;;
   *) echo "unknown mode $MODE" >&2; exit 2 ;;
 esac
 
+CPUS="${SPARK_GRAFT_CPUS:-$(nproc)}"
+MEM="${SPARK_DRIVER_MEM:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' /proc/meminfo 2>/dev/null || echo 2g)}"
+
 exec /opt/spark/bin/spark-submit \
-  --master "local[${SPARK_GRAFT_CPUS:-32}]" \
-  --driver-memory "${SPARK_DRIVER_MEM:-48g}" \
-  --conf spark.sql.shuffle.partitions="${SPARK_GRAFT_CPUS:-32}" \
+  --master "local[$CPUS]" \
+  --driver-memory "$MEM" \
+  --conf spark.sql.shuffle.partitions="$CPUS" \
   --conf spark.sql.adaptive.enabled=true \
   --conf spark.local.dir=/dev/shm/graft-spark-tmp \
   --conf spark.ui.enabled=false \

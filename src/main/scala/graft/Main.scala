@@ -25,7 +25,8 @@ import graft.model.GraftConfig
   *   - `<output>/reference_json` reference-parity nested DuplicateGroup
   *                               JSON, one object per line (text)
   *   - `<output>/metrics.json`   per-stage lineage/metrics rows (driver-
-  *                               written; one small JSON array)
+  *                               written; one small JSON array; `bytes` is
+  *                               the committed snapshot's file bytes)
   *
   * The session comes from `SparkSession.builder().getOrCreate()` with NO
   * master/partition overrides: on a cluster, spark-submit flags (master,
@@ -149,7 +150,7 @@ object Main {
     val metricsJson = metrics.map { m =>
       s"""{"stage":"${m.stage}","rows_in":${m.rows_in},"rows_out":${m.rows_out},""" +
         s""""dropped_by_guard":${m.dropped_by_guard},"salted_groups":${m.salted_groups},""" +
-        s""""salted_members":${m.salted_members},"wall_ms":${m.wall_ms},""" +
+        s""""salted_members":${m.salted_members},"bytes":${m.bytes},"wall_ms":${m.wall_ms},""" +
         s""""config_hash":"${m.config_hash}","snapshot_id":"${m.snapshot_id}"}"""
     }.mkString("[\n  ", ",\n  ", "\n]\n")
     val outPath = new org.apache.hadoop.fs.Path(s"$out/metrics.json")

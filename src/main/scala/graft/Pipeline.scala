@@ -19,6 +19,9 @@ import graft.checkpoint.{Manifest, NoCheckpointIO, TableIO}
   * through a TableIO so each stage commits atomically and resumes from its
   * last committed snapshot (the reference's `--resume-stageN` generalized,
   * /root/reference/src/main.rs:114-131).
+  * Six stages commit. Like the reference's checkpoint database, which keeps
+  * hashes and sizes rather than file contents, a durable run stores the
+  * page text once (in ST0) and only what a later stage reads.
   *
   * Scale design (100 TB):
   *  - ST1 computes each signature once per distinct text
@@ -30,10 +33,11 @@ import graft.checkpoint.{Manifest, NoCheckpointIO, TableIO}
   *    into bounded buckets and over-cap groups are dropped *before* any
   *    collect_list materializes (hot-band stop-word guard, counted in
   *    metrics) — the skew defuser for boilerplate bands;
-  *  - ST3 only ever touches candidate pairs (LSH-bounded): contents are
-  *    semi-join-pruned to the candidate id set, so the corpus text is never
-  *    shuffled — only dup-set texts; the repartition key is salted so a hub
-  *    content cannot serialize the CPU-bound verify;
+  *  - ST3 only ever touches candidate pairs (LSH-bounded): ST0's rows are
+  *    semi-join-pruned to the candidate id set before they are reduced to
+  *    one text per content, so the corpus text is never shuffled — only
+  *    dup-set texts; the repartition key is salted so a hub content cannot
+  *    serialize the CPU-bound verify;
   *  - ST4 shuffles only the verified-pair edge set (tiny vs corpus);
   *  - no stage collects unbounded data to the driver.
   */
@@ -125,15 +129,17 @@ object Pipeline {
   }
 
   /** One row per distinct content: (node_id, n_bytes, text). The J3
-    * hard-link-collapse analog, shared by ST1 (signatures) and ST3 (verify
-    * text lookup) so the full-text dedup shuffle happens once. */
+    * hard-link-collapse analog, feeding ST1 (signatures) and ST3 (verify
+    * text lookup). */
   def distinctContents(extracted: DataFrame): DataFrame =
     extracted.select("node_id", "n_bytes", "text").dropDuplicates("node_id")
 
   // ---------------------------------------------------------------- ST1
   /** One row per distinct text: (node_id, n_bytes, minhash, simhash,
     * band_hashes). Signature computed exactly once per content (J3).
-    * Input: `distinctContents` output (already deduped by node_id). */
+    * Input: `distinctContents` output (already deduped by node_id).
+    * `minhash` is read only by the incremental mode's estimate tier; the
+    * batch run commits the table without it. */
   def signatures(contents: DataFrame, cfg: GraftConfig): DataFrame = {
     contents
       .select("node_id", "n_bytes", "text")
@@ -415,6 +421,9 @@ object Pipeline {
     // No distinct on ids: left_semi ignores right-side duplicates, and
     // skipping it saves a whole shuffle stage (AQE broadcasts the id set
     // when it fits; when it doesn't, the join shuffles it once either way).
+    // When `contents` is `distinctContents` of ST0's rows, as in `run`, the
+    // optimizer pushes this semi-join below the dedup aggregate, so only
+    // candidate texts reach the dedup shuffle (PlanSpec gates it).
     val ids = candidates.select(col("id_a").as("node_id"))
       .union(candidates.select(col("id_b").as("node_id")))
     val need = contents.join(ids, Seq("node_id"), "left_semi")
@@ -577,32 +586,32 @@ object Pipeline {
     val metrics = scala.collection.mutable.ArrayBuffer[StageMetrics]()
     var prevRows = -1L // rows_in of stage N = rows_out of stage N-1
 
-    def stage(name: String, dropped: Long = 0L)(compute: => DataFrame): DataFrame = {
+    def stage(name: String)(compute: => DataFrame): DataFrame = {
       io.load(spark, name) match {
         case Some((df, m)) =>
           // rows_in is the PREVIOUS stage's row count even for a loaded
           // stage — filling it with the stage's own rowCount would make
           // every resumed stage report selectivity 1.0 in the lineage.
-          metrics += StageMetrics(name, m.snapshotId, -1, prevRows, m.rowCount, 0, 0, 0, m.configHash)
+          metrics += StageMetrics(name, m.snapshotId, -1, prevRows, m.rowCount, 0, m.bytes, 0, m.configHash)
           prevRows = m.rowCount
           df
         case None =>
           val t0 = System.nanoTime()
           val (df, m) = io.commit(compute, name)
           val wallMs = (System.nanoTime() - t0) / 1000000
-          metrics += StageMetrics(name, m.snapshotId, -1, prevRows, m.rowCount, dropped, 0, wallMs, m.configHash)
+          metrics += StageMetrics(name, m.snapshotId, -1, prevRows, m.rowCount, 0, m.bytes, wallMs, m.configHash)
           prevRows = m.rowCount
           df
       }
     }
 
+    // ST0 holds the only committed copy of the page text: ST1 and ST3 each
+    // derive the distinct contents from it inline (ST3's is pruned to the
+    // candidate ids before its dedup shuffle, see verifyInput). ST1
+    // commits without `minhash`, which no batch stage reads.
     val extracted = stage("st0_extracted")(extract(pages, cfg))
-    // Shared once: the full-text dedup shuffle feeding both ST1 and ST3.
-    // A stage of its own so st1's rows_in counts what st1 actually consumes
-    // (deduped contents, not st0 rows) and so durable resume of ST3 reads
-    // committed contents instead of recomputing the dedup.
-    val contents = stage("st0b_contents")(distinctContents(extracted))
-    val sigs = stage("st1_signatures")(signatures(contents, cfg))
+    val sigs = stage("st1_signatures")(
+      signatures(distinctContents(extracted), cfg).drop("minhash"))
 
     var bandStats: Option[() => BandStats] = None
     val candidates = stage("st2_candidates") {
@@ -611,7 +620,7 @@ object Pipeline {
       c.pairs
     }
 
-    val verified = stage("st3_verified")(verifyPairs(candidates, contents, cfg))
+    val verified = stage("st3_verified")(verifyPairs(candidates, distinctContents(extracted), cfg))
     // Durable IOs extend resume INSIDE ST4: the CC loop commits labels per
     // iteration under io.ccDurableDir, so a crash mid-propagation resumes
     // from the last committed iteration, not from scratch.

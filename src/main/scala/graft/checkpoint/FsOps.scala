@@ -4,6 +4,11 @@ import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path, UnsupportedFileSystemException}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+
+/** One parquet data file of a committed snapshot (see [[FsOps.parquetFiles]]). */
+private[graft] final case class ParquetFile(rows: Long, bytes: Long)
 
 /** Hadoop-FileSystem primitives shared by the durable stores
   * (ParquetSnapshotIO, ConnectedComponents' per-iteration label store), so
@@ -96,6 +101,21 @@ private[graft] object FsOps {
   def listDirs(conf: Configuration, p: Path): Seq[Path] =
     if (!exists(conf, p)) Nil
     else fs(conf, p).listStatus(p).filter(_.isDirectory).map(_.getPath).toSeq
+
+  /** Every data file directly under a parquet output dir, in name order,
+    * with its row count and length. The counts come from the footers, read
+    * on the driver through the dir's Hadoop filesystem: a commit learns what
+    * it wrote without a Spark job. Names starting with `_` or `.` (the
+    * `_SUCCESS` marker, checksum files) are not data, as in Spark's own
+    * file index. */
+  def parquetFiles(conf: Configuration, dir: Path): Seq[ParquetFile] =
+    fs(conf, dir).listStatus(dir).toSeq
+      .filter(s => s.isFile && !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith("."))
+      .sortBy(_.getPath.getName)
+      .map { s =>
+        val r = ParquetFileReader.open(HadoopInputFile.fromStatus(s, conf))
+        try ParquetFile(r.getRecordCount, s.getLen) finally r.close()
+      }
 
   /** Best-effort recursive delete (GC sweeps must never abort a commit
     * whose manifest already landed; a resisting dir is re-swept later). */

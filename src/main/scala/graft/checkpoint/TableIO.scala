@@ -39,10 +39,23 @@ trait TableIO {
 }
 
 object TableIO {
-  /** Canonical per-partition lineage rows for a committed snapshot — ONE
-    * schema and derivation shared by every durable impl (ParquetSnapshotIO,
-    * IcebergIO), so the metrics stores can never drift apart. One row per
-    * read partition of the committed files (north-rule §7.6). */
+  /** One lineage row of a committed snapshot: the ONE schema every durable
+    * impl writes (ParquetSnapshotIO, IcebergIO), so the metrics stores can
+    * never drift apart (north-rule §7.6). */
+  final case class LineageRow(
+      stage: String,
+      snapshot_id: String,
+      partition_id: Int,
+      rows_out: Long,
+      config_hash: String,
+      committed_ms: Long)
+
+  private val lineageColumns =
+    org.apache.spark.sql.Encoders.product[LineageRow].schema.fieldNames.toSeq
+
+  /** Lineage rows derived from a committed table by a Spark job: one row
+    * per read partition of the committed data (IcebergIO, whose files are
+    * Iceberg's to list). */
   def lineageRows(committed: DataFrame, stage: String, configHash: String,
       snapshotId: String): DataFrame = {
     import org.apache.spark.sql.functions._
@@ -53,18 +66,22 @@ object TableIO {
       .withColumn("snapshot_id", lit(snapshotId))
       .withColumn("config_hash", lit(configHash))
       .withColumn("committed_ms", lit(System.currentTimeMillis()))
-      .select("stage", "snapshot_id", "partition_id", "rows_out", "config_hash", "committed_ms")
+      .select(lineageColumns.map(col): _*)
   }
 }
 
+/** The commit record of one stage snapshot. `bytes` is the snapshot's
+  * data-file bytes (0 where unknown: in-memory IO, Iceberg, and manifests
+  * written before the field existed). */
 final case class Manifest(
     snapshotId: String,
     configHash: String,
     rowCount: Long,
-    stage: String
+    stage: String,
+    bytes: Long = 0L
 ) {
   def toJson: String =
-    s"""{"snapshot_id": "$snapshotId", "config_hash": "$configHash", "row_count": $rowCount, "committed_at_stage": "$stage"}"""
+    s"""{"snapshot_id": "$snapshotId", "config_hash": "$configHash", "row_count": $rowCount, "committed_at_stage": "$stage", "bytes": $bytes}"""
 }
 
 object Manifest {
@@ -78,15 +95,19 @@ object Manifest {
       ch <- kv.get("config_hash")
       rc <- kv.get("row_count")
       st <- kv.get("committed_at_stage")
-    } yield Manifest(sid, ch, rc.toLong, st)
+    } yield Manifest(sid, ch, rc.toLong, st, kv.get("bytes").map(_.toLong).getOrElse(0L))
   }
 }
 
 /** Directory-per-stage Parquet snapshots under `root`, keyed by configHash.
-  * Every commit also writes a per-partition lineage/metrics table
-  * `<stage>/<snapshot>_metrics` with one row per written partition
+  * Every commit also writes a lineage/metrics table
+  * `<stage>/<snapshot>_metrics` with one row per written data file
   * (north-rule requirement, SURVEY §7.6): the durable generalization of the
   * reference's atomic progress counters (process_matches.rs:85-96).
+  *
+  * A commit runs two Spark jobs, the data write and the lineage write of a
+  * local table. Row count, bytes and lineage are read from the written
+  * files' footers, and the read-back passes the written schema.
   *
   * `root` may be on any Hadoop filesystem (file://, hdfs://, abfs://, or
   * scheme-less = the default FS): manifest/GC operations go through
@@ -135,7 +156,7 @@ final class ParquetSnapshotIO(root: String, configHash: String) extends TableIO 
       }
   }
 
-  /** Per-partition metrics of a committed snapshot (resolved through the
+  /** Per-file lineage rows of a committed snapshot (resolved through the
     * manifest — snapshot ids are unique per commit, see commit()). */
   def metrics(spark: SparkSession, stage: String): Option[DataFrame] = {
     val conf = hconf(spark)
@@ -150,7 +171,6 @@ final class ParquetSnapshotIO(root: String, configHash: String) extends TableIO 
   override def commit(df: DataFrame, stage: String): (DataFrame, Manifest) = {
     val spark = df.sparkSession
     val conf = hconf(spark)
-    import org.apache.spark.sql.functions._
     // UNIQUE snapshot dir per commit: writing in place under the id the
     // current manifest references would delete the only durable copy
     // before the replacement finishes (a crash mid-rewrite would leave the
@@ -162,18 +182,18 @@ final class ParquetSnapshotIO(root: String, configHash: String) extends TableIO 
     val dir = stageDir(stage)
     FsOps.mkdirs(conf, dir)
     val dataPath = new Path(dir, snapshotId)
-    df.write.mode("overwrite").parquet(dataPath.toString)
+    df.write.mode("overwrite").parquet(dataPath.toString) // the commit's one data job
 
-    // Per-partition lineage rows over the durable snapshot (one light job:
-    // a row count per read partition of the committed files).
-    val committed = spark.read.parquet(dataPath.toString)
-    val perPart = TableIO.lineageRows(committed, stage, configHash, snapshotId).cache()
-    perPart.write.mode("overwrite").parquet(new Path(dir, s"${snapshotId}_metrics").toString)
-    val rows = Option(perPart.agg(sum(col("rows_out"))).head().get(0))
-      .map(_.asInstanceOf[Long]).getOrElse(0L) // empty snapshot -> 0
-    perPart.unpersist()
+    // Row count, bytes and lineage come from the footers of the files just
+    // written (driver-side reads, no Spark job): one lineage row per file,
+    // numbered in name order, which is write-partition order.
+    val files = FsOps.parquetFiles(conf, dataPath)
+    val now = System.currentTimeMillis()
+    spark.createDataFrame(files.zipWithIndex.map { case (f, i) =>
+      TableIO.LineageRow(stage, snapshotId, i, f.rows, configHash, now)
+    }).write.mode("overwrite").parquet(new Path(dir, s"${snapshotId}_metrics").toString)
 
-    val m = Manifest(snapshotId, configHash, rows, stage)
+    val m = Manifest(snapshotId, configHash, files.map(_.rows).sum, stage, files.map(_.bytes).sum)
     FsOps.sweepTmp(conf, manifestPath(stage)) // kill-stranded tmp manifests
     val tmp = new Path(dir, s"_manifest.json.tmp-${java.util.UUID.randomUUID()}")
     FsOps.writeAtomic(conf, tmp, manifestPath(stage), m.toJson)
@@ -187,13 +207,15 @@ final class ParquetSnapshotIO(root: String, configHash: String) extends TableIO 
       .filter(p => p.getName.startsWith("snap-")
         && !Set(snapshotId, s"${snapshotId}_metrics").contains(p.getName))
       .foreach(FsOps.deleteRecursive(conf, _)) // best effort; next commit resweeps
-    (committed, m)
+    // Read back under the written schema, so Spark runs no schema-inference
+    // job; parquet hands every column back nullable.
+    (spark.read.schema(df.schema.toNullable).parquet(dataPath.toString), m)
   }
 }
 
 /** In-memory IO: nothing is durable, but stages in `cached` are lazily
   * local-checkpointed so downstream stages that branch from them (e.g. ST1
-  * signatures and ST3 contents both read ST0) share one materialization
+  * signatures and ST3 verify both read ST0) share one materialization
   * instead of recomputing the lineage per branch — the in-memory analog of
   * the durable per-stage snapshot.
   *

@@ -199,7 +199,8 @@ object ConnectedComponents {
       FsOps.listDirs(conf, root)
         .filter(d => d.getName.startsWith("labels-iter") && d.getName != p.getName)
         .foreach(FsOps.deleteRecursive(conf, _))
-      labels.sparkSession.read.parquet(p.toString)
+      // the written schema, so the read-back runs no schema-inference job
+      labels.sparkSession.read.schema(labels.schema.toNullable).parquet(p.toString)
     }
   }
 

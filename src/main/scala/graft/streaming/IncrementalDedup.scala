@@ -263,7 +263,6 @@ object IncrementalDedup {
       crashAfterAppends: Int = Int.MaxValue): Unit = {
     val spark = batch.sparkSession
     ensureStateVersion(spark, cfg, dirs)
-    if (batch.isEmpty) return
     // Test hook mirroring remapNodeIds' crashAfterTables: die before the
     // (crashAfterAppends+1)-th state append, so the replay-resume contract
     // (see the append block below) is exercisable at every crash point.
@@ -449,9 +448,15 @@ object IncrementalDedup {
     // unchanged-bindings check — at most one row per batch (a crash in the
     // one instant between swap and append loses the audit row for that
     // batch; an at-most-once audit beats contradictory duplicates).
+    // Its counts come from ONE aggregation over a tagged union of the
+    // (already materialized) tables, not one count job per table.
+    val counted = Seq(newPairs, crossPairs, newVerified, crossExactVerified, crossEstVerified)
+    val n = counted.zipWithIndex
+      .map { case (d, i) => d.select(lit(i).as("t")) }.reduce(_ union _)
+      .select(counted.indices.map(i => count_if(col("t") === i)): _*)
+      .head()
     val metricsRow =
-      Seq((batchId, newPairs.count(), crossPairs.count(),
-        newVerified.count() + crossExactVerified.count(), crossEstVerified.count(),
+      Seq((batchId, n.getLong(0), n.getLong(1), n.getLong(2) + n.getLong(3), n.getLong(4),
         System.currentTimeMillis()))
         .toDF("batch_id", "candidates_new", "candidates_cross",
           "edges_exact_verified", "edges_est_only", "committed_ms")

@@ -114,6 +114,24 @@ class IncrementalDedupSpec extends SparkSpec {
     assert(after == before, "unchanged batch must not rewrite state or clusters")
   }
 
+  test("an empty batch leaves every state dir and the metrics log untouched") {
+    val root = Files.createTempDirectory("graft-inc-empty").toString
+    val dirs = StateDirs(root)
+    IncrementalDedup.processBatch(
+      df(Seq(page("u://a", baseText), page("u://b", nearText))), cfg, dirs, batchId = 1L)
+
+    def files(): Map[String, (Long, Long)] = {
+      import scala.jdk.CollectionConverters._
+      Files.walk(java.nio.file.Paths.get(root)).iterator().asScala.filter(Files.isRegularFile(_))
+        .map(p => p.toString -> (Files.size(p), Files.getLastModifiedTime(p).toMillis)).toMap
+    }
+    val before = files()
+    assert(before.keys.exists(_.startsWith(dirs.metrics)), "first batch wrote no metrics row")
+    IncrementalDedup.processBatch(df(Seq.empty), cfg, dirs, batchId = 2L)
+    assert(files() == before, "empty batch changed the state root")
+    assert(spark.read.parquet(dirs.metrics).count() == 1L)
+  }
+
   test("recluster is bounded to affected components (untouched clusters carried verbatim)") {
     val root = Files.createTempDirectory("graft-inc7").toString
     val dirs = StateDirs(root)

@@ -130,6 +130,12 @@ class MainSpec extends SparkSpec {
     Seq("st0_extracted", "st1_signatures", "st2_candidates",
       "st3_verified", "st4_clusters", "st5_report")
       .foreach(st => metrics should include(st))
+    // every durable stage reports its committed snapshot's file bytes
+    val stageBytes = """"stage":"(\w+)"[^\n]*"bytes":(\d+)""".r
+      .findAllMatchIn(metrics).map(m => m.group(1) -> m.group(2).toLong).toMap
+    stageBytes.keySet shouldBe Set("st0_extracted", "st1_signatures", "st2_candidates",
+      "st3_verified", "st4_clusters", "st5_report")
+    all(stageBytes.values) should be > 0L
 
     // second run under the same checkpoint RESUMES (loads every committed
     // stage — wall_ms 0 markers in metrics) and reproduces the outputs

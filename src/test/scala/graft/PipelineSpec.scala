@@ -268,7 +268,7 @@ class PipelineSpec extends SparkSpec {
 
   test("metrics rows written for every stage") {
     val stages = result.metrics.map(_.stage)
-    assert(stages.toSet == Set("st0_extracted", "st0b_contents", "st1_signatures",
+    assert(stages.toSet == Set("st0_extracted", "st1_signatures",
       "st2_candidates", "st3_verified", "st4_clusters", "st5_report"))
     assert(result.metrics.forall(_.wall_ms >= 0))
   }

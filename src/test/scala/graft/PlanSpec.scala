@@ -117,6 +117,40 @@ class PlanSpec extends SparkSpec {
     assert(plan.contains("LeftSemi"), s"no semi-join prune in verify input:\n${plan.take(2000)}")
   }
 
+  test("verify over ST0 rows shuffles only candidate texts") {
+    import org.apache.spark.sql.catalyst.plans.LeftSemi
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.types.StringType
+    import spark.implicits._
+    // ST3 reads its texts from ST0's rows (node_id repeats across urls)
+    // through distinctContents: the prune to candidate ids must come before
+    // the one-text-per-content reduction, so every shuffle that carries
+    // text sits above a LeftSemi. (range source: a literal Seq could
+    // constant-fold.)
+    val candidates = Seq((1L, 2L), (2L, 3L)).toDF("id_a", "id_b")
+    val extracted = spark.range(0, 300).select(
+      pmod(col("id"), lit(100L)).as("node_id"),
+      lit(3L).as("n_bytes"),
+      concat(lit("t"), pmod(col("id"), lit(100L)).cast("string")).as("text"))
+    val plan = Pipeline.verifyInput(candidates, Pipeline.distinctContents(extracted), SparkEntry.cfg)
+      .queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.initialPlan
+        case p => p
+      }
+    val textShuffles = plan.collect {
+      case e: ShuffleExchangeExec if e.output.exists(_.dataType == StringType) => e
+    }
+    assert(textShuffles.nonEmpty, s"no text shuffle found:\n${plan.toString.take(3000)}")
+    textShuffles.foreach { e =>
+      assert(e.child.exists {
+        case j: BaseJoinExec => j.joinType == LeftSemi
+        case _ => false
+      }, s"text shuffled before the candidate-id prune:\n${plan.toString.take(3000)}")
+    }
+  }
+
   test("url canonicalization is one narrow builtin projection (no UDF, no shuffle)") {
     import spark.implicits._
     // The honest 100 TB property: the whole canonicalization is ONE narrow

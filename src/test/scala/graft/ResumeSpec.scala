@@ -64,8 +64,7 @@ class ResumeSpec extends SparkSpec {
     val loaded = r.metrics.filter(_.wall_ms == 0).map(_.stage).toSet
     assert(loaded.contains("st0_extracted") && loaded.contains("st1_signatures"))
     val computed = r.metrics.filterNot(m => loaded.contains(m.stage)).map(_.stage).toSet
-    assert(computed == Set("st0b_contents", "st2_candidates", "st3_verified",
-      "st4_clusters", "st5_report"))
+    assert(computed == Set("st2_candidates", "st3_verified", "st4_clusters", "st5_report"))
     assert(r.report.count() > 0)
   }
 
@@ -75,7 +74,7 @@ class ResumeSpec extends SparkSpec {
     val io = new ParquetSnapshotIO(root, cfg.configHash)
     val r = Pipeline.run(spark, pages, cfg, io)
 
-    Seq("st0_extracted", "st0b_contents", "st1_signatures", "st2_candidates",
+    Seq("st0_extracted", "st1_signatures", "st2_candidates",
       "st3_verified", "st4_clusters", "st5_report").foreach { stage =>
       val m = io.metrics(spark, stage)
       assert(m.isDefined, s"no metrics table for $stage")
@@ -88,6 +87,70 @@ class ResumeSpec extends SparkSpec {
       assert(rows.forall(_.getAs[String]("config_hash") == cfg.configHash))
     }
     assert(r.report.count() > 0)
+  }
+
+  test("commit runs at most two Spark jobs and reads back the written schema") {
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.ListenerBusDrain
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val root = Files.createTempDirectory("graft-commit-jobs").toString
+    val io = new ParquetSnapshotIO(root, cfg.configHash)
+    val sc = spark.sparkContext
+    // already materialized: every job counted below belongs to the commit
+    val extracted = Pipeline.extract(PagesGen.pages(spark, spec), cfg).localCheckpoint()
+    val group = "graft-commit-job-gate"
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    def commitCountingJobs(df: org.apache.spark.sql.DataFrame, stage: String) = {
+      sc.addSparkListener(listener)
+      sc.setJobGroup(group, "commit under test")
+      jobs.set(0)
+      try {
+        val out = io.commit(df, stage)
+        ListenerBusDrain(sc)
+        (out, jobs.get)
+      } finally {
+        sc.clearJobGroup()
+        sc.removeSparkListener(listener)
+      }
+    }
+
+    val ((committed, m), n) = commitCountingJobs(extracted, "st0_extracted")
+    assert(n <= 2, s"commit ran $n Spark jobs (data write + lineage write allowed)")
+    assert(m.rowCount == extracted.count())
+    assert(m.bytes > 0)
+    assert(committed.schema ==
+      spark.read.parquet(new Path(new Path(root, "st0_extracted"), m.snapshotId).toString).schema)
+    assert(committed.count() == m.rowCount)
+
+    val ((empty, me), ne) = commitCountingJobs(extracted.limit(0), "st5_report")
+    assert(ne <= 2, s"empty commit ran $ne Spark jobs")
+    assert(me.rowCount == 0L)
+    assert(empty.count() == 0L)
+    assert(io.metrics(spark, "st5_report").get.collect().map(_.getAs[Long]("rows_out")).sum == 0L)
+  }
+
+  test("a durable run stores the page text once and commits ST1 without minhash") {
+    val root = Files.createTempDirectory("graft-lean").toString
+    val io = new ParquetSnapshotIO(root, cfg.configHash)
+    val r = Pipeline.run(spark, PagesGen.pages(spark, spec), cfg, io)
+    val committed = Seq("st0_extracted" -> r.extracted, "st1_signatures" -> r.signatures,
+      "st2_candidates" -> r.candidates, "st3_verified" -> r.verified,
+      "st4_clusters" -> r.clusters, "st5_report" -> r.report)
+    assert(r.metrics.map(_.stage) == committed.map(_._1))
+    val withText = committed.map(_._1).filter(st => io.load(spark, st).get._1.columns.contains("text"))
+    assert(withText == Seq("st0_extracted"), s"page text stored by $withText")
+    assert(!io.load(spark, "st1_signatures").get._1.columns.contains("minhash"))
+    // the schema a commit hands back is the one a later load infers
+    committed.foreach { case (st, df) =>
+      assert(df.schema == io.load(spark, st).get._1.schema, s"$st read-back schema differs")
+    }
+    assert(r.metrics.forall(_.bytes > 0), s"stage bytes: ${r.metrics.map(m => m.stage -> m.bytes)}")
   }
 
   test("ST4 resumes connected components mid-propagation under a durable IO") {
@@ -104,10 +167,11 @@ class ResumeSpec extends SparkSpec {
     // (st4 never committed)
     val extracted = Pipeline.extract(pages, ccCfg)
     val (committedExtracted, _) = io.commit(extracted, "st0_extracted")
-    val (contents, _) = io.commit(Pipeline.distinctContents(committedExtracted), "st0b_contents")
-    val (sigs, _) = io.commit(Pipeline.signatures(contents, ccCfg), "st1_signatures")
+    val (sigs, _) = io.commit(
+      Pipeline.signatures(Pipeline.distinctContents(committedExtracted), ccCfg), "st1_signatures")
     val (cands, _) = io.commit(Pipeline.candidatePairs(sigs, ccCfg).pairs, "st2_candidates")
-    val (verified, _) = io.commit(Pipeline.verifyPairs(cands, contents, ccCfg), "st3_verified")
+    val (verified, _) = io.commit(
+      Pipeline.verifyPairs(cands, Pipeline.distinctContents(committedExtracted), ccCfg), "st3_verified")
     val edges = verified.where(col("passed")).select("id_a", "id_b")
     // maxIter exhaustion now THROWS (silent partial labels would split
     // clusters) — but the iteration it ran is already durably committed,
