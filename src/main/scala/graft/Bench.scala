@@ -40,20 +40,6 @@ object Bench {
   private def session(cpus: Int): SparkSession =
     graft.util.LocalSession(cpus, s"graft-bench-$cpus")
 
-  /** Stage-cache policy for the timed pipeline runs: which stages are
-    * lazily checkpointed (SelectiveCacheIO). "*" = all (the default IO). */
-  private def benchIO: graft.checkpoint.TableIO = {
-    val cached = sys.env.getOrElse("SPARK_GRAFT_BENCH_CACHE", "*")
-      .split(",").map(_.trim).filter(_.nonEmpty).toSet
-    // Serialized+compressed stage caches by default: measured -7% wall at
-    // local[32] (bandwidth-bound) and neutral at local[8] (BASELINE.md).
-    val level = sys.env.get("SPARK_GRAFT_CACHE_LEVEL")
-      .orElse(Some("MEMORY_AND_DISK_SER"))
-      .filter(_ != "DEFAULT")
-      .map(org.apache.spark.storage.StorageLevel.fromString)
-    new graft.checkpoint.SelectiveCacheIO(cached, level)
-  }
-
   /** One timed full-pipeline run over nUnits synthetic pages in a fresh
     * session. A warm-up run absorbs class-load and codegen cost. */
   private def pipelineRunOnce(spark: SparkSession, nUnits: Long): (Long, Double) = {
@@ -63,13 +49,12 @@ object Bench {
     // compute-representative at both levels (A/Bs in BASELINE.md).
     val tokensScale = sys.env.getOrElse("SPARK_GRAFT_TOKENS_SCALE", "6").toInt
     val spec = PagesGen.Spec(nUnits = nUnits, tokensScale = tokensScale)
-    val io = benchIO
-    Pipeline.run(spark, PagesGen.pages(spark, spec.copy(nUnits = 60)), SparkEntry.cfg, io)
+    Pipeline.run(spark, PagesGen.pages(spark, spec.copy(nUnits = 60)), SparkEntry.cfg)
       .report.count() // warm-up
     val pages = PagesGen.pages(spark, spec)
     val docs = pages.count()
     val t0 = System.nanoTime()
-    Pipeline.run(spark, pages, SparkEntry.cfg, io).report.count()
+    Pipeline.run(spark, pages, SparkEntry.cfg).report.count()
     (docs, (System.nanoTime() - t0) / 1e9)
   }
 

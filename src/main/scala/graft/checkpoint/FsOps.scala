@@ -1,6 +1,7 @@
 package graft.checkpoint
 
 import java.nio.charset.StandardCharsets
+import java.util.UUID
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path, UnsupportedFileSystemException}
@@ -10,9 +11,10 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 /** One parquet data file of a committed snapshot (see [[FsOps.parquetFiles]]). */
 private[graft] final case class ParquetFile(rows: Long, bytes: Long)
 
-/** Hadoop-FileSystem primitives shared by the durable stores
-  * (ParquetSnapshotIO, ConnectedComponents' per-iteration label store), so
-  * a checkpoint root can live on ANY Hadoop filesystem — `file://` in the
+/** Hadoop-FileSystem primitives shared by every durable store
+  * (ParquetSnapshotIO, ConnectedComponents' per-iteration label store,
+  * IncrementalDedup's state root), so a checkpoint or state root can live
+  * on ANY Hadoop filesystem — `file://` in the
   * sandbox, `hdfs://` / `abfs://` on a cluster. The previous java.nio
   * implementation silently collapsed `hdfs://nn/ck` to a RELATIVE local
   * path on the driver while the executors' parquet writes resolved the
@@ -21,10 +23,16 @@ private[graft] final case class ParquetFile(rows: Long, bytes: Long)
   * scheme-less root now means "the default filesystem" on BOTH sides,
   * which is exactly the shared-FS semantics a cluster needs.
   *
-  * Atomicity: the manifest swing uses `FileContext.rename(OVERWRITE)`,
-  * atomic on rename-native filesystems (local POSIX, HDFS, ABFS). Object
-  * stores without atomic rename (plain S3) are NOT a safe manifest
-  * target — point the checkpoint root at HDFS-class storage there.
+  * Every store commits through the same two decisions made here: small
+  * records (manifests, version files, journals) in one flat JSON format,
+  * written by [[writeRecord]] and read by [[readRecord]]; and whole-table
+  * replacement by [[swapDir]], healed by [[recoverSwap]].
+  *
+  * Atomicity: the record swing uses `FileContext.rename(OVERWRITE)` and
+  * [[swapDir]] uses `FileSystem.rename`, both atomic on rename-native
+  * filesystems (local POSIX, HDFS, ABFS). Object stores without atomic
+  * rename (plain S3) are NOT a safe commit target — point the checkpoint
+  * or state root at HDFS-class storage there.
   */
 private[graft] object FsOps {
 
@@ -85,17 +93,93 @@ private[graft] object FsOps {
     }
   }
 
-  /** GC crash-stranded writeAtomic leftovers: sibling FILES named
-    * `<dst>.tmp-*` (a process killed between create and rename leaves
-    * exactly one). Best-effort; call before writing the next tmp. */
+  /** GC crash-stranded leftovers of a commit to `dst`: siblings named
+    * `<dst>.tmp-*` — a [[writeRecord]] tmp file, or a table write dir that
+    * never reached [[swapDir]] (a process killed mid-commit leaves one).
+    * Best-effort; call before writing the next tmp. */
   def sweepTmp(conf: Configuration, dst: Path): Unit = {
     val parent = dst.getParent
     if (parent != null && exists(conf, parent))
       try fs(conf, parent).listStatus(parent)
-        .filter(s => s.isFile && s.getPath.getName.startsWith(dst.getName + ".tmp-"))
-        .foreach(s => fs(conf, parent).delete(s.getPath, false))
+        .filter(_.getPath.getName.startsWith(dst.getName + ".tmp-"))
+        .foreach(s => fs(conf, parent).delete(s.getPath, true))
       catch { case _: Exception => () }
   }
+
+  private val Field = """"(\w+)"\s*:\s*(?:"([^"]*)"|(-?\d+))""".r
+
+  /** The one small-record format: a flat JSON object whose values are
+    * strings or integers, `{"k": "v", "n": 3}`. Parsing yields every value
+    * as its string form; unknown keys are kept, absent keys are absent. */
+  def parseRecord(s: String): Map[String, String] =
+    Field.findAllMatchIn(s).map(m => m.group(1) -> Option(m.group(2)).getOrElse(m.group(3))).toMap
+
+  /** Render fields in order: a `String` value is quoted, anything else
+    * (Int, Long) is written bare. */
+  def renderRecord(fields: Seq[(String, Any)]): String =
+    fields.map {
+      case (k, v: String) =>
+        require(!v.contains('"'), s"record value for $k may not contain a quote: $v")
+        s""""$k": "$v""""
+      case (k, v) => s""""$k": $v"""
+    }.mkString("{", ", ", "}")
+
+  /** The record at `p`, or None if there is none. */
+  def readRecord(conf: Configuration, p: Path): Option[Map[String, String]] =
+    if (!exists(conf, p)) None else Some(parseRecord(readString(conf, p)))
+
+  /** Commit a record: sweep stranded tmps, write `<p>.tmp-<uuid>`, rename
+    * it over `p` ([[writeAtomic]]). */
+  def writeRecord(conf: Configuration, p: Path, fields: Seq[(String, Any)]): Unit = {
+    sweepTmp(conf, p)
+    writeAtomic(conf, new Path(p.getParent, s"${p.getName}.tmp-${UUID.randomUUID()}"), p,
+      renderRecord(fields))
+  }
+
+  private def aside(target: Path) = new Path(target.getParent, target.getName + ".old")
+
+  /** Hadoop's rename reports failure by returning false, and onto an
+    * existing directory it moves `src` INSIDE it; both must fail loudly. */
+  private def moveTo(f: FileSystem, src: Path, dst: Path): Unit =
+    if (f.exists(dst) || !f.rename(src, dst))
+      throw new java.io.IOException(s"rename $src -> $dst failed")
+
+  /** Crash-safe directory replacement of `target` by the fully-written
+    * `tmp`: the current table is renamed ASIDE (one rename), the new one
+    * moved in (one rename), and only then is the aside copy deleted — at
+    * every instant either the old or the new table is recoverable, unlike
+    * delete-then-move which leaves a window with no table at all.
+    * [[recoverSwap]] heals the one bad window (a crash between the two
+    * renames) by restoring the aside copy. */
+  def swapDir(conf: Configuration, tmp: Path, target: Path): Unit = {
+    val f = fs(conf, target)
+    val old = aside(target)
+    deleteRecursive(conf, old) // stale aside from a crash after a completed swap
+    if (f.exists(target)) moveTo(f, target, old)
+    try moveTo(f, tmp, target)
+    catch { case e: Throwable => // restore the old table before propagating
+      if (!f.exists(target) && f.exists(old)) moveTo(f, old, target)
+      throw e
+    }
+    deleteRecursive(conf, old)
+  }
+
+  /** Heal an interrupted [[swapDir]]: if the target vanished mid-swap the
+    * aside copy is moved back; a surviving aside next to an intact target
+    * (crash after the second rename) is dropped. Abandoned `<target>.tmp-*`
+    * write dirs are swept so crashes don't leak space. */
+  def recoverSwap(conf: Configuration, target: Path): Unit = {
+    val f = fs(conf, target)
+    val old = aside(target)
+    if (!f.exists(target) && f.exists(old)) moveTo(f, old, target)
+    else deleteRecursive(conf, old)
+    sweepTmp(conf, target)
+  }
+
+  /** Regular files directly under `p` (0 if `p` is absent). Checksum
+    * siblings that a `ChecksumFileSystem` keeps are hidden by its listing. */
+  def fileCount(conf: Configuration, p: Path): Int =
+    if (!exists(conf, p)) 0 else fs(conf, p).listStatus(p).count(_.isFile)
 
   /** Immediate subdirectories of `p` (empty if `p` is absent). */
   def listDirs(conf: Configuration, p: Path): Seq[Path] =

@@ -70,9 +70,10 @@ object TableIO {
   }
 }
 
-/** The commit record of one stage snapshot. `bytes` is the snapshot's
-  * data-file bytes (0 where unknown: in-memory IO, Iceberg, and manifests
-  * written before the field existed). */
+/** The commit record of one stage snapshot, stored in the [[FsOps]]
+  * record format. `bytes` is the snapshot's data-file bytes (0 where
+  * unknown: in-memory IO, Iceberg, and manifests written before the field
+  * existed). */
 final case class Manifest(
     snapshotId: String,
     configHash: String,
@@ -80,23 +81,20 @@ final case class Manifest(
     stage: String,
     bytes: Long = 0L
 ) {
-  def toJson: String =
-    s"""{"snapshot_id": "$snapshotId", "config_hash": "$configHash", "row_count": $rowCount, "committed_at_stage": "$stage", "bytes": $bytes}"""
+  def fields: Seq[(String, Any)] = Seq("snapshot_id" -> snapshotId, "config_hash" -> configHash,
+    "row_count" -> rowCount, "committed_at_stage" -> stage, "bytes" -> bytes)
+  def toJson: String = FsOps.renderRecord(fields)
 }
 
 object Manifest {
-  private val Field = """"(\w+)"\s*:\s*(?:"([^"]*)"|(\d+))""".r
-  def fromJson(s: String): Option[Manifest] = {
-    val kv = Field.findAllMatchIn(s).map { m =>
-      m.group(1) -> Option(m.group(2)).getOrElse(m.group(3))
-    }.toMap
+  def fromJson(s: String): Option[Manifest] = fromRecord(FsOps.parseRecord(s))
+  def fromRecord(kv: Map[String, String]): Option[Manifest] =
     for {
       sid <- kv.get("snapshot_id")
       ch <- kv.get("config_hash")
       rc <- kv.get("row_count")
       st <- kv.get("committed_at_stage")
     } yield Manifest(sid, ch, rc.toLong, st, kv.get("bytes").map(_.toLong).getOrElse(0L))
-  }
 }
 
 /** Directory-per-stage Parquet snapshots under `root`, keyed by configHash.
@@ -145,9 +143,7 @@ final class ParquetSnapshotIO(root: String, configHash: String) extends TableIO 
 
   override def load(spark: SparkSession, stage: String): Option[(DataFrame, Manifest)] = {
     val conf = hconf(spark)
-    val mp = manifestPath(stage)
-    if (!FsOps.exists(conf, mp)) return None
-    Manifest.fromJson(FsOps.readString(conf, mp))
+    FsOps.readRecord(conf, manifestPath(stage)).flatMap(Manifest.fromRecord)
       .filter(_.configHash == configHash) // stale-config snapshots are ignored
       .flatMap { m =>
         val data = new Path(stageDir(stage), m.snapshotId)
@@ -160,9 +156,7 @@ final class ParquetSnapshotIO(root: String, configHash: String) extends TableIO 
     * manifest — snapshot ids are unique per commit, see commit()). */
   def metrics(spark: SparkSession, stage: String): Option[DataFrame] = {
     val conf = hconf(spark)
-    val mp = manifestPath(stage)
-    if (!FsOps.exists(conf, mp)) return None
-    Manifest.fromJson(FsOps.readString(conf, mp))
+    FsOps.readRecord(conf, manifestPath(stage)).flatMap(Manifest.fromRecord)
       .map(m => new Path(stageDir(stage), s"${m.snapshotId}_metrics"))
       .filter(FsOps.exists(conf, _))
       .map(p => spark.read.parquet(p.toString))
@@ -194,9 +188,7 @@ final class ParquetSnapshotIO(root: String, configHash: String) extends TableIO 
     }).write.mode("overwrite").parquet(new Path(dir, s"${snapshotId}_metrics").toString)
 
     val m = Manifest(snapshotId, configHash, files.map(_.rows).sum, stage, files.map(_.bytes).sum)
-    FsOps.sweepTmp(conf, manifestPath(stage)) // kill-stranded tmp manifests
-    val tmp = new Path(dir, s"_manifest.json.tmp-${java.util.UUID.randomUUID()}")
-    FsOps.writeAtomic(conf, tmp, manifestPath(stage), m.toJson)
+    FsOps.writeRecord(conf, manifestPath(stage), m.fields) // the commit point
     // GC every snapshot dir the manifest no longer references — superseded
     // commits AND stale-config leftovers (previously stranded forever; the
     // same single-writer-per-checkpoint-root assumption the st4_cc sweep
@@ -213,34 +205,13 @@ final class ParquetSnapshotIO(root: String, configHash: String) extends TableIO 
   }
 }
 
-/** In-memory IO: nothing is durable, but stages in `cached` are lazily
-  * local-checkpointed so downstream stages that branch from them (e.g. ST1
+/** In-memory IO: nothing is durable, but every stage is lazily
+  * local-checkpointed so downstream stages that branch from it (e.g. ST1
   * signatures and ST3 verify both read ST0) share one materialization
   * instead of recomputing the lineage per branch — the in-memory analog of
-  * the durable per-stage snapshot.
-  *
-  * Caching is selective because cache WRITES are not free: on a
-  * memory-bandwidth-bound host, re-materializing the full-text tables into
-  * block storage competes with the compute it is meant to save. Stages
-  * consumed exactly once per action, or only within one job (where
-  * Catalyst's exchange reuse already dedups the shuffle), can skip the
-  * cache entirely. */
-class SelectiveCacheIO(cached: Set[String],
-    storageLevel: Option[org.apache.spark.storage.StorageLevel] = None) extends TableIO {
+  * the durable per-stage snapshot. */
+object NoCheckpointIO extends TableIO {
   override def load(spark: SparkSession, stage: String): Option[(DataFrame, Manifest)] = None
-  override def commit(df: DataFrame, stage: String): (DataFrame, Manifest) = {
-    val out =
-      if (!(cached.contains("*") || cached.contains(stage))) df
-      else storageLevel match {
-        // serialized (+compressed via spark.rdd.compress) trades CPU for
-        // bytes through the block store — the right trade on a
-        // memory-bandwidth-bound host
-        case Some(lvl) => df.localCheckpoint(false, lvl)
-        case None      => df.localCheckpoint(false)
-      }
-    (out, Manifest("in-memory", "none", -1L, stage))
-  }
+  override def commit(df: DataFrame, stage: String): (DataFrame, Manifest) =
+    (df.localCheckpoint(false), Manifest("in-memory", "none", -1L, stage))
 }
-
-/** Default in-memory IO: every stage lazily checkpointed. */
-object NoCheckpointIO extends SelectiveCacheIO(Set("*"))

@@ -145,7 +145,8 @@ object ConnectedComponents {
   }
 
   /** Per-iteration durable label store: `<dir>/labels-iter<k>` parquet plus
-    * an atomically-renamed `_cc_manifest.json` recording (edgeHash, iter).
+    * a `_cc_manifest.json` record (`FsOps.writeRecord`: atomic rename)
+    * holding (edge_hash, iter).
     * The manifest only ever points at a fully-written snapshot; state under
     * a different edgeHash is ignored and overwritten. All filesystem ops go
     * through [[graft.checkpoint.FsOps]], so `dir` may live on any Hadoop
@@ -155,14 +156,10 @@ object ConnectedComponents {
     import graft.checkpoint.FsOps
     private val root = new Path(dir)
     private val manifest = new Path(root, "_cc_manifest.json")
-    private val Field = """"(\w+)"\s*:\s*(?:"([^"]*)"|(\d+))""".r
 
     def load(spark: SparkSession): Option[(DataFrame, Int)] = {
       val conf = spark.sparkContext.hadoopConfiguration
-      if (!FsOps.exists(conf, manifest)) return None
-      val kv = Field.findAllMatchIn(FsOps.readString(conf, manifest))
-        .map(m => m.group(1) -> Option(m.group(2)).getOrElse(m.group(3))).toMap
-      kv.get("edge_hash") match {
+      FsOps.readRecord(conf, manifest).flatMap(kv => kv.get("edge_hash") match {
         case Some(h) if h == edgeHash =>
           for {
             k <- kv.get("iter").map(_.toInt)
@@ -175,7 +172,7 @@ object ConnectedComponents {
           // fresh.
           FsOps.deleteRecursive(conf, root)
           None
-      }
+      })
     }
 
     def commit(labels: DataFrame, iter: Int): DataFrame = {
@@ -183,11 +180,7 @@ object ConnectedComponents {
       FsOps.mkdirs(conf, root)
       val p = new Path(root, s"labels-iter$iter")
       labels.write.mode("overwrite").parquet(p.toString)
-      FsOps.sweepTmp(conf, manifest) // kill-stranded tmp manifests
-      // tmp is named <manifest>.tmp-* — the exact prefix sweepTmp reclaims
-      val tmp = new Path(root, s"${manifest.getName}.tmp-${java.util.UUID.randomUUID()}")
-      FsOps.writeAtomic(conf, tmp, manifest,
-        s"""{"edge_hash": "$edgeHash", "iter": $iter}""")
+      FsOps.writeRecord(conf, manifest, Seq("edge_hash" -> edgeHash, "iter" -> iter))
       // GC: once the manifest points at iter k, every OTHER labels-iter*
       // dir is unreachable by any resume — sweep them all (not just k-1:
       // a crash between a past manifest rename and its GC would otherwise

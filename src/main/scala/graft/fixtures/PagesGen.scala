@@ -35,8 +35,8 @@ object PagesGen {
     * compute density without changing planted-truth semantics; tests use 1).
     * unitOffset shifts the generated unit-id range to [unitOffset,
     * unitOffset + nUnits): units are independent, so an offset range is a
-    * DISJOINT corpus (new urls, new content) — how IncrementalProbe builds
-    * a stream of genuinely fresh batches. */
+    * DISJOINT corpus (new urls, new content) — how a stream of genuinely
+    * fresh batches is built. */
   final case class Spec(nUnits: Long, seed: Long = 42L, tokensScale: Int = 1,
       unitOffset: Long = 0L)
 

@@ -1,12 +1,12 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
-
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.Pipeline
+import graft.checkpoint.FsOps
 import graft.model.GraftConfig
 
 /** Incremental near-dup detection over a stream of pages (Structured
@@ -49,6 +49,11 @@ import graft.model.GraftConfig
   * periodically compacted (dup edges merged, member history reduced to
   * latest-per-url, dead nodes GC'd), so a years-long stream holds state
   * proportional to the LIVE corpus, not to its history.
+  *
+  * The state root may be any Hadoop filesystem URI: every existence check,
+  * version/journal record and table swap goes through [[FsOps]] on the
+  * session's Hadoop configuration, the same filesystem the parquet writes
+  * resolve against.
   */
 object IncrementalDedup {
 
@@ -65,6 +70,9 @@ object IncrementalDedup {
     val metrics = s"$root/metrics"
     val checkpoint = s"$root/_checkpoint"
     val versionFile = s"$root/_state_version.json"
+    val remapJournal = s"$root/_remap_journal.json"
+    /** Every table a batch, migration, compaction or remap may replace. */
+    def tables: Seq[String] = Seq(signatures, bandIndex, members, texts, edges, clusters, metrics)
   }
 
   /** Current state-schema version. History:
@@ -81,27 +89,16 @@ object IncrementalDedup {
     * reinterpreted by old code). */
   final val StateVersion = 3
 
-  private def exists(p: String): Boolean = Files.exists(Paths.get(p))
+  private def hconf(spark: SparkSession) = spark.sparkContext.hadoopConfiguration
 
-  private val VersionField = """"version"\s*:\s*(\d+)""".r
+  private def exists(spark: SparkSession, p: String): Boolean =
+    FsOps.exists(hconf(spark), new Path(p))
 
-  private def readVersion(dirs: StateDirs): Option[Int] =
-    if (!exists(dirs.versionFile)) None
-    else VersionField.findFirstMatchIn(
-      new String(Files.readAllBytes(Paths.get(dirs.versionFile)),
-        java.nio.charset.StandardCharsets.UTF_8)).map(_.group(1).toInt)
-
-  private def writeVersion(dirs: StateDirs, bandChunks: Int, sigConfig: String): Unit = {
-    Files.createDirectories(Paths.get(dirs.root))
-    val tmp = Paths.get(dirs.root, s".ver-tmp-${java.util.UUID.randomUUID()}")
-    Files.write(tmp,
-      (s"""{"version": $StateVersion, "simhash_tier": ${if (bandChunks > 0) 1 else 0}, """ +
-        s""""band_chunks": $bandChunks, "sig_config": "$sigConfig"}""").getBytes(
-        java.nio.charset.StandardCharsets.UTF_8))
-    Files.move(tmp, Paths.get(dirs.versionFile),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
+  private def writeVersion(spark: SparkSession, cfg: GraftConfig, dirs: StateDirs,
+      bandChunks: Int): Unit =
+    FsOps.writeRecord(hconf(spark), new Path(dirs.versionFile), Seq(
+      "version" -> StateVersion, "simhash_tier" -> (if (bandChunks > 0) 1 else 0),
+      "band_chunks" -> bandChunks, "sig_config" -> sigConfigOf(cfg)))
 
   private def tierEnabled(cfg: GraftConfig): Boolean =
     cfg.simhashTier && cfg.maxHamming >= 0
@@ -126,28 +123,14 @@ object IncrementalDedup {
   private[streaming] def sigConfigOf(cfg: GraftConfig): String =
     s"k${cfg.shingleK}|p${cfg.numPerm}|b${cfg.bands}|s${cfg.seed}"
 
-  private val TierField = """"simhash_tier"\s*:\s*(\d)""".r
-  private val BandChunksField = """"band_chunks"\s*:\s*(-?\d+)""".r
-  private val SigConfigField = """"sig_config"\s*:\s*"([^"]*)"""".r
-
-  private def readVersionFile(dirs: StateDirs): Option[String] =
-    if (!exists(dirs.versionFile)) None
-    else Some(new String(Files.readAllBytes(Paths.get(dirs.versionFile)),
-      java.nio.charset.StandardCharsets.UTF_8))
-
   /** Which chunk-key families the durable band index holds, as recorded in
-    * the version file. Legacy files (pre-field) recorded only the boolean
+    * the version record. Legacy records (pre-field) hold only the boolean
     * tier: true maps to -1 ("chunk keys of an UNKNOWN maxHamming" — never
     * equal to any want, forcing one rebuild that stamps the real count),
-    * false to 0. Absent file (pre-knob state) means MinHash-only. */
-  private def readBandChunks(dirs: StateDirs): Option[Int] =
-    readVersionFile(dirs).flatMap { txt =>
-      BandChunksField.findFirstMatchIn(txt).map(_.group(1).toInt)
-        .orElse(TierField.findFirstMatchIn(txt).map(m => if (m.group(1) == "1") -1 else 0))
-    }
-
-  private def readSigConfig(dirs: StateDirs): Option[String] =
-    readVersionFile(dirs).flatMap(SigConfigField.findFirstMatchIn(_).map(_.group(1)))
+    * false to 0. Absent record (pre-knob state) means MinHash-only. */
+  private[graft] def bandChunksOf(version: Map[String, String]): Option[Int] =
+    version.get("band_chunks").map(_.toInt)
+      .orElse(version.get("simhash_tier").map(t => if (t == "1") -1 else 0))
 
   /** The durable band index holds the key families of whichever tiers were
     * enabled when its rows were appended, so a `simhashTier` toggle — or a
@@ -158,39 +141,33 @@ object IncrementalDedup {
     * would strand chunk keys forever). The rebuild is a deterministic
     * projection of the signature state (band_hashes and simhash are both
     * retained per node) — no text is recomputed — via the same crash-safe
-    * swap as every state rewrite. */
-  private def ensureBandIndex(spark: SparkSession, cfg: GraftConfig, dirs: StateDirs): Unit = {
+    * swap as every state rewrite. `have` is the recorded chunk count;
+    * `stamped` says the record already carries every field. */
+  private def ensureBandIndex(spark: SparkSession, cfg: GraftConfig, dirs: StateDirs,
+      have: Option[Int], stamped: Boolean): Unit = {
     val want = wantBandChunks(cfg)
-    val have = readBandChunks(dirs).getOrElse(0)
-    if (have != want) {
-      if (exists(dirs.signatures)) {
-        val tmp = s"${dirs.bandIndex}.tmp-${java.util.UUID.randomUUID()}"
-        Pipeline.bandKeys(spark.read.parquet(dirs.signatures), cfg).write.parquet(tmp)
-        swapDir(tmp, dirs.bandIndex)
-      }
-      writeVersion(dirs, want, sigConfigOf(cfg))
-    } else if (readBandChunks(dirs).isEmpty || readSigConfig(dirs).isEmpty)
-      writeVersion(dirs, want, sigConfigOf(cfg)) // stamp missing fields
+    if (have.getOrElse(0) != want) {
+      if (exists(spark, dirs.signatures))
+        replaceTable(Pipeline.bandKeys(spark.read.parquet(dirs.signatures), cfg), dirs.bandIndex)
+      writeVersion(spark, cfg, dirs, want)
+    } else if (!stamped) writeVersion(spark, cfg, dirs, want) // stamp missing fields
   }
 
-  /** Version gate + in-place migration, run once per batch (cheap: a file
-    * read once current). v1 members gain warc_ts = epoch, batch_id = -1 —
-    * strictly older than any live batch, so any future re-crawl of a v1 url
-    * supersedes its binding; v<=2 clusters are rebuilt from ground truth
-    * (members + edges) into the v3 resolved-binding shape. A version from
-    * the future is refused. */
+  /** Version gate + in-place migration, run once per batch (cheap: one
+    * record read once current). v1 members gain warc_ts = epoch,
+    * batch_id = -1 — strictly older than any live batch, so any future
+    * re-crawl of a v1 url supersedes its binding; v<=2 clusters are
+    * rebuilt from ground truth (members + edges) into the v3
+    * resolved-binding shape. A version from the future is refused. */
   private[streaming] def ensureStateVersion(spark: SparkSession, cfg: GraftConfig, dirs: StateDirs): Unit = {
     // Heal interrupted swaps first: every swapped table must be present (or
     // restored from its aside copy) before any state is read this batch.
-    // Every dir that swapDir ever targets (cluster writes, migration,
-    // compaction) is covered.
-    Seq(dirs.clusters, dirs.members, dirs.signatures, dirs.bandIndex, dirs.edges,
-      dirs.metrics, dirs.texts)
-      .foreach(recoverSwap)
+    val conf = hconf(spark)
+    dirs.tables.foreach(t => FsOps.recoverSwap(conf, new Path(t)))
     // An interrupted remap leaves tables keyed inconsistently: processing
     // batches against that state would bind new content to stale ids.
     // Refuse until the remap is re-run to completion.
-    if (Files.exists(Paths.get(dirs.root, "_remap_journal.json")))
+    if (exists(spark, dirs.remapJournal))
       throw new IllegalStateException(
         s"incremental state at ${dirs.root} has an in-progress node-id remap " +
           "(_remap_journal.json) - re-run remapNodeIds with the same mapping to completion first")
@@ -201,7 +178,8 @@ object IncrementalDedup {
     // near-duplicate goes undetected with no error. A stamp from an older
     // library version is absent: trust-on-first-use (stamped below), same
     // as the pre-knob tier field.
-    readSigConfig(dirs).foreach { stored =>
+    val version = FsOps.readRecord(conf, new Path(dirs.versionFile)).getOrElse(Map.empty)
+    version.get("sig_config").foreach { stored =>
       val cur = sigConfigOf(cfg)
       if (stored != cur)
         throw new IllegalStateException(
@@ -211,15 +189,16 @@ object IncrementalDedup {
             "Revert the config, point at a fresh state root, or rebuild state from " +
             "the original pages")
     }
-    readVersion(dirs) match {
+    version.get("version").map(_.toInt) match {
       case Some(StateVersion) => // current; key-family toggle still possible
-        ensureBandIndex(spark, cfg, dirs)
+        val have = bandChunksOf(version)
+        ensureBandIndex(spark, cfg, dirs, have, have.isDefined && version.contains("sig_config"))
       case Some(v) if v > StateVersion =>
         throw new IllegalStateException(
           s"incremental state at ${dirs.root} has schema version $v, newer than " +
           s"supported $StateVersion — refusing to reinterpret (upgrade the library)")
       case _ => // absent or older: migrate what exists, then stamp
-        if (exists(dirs.members)) {
+        if (exists(spark, dirs.members)) {
           val m = spark.read.parquet(dirs.members)
           if (!m.columns.contains("batch_id")) {
             // Migrate via temp-dir + crash-safe swap: an in-place overwrite
@@ -228,24 +207,21 @@ object IncrementalDedup {
             // unrecoverable. The swap keeps old-or-new present throughout;
             // re-running the migration after any crash is idempotent (the
             // batch_id column guard above).
-            val tmp = s"${dirs.members}.tmp-${java.util.UUID.randomUUID()}"
-            m.withColumn("warc_ts", lit(new java.sql.Timestamp(0L)))
+            replaceTable(m.withColumn("warc_ts", lit(new java.sql.Timestamp(0L)))
               .withColumn("batch_id", lit(-1L))
-              .select("url", "node_id", "n_bytes", "warc_ts", "batch_id")
-              .write.parquet(tmp)
-            swapDir(tmp, dirs.members)
+              .select("url", "node_id", "n_bytes", "warc_ts", "batch_id"), dirs.members)
           }
           rebuildClusters(spark, cfg, dirs) // v<=2 clusters -> v3 shape
           // pre-knob states hold a MinHash-only band index: stamp that,
           // then let the toggle path rebuild if this config wants more
-          writeVersion(dirs, 0, sigConfigOf(cfg))
-          ensureBandIndex(spark, cfg, dirs)
-        } else writeVersion(dirs, wantBandChunks(cfg), sigConfigOf(cfg)) // fresh state
+          writeVersion(spark, cfg, dirs, 0)
+          ensureBandIndex(spark, cfg, dirs, Some(0), stamped = true)
+        } else writeVersion(spark, cfg, dirs, wantBandChunks(cfg)) // fresh state
     }
   }
 
   private def readOrEmpty(spark: SparkSession, path: String, schemaOf: DataFrame): DataFrame =
-    if (exists(path)) spark.read.parquet(path)
+    if (exists(spark, path)) spark.read.parquet(path)
     else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schemaOf.schema)
 
   /** Process one micro-batch of pages against the state under `dirs`.
@@ -299,7 +275,7 @@ object IncrementalDedup {
         col("m.n_bytes").as("n_bytes"), col("m.warc_ts").as("warc_ts"))
       .withColumn("batch_id", lit(batchId))
     val prevC: DataFrame =
-      if (exists(dirs.clusters)) spark.read.parquet(dirs.clusters).localCheckpoint(false)
+      if (exists(spark, dirs.clusters)) spark.read.parquet(dirs.clusters).localCheckpoint(false)
       else null
     val currentBindings =
       if (prevC != null) prevC.select("url", "node_id")
@@ -311,7 +287,7 @@ object IncrementalDedup {
 
     // ---- new contents = not yet in the signature state
     val contents =
-      if (!exists(dirs.signatures)) newContents.localCheckpoint(false)
+      if (!exists(spark, dirs.signatures)) newContents.localCheckpoint(false)
       else newContents.join(
         spark.read.parquet(dirs.signatures).select("node_id"),
         Seq("node_id"), "left_anti").localCheckpoint(false)
@@ -396,7 +372,7 @@ object IncrementalDedup {
     // signature traffic is O(est candidates), not O(live corpus).
     val estIds = estCrossPairs.select(col("id_a").as("node_id"))
       .union(estCrossPairs.select(col("id_b").as("node_id"))).distinct()
-    val allSigs = (if (exists(dirs.signatures))
+    val allSigs = (if (exists(spark, dirs.signatures))
       spark.read.parquet(dirs.signatures).unionByName(sigs) else sigs)
       .select("node_id", "minhash", "simhash")
       .join(estIds, Seq("node_id"), "left_semi")
@@ -545,7 +521,7 @@ object IncrementalDedup {
 
     val untouched = prevC.join(affClusters, Seq("cluster_id"), "left_anti")
       .select("url", "node_id", "cluster_id", "n_bytes", "warc_ts", "batch_id")
-    writeClustersAtomic(untouched.unionByName(newAff), dirs)
+    replaceTable(untouched.unionByName(newAff), dirs.clusters)
     appendParquet(metricsRow, dirs.metrics) // after the swap, see above
     compactStateIfNeeded(spark, cfg, dirs)
   }
@@ -623,7 +599,7 @@ object IncrementalDedup {
     * batch, v<3 migration, and cluster-state recovery; per-batch processing
     * uses the bounded affected-component path instead. */
   private[streaming] def rebuildClusters(spark: SparkSession, cfg: GraftConfig, dirs: StateDirs): Unit = {
-    if (!exists(dirs.members)) return
+    if (!exists(spark, dirs.members)) return
     val resolved = spark.read.parquet(dirs.members)
       .groupBy("url")
       .agg(max(struct(col("batch_id"), col("warc_ts"), col("node_id"), col("n_bytes"))).as("m"))
@@ -632,7 +608,7 @@ object IncrementalDedup {
       .localCheckpoint(false)
     val liveA = resolved.select(col("node_id").as("id_a")).distinct()
     val liveEdges =
-      (if (exists(dirs.edges)) spark.read.parquet(dirs.edges).distinct()
+      (if (exists(spark, dirs.edges)) spark.read.parquet(dirs.edges).distinct()
        else spark.emptyDataFrame.select(lit(0L).as("id_a"), lit(0L).as("id_b")).limit(0))
         .join(liveA, Seq("id_a"), "left_semi")
         .join(liveA.select(col("id_a").as("id_b")), Seq("id_b"), "left_semi")
@@ -642,7 +618,7 @@ object IncrementalDedup {
       .join(cc, resolved("node_id") === cc("id"), "left")
       .withColumn("cluster_id", coalesce(col("cluster_id"), col("node_id")))
       .select("url", "node_id", "cluster_id", "n_bytes", "warc_ts", "batch_id")
-    writeClustersAtomic(clusters, dirs)
+    replaceTable(clusters, dirs.clusters)
   }
 
   /** Identity-key remap of stored state — the graft analog of the
@@ -659,25 +635,23 @@ object IncrementalDedup {
     * not 1-to-1, or whose new ids collide with unmapped stored ids, would
     * silently merge or split content identities and is rejected before any
     * write. Each table rewrite is crash-safe (temp dir + rename-aside
-    * swap, healed by `recoverSwap` on the next batch).
+    * swap, healed by `FsOps.recoverSwap` on the next batch).
     *
     * Cluster labels are component-min node ids, so they are recomputed per
     * (unchanged) membership group after the remap — a pure groupBy-min,
     * no connected-components rerun. */
   def remapNodeIds(spark: SparkSession, dirs: StateDirs, mapping: DataFrame,
       crashAfterTables: Int = Int.MaxValue): Unit = {
-    Seq(dirs.clusters, dirs.members, dirs.signatures, dirs.bandIndex, dirs.edges,
-      dirs.texts)
-      .foreach(recoverSwap)
+    val conf = hconf(spark)
+    dirs.tables.foreach(t => FsOps.recoverSwap(conf, new Path(t)))
     // Version gate BEFORE any journal write: the clusters rewrite below
     // selects v3 columns (warc_ts, batch_id), so a remap over pre-v3 state
     // would fail AFTER journaling and rewriting five tables — and the
     // leftover journal blocks ensureStateVersion (hence the migration that
     // would fix it) from ever running: a wedged state. Refuse up front.
-    val stateExists = Seq(dirs.clusters, dirs.members, dirs.signatures,
-      dirs.bandIndex, dirs.edges, dirs.texts).exists(exists)
-    if (stateExists) {
-      val v = readVersion(dirs)
+    if (dirs.tables.exists(exists(spark, _))) {
+      val v = FsOps.readRecord(conf, new Path(dirs.versionFile))
+        .flatMap(_.get("version")).map(_.toInt)
       require(v.contains(StateVersion),
         s"incremental state at ${dirs.root} is schema v${v.getOrElse(1)}, not v$StateVersion " +
           "- run any processBatch (ensureStateVersion) to migrate BEFORE remapping node ids")
@@ -699,25 +673,17 @@ object IncrementalDedup {
     // first, so it is refused, never silently mixed.
     val mapHashRow = m.agg(bit_xor(xxhash64(col("old_id"), col("new_id"))), count(lit(1))).head()
     val mapHash = f"${mapHashRow.getLong(0)}%016x-${mapHashRow.getLong(1)}"
-    val journalPath = Paths.get(dirs.root, "_remap_journal.json")
-    val JField = """"(\w+)"\s*:\s*"([^"]*)"""".r
-    val done: Set[String] =
-      if (!Files.exists(journalPath)) Set.empty
-      else {
-        val kv = JField.findAllMatchIn(new String(Files.readAllBytes(journalPath),
-          java.nio.charset.StandardCharsets.UTF_8)).map(x => x.group(1) -> x.group(2)).toMap
+    val journal = new Path(dirs.remapJournal)
+    val done: Set[String] = FsOps.readRecord(conf, journal) match {
+      case None => Set.empty
+      case Some(kv) =>
         require(kv.get("mapping_hash").contains(mapHash),
           s"an interrupted remap under a different mapping (${kv.getOrElse("mapping_hash", "?")}) " +
             "left partial state - re-run THAT remap to completion before starting a new one")
         kv.get("done").map(_.split(",").filter(_.nonEmpty).toSet).getOrElse(Set.empty)
-      }
-    def writeJournal(doneNow: Set[String]): Unit = {
-      val tmp = Paths.get(dirs.root, s".remap-tmp-${java.util.UUID.randomUUID()}")
-      Files.write(tmp, s"""{"mapping_hash": "$mapHash", "done": "${doneNow.mkString(",")}"}"""
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      Files.move(tmp, journalPath, java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     }
+    def writeJournal(doneNow: Set[String]): Unit =
+      FsOps.writeRecord(conf, journal, Seq("mapping_hash" -> mapHash, "done" -> doneNow.mkString(",")))
 
     // a new id colliding with a stored id the mapping does NOT touch would
     // merge two distinct contents under one key (checked over the tables
@@ -729,10 +695,10 @@ object IncrementalDedup {
     val nodeIdTables =
       Seq("signatures" -> dirs.signatures, "members" -> dirs.members, "clusters" -> dirs.clusters,
         "band_index" -> dirs.bandIndex, "texts" -> dirs.texts)
-        .filter { case (name, p) => !done.contains(name) && exists(p) }
+        .filter { case (name, p) => !done.contains(name) && exists(spark, p) }
         .map { case (_, p) => spark.read.parquet(p).select(col("node_id").as("id")) }
     val edgeIdTables =
-      if (done.contains("edges") || !exists(dirs.edges)) Nil
+      if (done.contains("edges") || !exists(spark, dirs.edges)) Nil
       else {
         val e = spark.read.parquet(dirs.edges)
         Seq(e.select(col("id_a").as("id")), e.select(col("id_b").as("id")))
@@ -761,11 +727,7 @@ object IncrementalDedup {
         if (rewrites >= crashAfterTables) // test hook: simulate dying midway
           throw new RuntimeException(s"injected crash before rewriting $name")
         rewrites += 1
-        if (exists(path)) {
-          val tmp = s"$path.tmp-${java.util.UUID.randomUUID()}"
-          f(spark.read.parquet(path)).write.parquet(tmp)
-          swapDir(tmp, path)
-        }
+        if (exists(spark, path)) replaceTable(f(spark.read.parquet(path)), path)
         doneNow += name
         writeJournal(doneNow)
       }
@@ -787,7 +749,9 @@ object IncrementalDedup {
         .select(col("url"), col("node_id"), col("new_label").as("cluster_id"),
           col("n_bytes"), col("warc_ts"), col("batch_id"))
     }
-    Files.deleteIfExists(journalPath) // all tables consistent again
+    // all tables consistent again (a journal that resists deletion keeps
+    // batches refused until this same remap re-runs: every table is done)
+    FsOps.deleteRecursive(conf, journal)
   }
 
   /** Rewrite accumulated state compacted when any dir's file count exceeds
@@ -808,26 +772,16 @@ object IncrementalDedup {
   private[streaming] def compactStateIfNeeded(spark: SparkSession, cfg: GraftConfig,
       dirs: StateDirs): Boolean = {
     val threshold = cfg.incCompactFileThreshold
-    if (threshold <= 0 || !exists(dirs.clusters)) return false
-    def fileCount(p: String): Int =
-      if (!exists(p)) 0
-      else {
-        import scala.jdk.CollectionConverters._
-        val s = Files.list(Paths.get(p))
-        try s.iterator().asScala.count(Files.isRegularFile(_))
-        finally s.close()
-      }
+    if (threshold <= 0 || !exists(spark, dirs.clusters)) return false
     val dirsToWatch = Seq(dirs.members, dirs.edges, dirs.bandIndex, dirs.signatures,
       dirs.metrics, dirs.texts)
-    if (!dirsToWatch.exists(fileCount(_) > threshold)) return false
+    if (!dirsToWatch.exists(p => FsOps.fileCount(hconf(spark), new Path(p)) > threshold))
+      return false
 
     val live = spark.read.parquet(dirs.clusters)
       .select("node_id").distinct().localCheckpoint(true)
-    def rewrite(path: String)(f: DataFrame => DataFrame): Unit = if (exists(path)) {
-      val tmp = s"$path.tmp-${java.util.UUID.randomUUID()}"
-      f(spark.read.parquet(path)).write.parquet(tmp) // reads source, writes tmp
-      swapDir(tmp, path) // crash-safe: old-or-new present at every instant
-    }
+    def rewrite(path: String)(f: DataFrame => DataFrame): Unit =
+      if (exists(spark, path)) replaceTable(f(spark.read.parquet(path)), path)
     rewrite(dirs.members) { m =>
       m.groupBy("url")
         .agg(max(struct(col("batch_id"), col("warc_ts"), col("node_id"), col("n_bytes"))).as("m"))
@@ -853,70 +807,18 @@ object IncrementalDedup {
     true
   }
 
-  /** The clusters output derives from (and replaces) the previous clusters
-    * table, so the write goes to a fresh temp dir and swaps in after it
-    * completes — never an in-place overwrite of its own input. (Iceberg
-    * snapshot commit is the real-cluster equivalent.) */
-  private def writeClustersAtomic(df: DataFrame, dirs: StateDirs): Unit = {
-    val tmp = s"${dirs.clusters}.tmp-${java.util.UUID.randomUUID()}"
-    df.write.mode("overwrite").parquet(tmp)
-    swapDir(tmp, dirs.clusters)
-  }
-
-  // NIO streams are CLOSED (try/finally) everywhere below: these helpers
-  // run many times per micro-batch on a driver that lives for the stream's
-  // lifetime, and an unclosed DirectoryStream holds a file descriptor until
-  // GC — a mostly-idle stream (low GC pressure) would creep toward the fd
-  // ulimit. (sorted() drains walk() before iteration, so deleting entries
-  // during the loop is safe — the traversal is already buffered.)
-  private def deleteTree(p: java.nio.file.Path): Unit =
-    if (Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      val s = Files.walk(p)
-      try s.sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(Files.delete)
-      finally s.close()
-    }
-
-  /** Crash-safe directory replacement: the current table is renamed ASIDE
-    * (one rename), the new one moved in (one rename), and only then is the
-    * aside copy deleted — at every instant either the old or the new table
-    * is recoverable, unlike delete-tree-then-move which leaves a window
-    * with no table at all. `recoverSwap` heals the one bad window (crash
-    * between the two renames) by restoring the aside copy. */
-  private[streaming] def swapDir(tmp: String, target: String): Unit = {
-    val t = Paths.get(target)
-    val aside = Paths.get(target + ".old")
-    deleteTree(aside) // stale aside from a crash after a completed swap
-    if (Files.exists(t)) Files.move(t, aside)
-    try Files.move(Paths.get(tmp), t)
-    catch { case e: Throwable => // restore the old table before propagating
-      if (!Files.exists(t) && Files.exists(aside)) Files.move(aside, t)
-      throw e
-    }
-    deleteTree(aside)
-  }
-
-  /** Heal an interrupted `swapDir`: if the target vanished mid-swap the
-    * aside copy is moved back; a surviving aside next to an intact target
-    * (crash after the second rename) is dropped. Also clears abandoned
-    * `.tmp-*` write dirs so crashes don't leak space. Run once per batch. */
-  private[streaming] def recoverSwap(target: String): Unit = {
-    val t = Paths.get(target)
-    val aside = Paths.get(target + ".old")
-    if (!Files.exists(t) && Files.exists(aside)) Files.move(aside, t)
-    else if (Files.exists(aside)) deleteTree(aside)
-    val parent = t.getParent
-    if (parent != null && Files.exists(parent)) {
-      import scala.jdk.CollectionConverters._
-      val s = Files.list(parent)
-      val stale =
-        try s.iterator().asScala
-          .filter(_.getFileName.toString.startsWith(s"${t.getFileName}.tmp-"))
-          .toList
-        finally s.close()
-      stale.foreach(deleteTree)
-    }
+  /** Replace the table at `path` with `df`, which may read that very table
+    * (clusters derive from the previous clusters; migration, compaction and
+    * remap rewrite a table from itself): `df` is written to a fresh
+    * `<path>.tmp-*` dir and swapped in only once complete — never an
+    * in-place overwrite of its own input. [[FsOps.swapDir]] keeps the old or
+    * the new table present at every instant; the next batch's
+    * `recoverSwap` heals a crash mid-swap. (Iceberg snapshot commit is the
+    * real-cluster equivalent.) */
+  private def replaceTable(df: DataFrame, path: String): Unit = {
+    val tmp = s"$path.tmp-${java.util.UUID.randomUUID()}"
+    df.write.parquet(tmp)
+    FsOps.swapDir(hconf(df.sparkSession), new Path(tmp), new Path(path))
   }
 
   private def appendParquet(df: DataFrame, path: String): Unit =

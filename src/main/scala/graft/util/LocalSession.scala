@@ -2,10 +2,7 @@ package graft.util
 
 import org.apache.spark.sql.SparkSession
 
-/** The sandbox-tuned local SparkSession shared by every bench/probe main
-  * (Bench, DurableProbe, IncrementalProbe) — one definition so a
-  * perf-affecting knob change cannot leave the probes measuring a different
-  * engine than the bench:
+/** The sandbox-tuned local SparkSession of the Bench main:
   *  - shuffle partitions = cores (local mode; the 200 default just adds
   *    scheduling overhead);
   *  - AQE on, but with a small coalesce floor: dedup rows are tiny but

@@ -130,6 +130,53 @@ class FsOpsSpec extends SparkSpec {
     assert(FsOps.readString(conf, new Path(d, "_manifest.json")) == "second")
   }
 
+  test("writeRecord/readRecord: absent is None, the swing overwrites, stranded tmps are swept") {
+    val d = tmpDir()
+    val p = new Path(d, "_state_version.json")
+    assert(FsOps.readRecord(conf, p).isEmpty)
+    FsOps.writeAtomic(conf, new Path(d, "x"), new Path(d, "_state_version.json.tmp-dead"), "dead")
+    FsOps.writeRecord(conf, p, Seq("version" -> 3, "sig_config" -> "k5|p128"))
+    assert(FsOps.readString(conf, p) == """{"version": 3, "sig_config": "k5|p128"}""")
+    assert(!FsOps.exists(conf, new Path(d, "_state_version.json.tmp-dead")))
+    FsOps.writeRecord(conf, p, Seq("version" -> 4, "band_chunks" -> -1))
+    assert(FsOps.readRecord(conf, p).contains(Map("version" -> "4", "band_chunks" -> "-1")))
+    assert(p.getFileSystem(conf).listStatus(new Path(d)).map(_.getPath.getName).toSeq == Seq(p.getName))
+    intercept[IllegalArgumentException] { FsOps.renderRecord(Seq("k" -> "a\"b")) }
+  }
+
+  test("swapDir replaces a table whole, never nests it; recoverSwap heals a mid-swap crash") {
+    for (base <- Seq(tmpDir(), "file://" + tmpDir())) withClue(base) {
+      val fs = new Path(base).getFileSystem(conf)
+      val target = new Path(base, "t")
+      def table(name: String, content: String): Path = {
+        val dir = new Path(base, name)
+        FsOps.writeAtomic(conf, new Path(dir, "w"), new Path(dir, "data"), content)
+        dir
+      }
+      def data = FsOps.readString(conf, new Path(target, "data"))
+      def entries = fs.listStatus(new Path(base)).map(_.getPath.getName).toSeq.sorted
+
+      FsOps.swapDir(conf, table("t.tmp-1", "v1"), target) // absent target
+      assert(data == "v1" && entries == Seq("t"))
+      FsOps.swapDir(conf, table("t.tmp-2", "v2"), target) // replaced, not moved inside
+      assert(data == "v2" && entries == Seq("t"))
+      assert(FsOps.listDirs(conf, target).isEmpty)
+      // a rename that fails (returns false) throws and keeps the old table
+      intercept[java.io.IOException] { FsOps.swapDir(conf, new Path(base, "t.tmp-none"), target) }
+      assert(data == "v2" && entries == Seq("t"))
+
+      // crash between the two renames: target aside, new table not moved in
+      assert(fs.rename(target, new Path(base, "t.old")))
+      table("t.tmp-3", "v3")
+      FsOps.recoverSwap(conf, target)
+      assert(data == "v2" && entries == Seq("t"))
+      // crash after the second rename: a stale aside next to an intact target
+      FsOps.mkdirs(conf, new Path(base, "t.old"))
+      FsOps.recoverSwap(conf, target)
+      assert(data == "v2" && entries == Seq("t"))
+    }
+  }
+
   test("scheme-less and file:// spellings of one local path see the same file") {
     // The cluster contract: a scheme-less path means "the default FS" (local
     // in tests), and an explicit file:// URI names the same filesystem — the

@@ -1,12 +1,14 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.col
 
+import graft.checkpoint.FsOps
 import graft.model.GraftConfig
 import graft.streaming.IncrementalDedup
 import graft.streaming.IncrementalDedup.StateDirs
@@ -24,6 +26,13 @@ class IncrementalDedupSpec extends SparkSpec {
 
   private def df(rows: Seq[(String, Timestamp, Array[Byte], String, String)]): DataFrame =
     rows.toDF("url", "warc_ts", "html", "text", "lang")
+
+  /** A fresh state root, spelled as a plain path or as a file:// URI: every
+    * durable path must work on any Hadoop filesystem URI. */
+  private def stateRoot(prefix: String, uri: Boolean): String = {
+    val local = Files.createTempDirectory(prefix).toString
+    if (uri) "file://" + local else local
+  }
 
   private val baseText = (1 to 60).map(i => s"tok$i").mkString(" ")
   private val nearText = (1 to 60).map(i => if (i == 30) "zqx" else s"tok$i").mkString(" ")
@@ -197,30 +206,52 @@ class IncrementalDedupSpec extends SparkSpec {
   }
 
   test("interrupted clusters swap is healed on the next batch (no rebuild)") {
-    val root = Files.createTempDirectory("graft-inc9").toString
-    val dirs = StateDirs(root)
+    for (uri <- Seq(false, true)) {
+      val dirs = StateDirs(stateRoot("graft-inc9", uri))
+      withClue(s"root ${dirs.root}: ") {
+        IncrementalDedup.processBatch(
+          df(Seq(page("u://a", baseText), page("u://b", nearText))), cfg, dirs, batchId = 1L)
+        val before = spark.read.parquet(dirs.clusters).collect()
+          .map(r => r.getString(0) -> r.getLong(2)).toMap
+
+        // simulate a crash in the one bad window of the swap, through the
+        // Hadoop FS: the clusters table renamed aside, the new table not yet
+        // moved in — plus a stale abandoned write dir from the dead attempt
+        val target = new Path(dirs.clusters)
+        val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        assert(fs.rename(target, new Path(dirs.clusters + ".old")))
+        assert(fs.mkdirs(new Path(dirs.clusters + ".tmp-dead")))
+        assert(!fs.exists(target))
+
+        // next batch must heal the swap (restore the aside copy, drop the tmp
+        // litter) and process incrementally on top of the restored table
+        IncrementalDedup.processBatch(df(Seq(page("u://c", otherText))), cfg, dirs, batchId = 2L)
+        val after = spark.read.parquet(dirs.clusters).collect()
+          .map(r => r.getString(0) -> r.getLong(2)).toMap
+        assert(after("u://a") == before("u://a") && after("u://a") == after("u://b"))
+        assert(after.contains("u://c"))
+        assert(!fs.exists(new Path(dirs.clusters + ".old")))
+        assert(!fs.exists(new Path(dirs.clusters + ".tmp-dead")))
+      }
+    }
+  }
+
+  test("a file:// state root keeps every state file under that root") {
+    val local = Files.createTempDirectory("graft-inc-uri").toString
+    val dirs = StateDirs("file://" + local)
     IncrementalDedup.processBatch(
-      df(Seq(page("u://a", baseText), page("u://b", nearText))), cfg, dirs, batchId = 1L)
-    val before = spark.read.parquet(dirs.clusters).collect()
+      df(Seq(page("u://a", baseText), page("u://z", otherText))), cfg, dirs, batchId = 1L)
+    IncrementalDedup.processBatch(df(Seq(page("u://b", nearText))), cfg, dirs, batchId = 2L)
+    // the same state, read back through the plain local path
+    val plain = StateDirs(local)
+    val c = spark.read.parquet(plain.clusters).collect()
       .map(r => r.getString(0) -> r.getLong(2)).toMap
-
-    // simulate a crash in the one bad window of the swap: the clusters
-    // table renamed aside, the new table not yet moved in — plus a stale
-    // abandoned write dir from the dead attempt
-    val target = java.nio.file.Paths.get(dirs.clusters)
-    java.nio.file.Files.move(target, java.nio.file.Paths.get(dirs.clusters + ".old"))
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dirs.clusters + ".tmp-dead"))
-    assert(!java.nio.file.Files.exists(target))
-
-    // next batch must heal the swap (restore the aside copy, drop the tmp
-    // litter) and process incrementally on top of the restored table
-    IncrementalDedup.processBatch(df(Seq(page("u://c", otherText))), cfg, dirs, batchId = 2L)
-    val after = spark.read.parquet(dirs.clusters).collect()
-      .map(r => r.getString(0) -> r.getLong(2)).toMap
-    assert(after("u://a") == before("u://a") && after("u://a") == after("u://b"))
-    assert(after.contains("u://c"))
-    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dirs.clusters + ".old")))
-    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dirs.clusters + ".tmp-dead")))
+    assert(c.keySet == Set("u://a", "u://b", "u://z"))
+    assert(c("u://a") == c("u://b") && c("u://a") != c("u://z"))
+    assert(Files.exists(Paths.get(plain.versionFile)))
+    // java.nio reads the URI string as a path relative to the working
+    // directory (`./file:/...`): nothing may be created there
+    assert(!Files.exists(Paths.get(dirs.root)), s"state leaked to ${Paths.get(dirs.root).toAbsolutePath}")
   }
 
   test("state compaction bounds file count and per-batch input; outputs unchanged") {
@@ -615,8 +646,8 @@ class IncrementalDedupSpec extends SparkSpec {
     assert(c2("u://old") != c2("u://new"))
 
     // a future schema version is refused, not silently reinterpreted
-    java.nio.file.Files.write(java.nio.file.Paths.get(dirs.versionFile),
-      s"""{"version": ${IncrementalDedup.StateVersion + 1}}""".getBytes)
+    FsOps.writeRecord(spark.sparkContext.hadoopConfiguration, new Path(dirs.versionFile),
+      Seq("version" -> (IncrementalDedup.StateVersion + 1)))
     val e = intercept[IllegalStateException] {
       IncrementalDedup.processBatch(df(Seq(page("u://x", baseText))), cfg, dirs, batchId = 7L)
     }
@@ -669,18 +700,19 @@ class IncrementalDedupSpec extends SparkSpec {
     // replay recomputes anything not yet durable), and the metrics audit
     // table must hold exactly one row for the replayed batch (it is
     // appended after the clusters swap).
-    for (k <- 0 to 3) {
-      val root = Files.createTempDirectory(s"graft-inc-crash-$k").toString
-      val dirs = StateDirs(root)
+    // Every crash point runs on a plain and on a file:// root.
+    for (uri <- Seq(false, true); k <- 0 to 3) {
+      val dirs = StateDirs(stateRoot(s"graft-inc-crash-$k", uri))
       IncrementalDedup.processBatch(b1, cfg, dirs, batchId = 1L)
       val e = intercept[RuntimeException] {
         IncrementalDedup.processBatch(b2, cfg, dirs, batchId = 2L, crashAfterAppends = k)
       }
       assert(e.getMessage.contains("injected crash"))
       IncrementalDedup.processBatch(b2, cfg, dirs, batchId = 2L)
-      assert(groups(dirs) == control, s"crash point $k: replay must match the no-crash result")
+      assert(groups(dirs) == control,
+        s"${dirs.root}, crash point $k: replay must match the no-crash result")
       assert(spark.read.parquet(dirs.metrics).where(col("batch_id") === 2L).count() == 1,
-        s"crash point $k: exactly one metrics row for the replayed batch")
+        s"${dirs.root}, crash point $k: exactly one metrics row for the replayed batch")
     }
   }
 

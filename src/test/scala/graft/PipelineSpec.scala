@@ -89,7 +89,7 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("unitOffset yields a disjoint corpus; offset 0 is byte-identical to the default") {
-    // IncrementalProbe builds its stream of fresh batches on this: an
+    // A stream of fresh batches is built on this: an
     // offset range must share NO urls with the base range (urls derive
     // from the unit index), and the default must not shift existing
     // fixtures (golden/truth corpora regenerate byte-identically)

@@ -2,9 +2,10 @@ package graft
 
 import java.nio.file.Files
 
-import graft.checkpoint.{Manifest, ParquetSnapshotIO}
+import graft.checkpoint.{FsOps, Manifest, ParquetSnapshotIO}
 import graft.fixtures.PagesGen
 import graft.model.GraftConfig
+import graft.streaming.IncrementalDedup
 
 /** Stand-in for Spark's / Iceberg's NoSuchTableException: top-level so its
   * BINARY name ends with "NoSuchTableException" exactly like the real ones
@@ -22,6 +23,39 @@ class ResumeSpec extends SparkSpec {
   test("manifest json round-trips") {
     val m = Manifest("snap-abc", "deadbeef", 12345L, "st2_candidates")
     assert(Manifest.fromJson(m.toJson).contains(m))
+    // Records exactly as earlier releases wrote them: stage manifests with and
+    // without `bytes`, the CC label manifest, the incremental state version
+    // file and the remap journal. Each reads back through the one record
+    // parser and renders back byte-identically, so existing checkpoints and
+    // state roots resume.
+    val withBytes = """{"snapshot_id": "snap-deadbeef-1a2b3c4d", "config_hash": "deadbeef", """ +
+      """"row_count": 12345, "committed_at_stage": "st2_candidates", "bytes": 678}"""
+    val mb = Manifest("snap-deadbeef-1a2b3c4d", "deadbeef", 12345L, "st2_candidates", 678L)
+    assert(Manifest.fromJson(withBytes).contains(mb))
+    assert(mb.toJson == withBytes)
+    assert(Manifest.fromJson("""{"snapshot_id": "snap-abc", "config_hash": "deadbeef", """ +
+      """"row_count": 12345, "committed_at_stage": "st2_candidates"}""").contains(m))
+    val records = Seq(
+      """{"edge_hash": "00000000075bcd15-42", "iter": 3}""" ->
+        Seq("edge_hash" -> "00000000075bcd15-42", "iter" -> 3),
+      """{"version": 3, "simhash_tier": 1, "band_chunks": 4, "sig_config": "k5|p128|b32|s42"}""" ->
+        Seq("version" -> 3, "simhash_tier" -> 1, "band_chunks" -> 4, "sig_config" -> "k5|p128|b32|s42"),
+      """{"mapping_hash": "000000000000abcd-3", "done": "signatures,texts"}""" ->
+        Seq("mapping_hash" -> "000000000000abcd-3", "done" -> "signatures,texts"),
+      """{"mapping_hash": "000000000000abcd-3", "done": ""}""" ->
+        Seq("mapping_hash" -> "000000000000abcd-3", "done" -> ""))
+    records.foreach { case (json, fields) =>
+      assert(FsOps.parseRecord(json) == fields.map { case (k, v) => k -> v.toString }.toMap, json)
+      assert(FsOps.renderRecord(fields) == json)
+    }
+    // the band-index families a version record names: current, and legacy
+    // records holding only the boolean tier (on = unknown chunk count)
+    assert(IncrementalDedup.bandChunksOf(FsOps.parseRecord(records(1)._1)).contains(4))
+    assert(IncrementalDedup.bandChunksOf(
+      FsOps.parseRecord("""{"version": 3, "simhash_tier": 1}""")).contains(-1))
+    assert(IncrementalDedup.bandChunksOf(
+      FsOps.parseRecord("""{"version": 2, "simhash_tier": 0}""")).contains(0))
+    assert(IncrementalDedup.bandChunksOf(Map.empty).isEmpty)
   }
 
   test("second run resumes every stage from committed snapshots") {
