@@ -191,9 +191,14 @@ object Pipeline {
   }
 
   /** Census + salting + within-group pair generation over any
-    * (node_id, band_key) table — shared by the MinHash-band tier (ST2) and
-    * the SimHash chunk tier (`simhashPairs`). */
-  private def bandedPairs(bands: DataFrame, cfg: GraftConfig): Candidates = {
+    * (node_id, band_key) table — shared by the MinHash-band tier (ST2), the
+    * SimHash chunk tier (`simhashPairs`) and the incremental mode's one
+    * candidate pass (`IncrementalDedup.crossBatchCandidates`).
+    *
+    * When `bands` carries a boolean `is_new` column (the incremental pass),
+    * only pairs with a new endpoint are emitted, as (id_a, id_b, stored_id):
+    * `stored_id` is the endpoint that is not new, null when both are. */
+  private[graft] def bandedPairs(bands: DataFrame, cfg: GraftConfig): Candidates = {
     // Hot-band census (one partial-agg shuffle), kept distributed. Lazily
     // checkpointed: the pair job materializes it once for the join below,
     // and the stats thunk then reads the cached partitions.
@@ -233,9 +238,15 @@ object Pipeline {
         when(col("count").isNull, lit(0L))
           .otherwise(pmod(xxhash64(col("node_id"), col("band_key")),
             floor((col("count") + lit(maxGroup - 1)) / lit(maxGroup)).cast("long"))))
-    val pairs = pairsWithin(
-      classified.groupBy("band_key", "salt").agg(collect_list(col("node_id")).as("ids")))
-      .distinct().toDF("id_a", "id_b")
+    val grouped = classified.groupBy("band_key", "salt")
+    val pairs =
+      if (!bands.columns.contains("is_new"))
+        pairsWithin(grouped.agg(collect_list(col("node_id")).as("ids")))
+          .distinct().toDF("id_a", "id_b")
+      else
+        pairsWithNew(grouped.agg(collect_list(col("node_id")).as("ids"),
+          collect_list(when(col("is_new"), col("node_id"))).as("new_ids")))
+          .distinct().toDF("id_a", "id_b", "stored_id")
     val stats = () => {
       val row = hotCounts.agg(
         sum(when(col("count") > hotCap, 1L).otherwise(0L)),
@@ -315,6 +326,24 @@ object Pipeline {
           i <- 0 until s.length - 1
           j <- i + 1 until s.length
         } yield CandidatePair(s(i), s(j))
+      }
+  }
+
+  /** Within-cell pairs that touch a new id: each new id pairs with every
+    * other member once, so the work is O(new x cell), not O(cell^2). */
+  private def pairsWithNew(grouped: DataFrame): Dataset[(Long, Long, Option[Long])] = {
+    val spark = grouped.sparkSession
+    import spark.implicits._
+    grouped
+      .where(size(col("ids")) >= 2 && size(col("new_ids")) >= 1)
+      .select(col("ids"), col("new_ids"))
+      .as[(Seq[Long], Seq[Long])]
+      .flatMap { case (ids, newIds) =>
+        val isNew = newIds.toSet
+        for {
+          n <- isNew.toSeq
+          m <- ids if m != n && (!isNew(m) || n < m)
+        } yield (math.min(n, m), math.max(n, m), if (isNew(m)) None else Some(m))
       }
   }
 

@@ -4,9 +4,11 @@ import java.nio.charset.StandardCharsets
 import java.util.UUID
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path, UnsupportedFileSystemException}
+import org.apache.hadoop.fs.{FileContext, FileStatus, FileSystem, Options, Path, UnsupportedFileSystemException}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** One parquet data file of a committed snapshot (see [[FsOps.parquetFiles]]). */
 private[graft] final case class ParquetFile(rows: Long, bytes: Long)
@@ -186,20 +188,39 @@ private[graft] object FsOps {
     if (!exists(conf, p)) Nil
     else fs(conf, p).listStatus(p).filter(_.isDirectory).map(_.getPath).toSeq
 
-  /** Every data file directly under a parquet output dir, in name order,
-    * with its row count and length. The counts come from the footers, read
-    * on the driver through the dir's Hadoop filesystem: a commit learns what
-    * it wrote without a Spark job. Names starting with `_` or `.` (the
-    * `_SUCCESS` marker, checksum files) are not data, as in Spark's own
-    * file index. */
-  def parquetFiles(conf: Configuration, dir: Path): Seq[ParquetFile] =
+  /** The data files directly under a parquet output dir, in name order.
+    * Names starting with `_` or `.` (the `_SUCCESS` marker, checksum files)
+    * are not data, as in Spark's own file index. */
+  private def dataFiles(conf: Configuration, dir: Path): Seq[FileStatus] =
     fs(conf, dir).listStatus(dir).toSeq
       .filter(s => s.isFile && !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith("."))
       .sortBy(_.getPath.getName)
-      .map { s =>
-        val r = ParquetFileReader.open(HadoopInputFile.fromStatus(s, conf))
-        try ParquetFile(r.getRecordCount, s.getLen) finally r.close()
-      }
+
+  private def footer[T](conf: Configuration, s: FileStatus)(f: ParquetFileReader => T): T = {
+    val r = ParquetFileReader.open(HadoopInputFile.fromStatus(s, conf))
+    try f(r) finally r.close()
+  }
+
+  /** Every data file under a parquet output dir, in name order (which is
+    * write-partition order), with its row count and length. The counts come
+    * from the footers, read on the driver through the dir's Hadoop
+    * filesystem: a commit learns what it wrote without a Spark job. */
+  def parquetFiles(conf: Configuration, dir: Path): Seq[ParquetFile] =
+    dataFiles(conf, dir).map(s => ParquetFile(footer(conf, s)(_.getRecordCount), s.getLen))
+
+  /** The parquet table at `dir`, read under the Spark schema that Spark's
+    * parquet writer stores in every file footer (taken from the first data
+    * file), so the read runs no schema-inference job. Spark infers the
+    * schema only when `dir` holds no file written by Spark. */
+  def readParquet(spark: SparkSession, dir: String): DataFrame = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val p = new Path(dir)
+    val schema = (if (exists(conf, p)) dataFiles(conf, p).headOption else None).flatMap { s =>
+      footer(conf, s)(r => Option(r.getFooter.getFileMetaData.getKeyValueMetaData
+        .get("org.apache.spark.sql.parquet.row.metadata")))
+    }.map(json => DataType.fromJson(json).asInstanceOf[StructType].toNullable)
+    schema.fold(spark.read)(spark.read.schema).parquet(dir)
+  }
 
   /** Best-effort recursive delete (GC sweeps must never abort a commit
     * whose manifest already landed; a resisting dir is re-swept later). */

@@ -39,9 +39,10 @@ trait TableIO {
 }
 
 object TableIO {
-  /** One lineage row of a committed snapshot: the ONE schema every durable
-    * impl writes (ParquetSnapshotIO, IcebergIO), so the metrics stores can
-    * never drift apart (north-rule §7.6). */
+  /** One lineage row of a committed snapshot: the ONE schema of every
+    * durable impl's lineage (ParquetSnapshotIO builds it on read, IcebergIO
+    * writes it), so the metrics stores can never drift apart (north-rule
+    * §7.6). */
   final case class LineageRow(
       stage: String,
       snapshot_id: String,
@@ -71,18 +72,21 @@ object TableIO {
 }
 
 /** The commit record of one stage snapshot, stored in the [[FsOps]]
-  * record format. `bytes` is the snapshot's data-file bytes (0 where
-  * unknown: in-memory IO, Iceberg, and manifests written before the field
-  * existed). */
+  * record format. `bytes` is the snapshot's data-file bytes and
+  * `committedMs` its commit time (0 where unknown: in-memory IO, Iceberg,
+  * and manifests written before the field existed; a 0 time is not
+  * written). */
 final case class Manifest(
     snapshotId: String,
     configHash: String,
     rowCount: Long,
     stage: String,
-    bytes: Long = 0L
+    bytes: Long = 0L,
+    committedMs: Long = 0L
 ) {
   def fields: Seq[(String, Any)] = Seq("snapshot_id" -> snapshotId, "config_hash" -> configHash,
-    "row_count" -> rowCount, "committed_at_stage" -> stage, "bytes" -> bytes)
+    "row_count" -> rowCount, "committed_at_stage" -> stage, "bytes" -> bytes) ++
+    (if (committedMs != 0L) Seq("committed_ms" -> committedMs) else Nil)
   def toJson: String = FsOps.renderRecord(fields)
 }
 
@@ -94,18 +98,20 @@ object Manifest {
       ch <- kv.get("config_hash")
       rc <- kv.get("row_count")
       st <- kv.get("committed_at_stage")
-    } yield Manifest(sid, ch, rc.toLong, st, kv.get("bytes").map(_.toLong).getOrElse(0L))
+    } yield Manifest(sid, ch, rc.toLong, st, kv.get("bytes").map(_.toLong).getOrElse(0L),
+      kv.get("committed_ms").map(_.toLong).getOrElse(0L))
 }
 
 /** Directory-per-stage Parquet snapshots under `root`, keyed by configHash.
-  * Every commit also writes a lineage/metrics table
-  * `<stage>/<snapshot>_metrics` with one row per written data file
-  * (north-rule requirement, SURVEY §7.6): the durable generalization of the
-  * reference's atomic progress counters (process_matches.rs:85-96).
+  * Every snapshot carries its lineage: `metrics` gives one row per data
+  * file (north-rule requirement, SURVEY §7.6), the durable generalization
+  * of the reference's atomic progress counters (process_matches.rs:85-96),
+  * built on read from the files' footers and the manifest.
   *
-  * A commit runs two Spark jobs, the data write and the lineage write of a
-  * local table. Row count, bytes and lineage are read from the written
-  * files' footers, and the read-back passes the written schema.
+  * A commit runs one Spark job, the data write. Row count and bytes are
+  * read from the written files' footers, and the read-back passes the
+  * written schema. A load passes the schema Spark stored in the snapshot's
+  * first footer, so resuming a stage runs no Spark job.
   *
   * `root` may be on any Hadoop filesystem (file://, hdfs://, abfs://, or
   * scheme-less = the default FS): manifest/GC operations go through
@@ -141,26 +147,29 @@ final class ParquetSnapshotIO(root: String, configHash: String) extends TableIO 
     Some(new Path(base, configHash).toString)
   }
 
-  override def load(spark: SparkSession, stage: String): Option[(DataFrame, Manifest)] = {
+  /** The committed snapshot's manifest and data dir, if both exist. */
+  private def committed(spark: SparkSession, stage: String): Option[(Manifest, Path)] = {
     val conf = hconf(spark)
     FsOps.readRecord(conf, manifestPath(stage)).flatMap(Manifest.fromRecord)
-      .filter(_.configHash == configHash) // stale-config snapshots are ignored
-      .flatMap { m =>
-        val data = new Path(stageDir(stage), m.snapshotId)
-        if (FsOps.exists(conf, data)) Some((spark.read.parquet(data.toString), m))
-        else None
-      }
+      .map(m => (m, new Path(stageDir(stage), m.snapshotId)))
+      .filter { case (_, data) => FsOps.exists(conf, data) }
   }
 
-  /** Per-file lineage rows of a committed snapshot (resolved through the
-    * manifest — snapshot ids are unique per commit, see commit()). */
-  def metrics(spark: SparkSession, stage: String): Option[DataFrame] = {
-    val conf = hconf(spark)
-    FsOps.readRecord(conf, manifestPath(stage)).flatMap(Manifest.fromRecord)
-      .map(m => new Path(stageDir(stage), s"${m.snapshotId}_metrics"))
-      .filter(FsOps.exists(conf, _))
-      .map(p => spark.read.parquet(p.toString))
-  }
+  override def load(spark: SparkSession, stage: String): Option[(DataFrame, Manifest)] =
+    committed(spark, stage)
+      .filter(_._1.configHash == configHash) // stale-config snapshots are ignored
+      .map { case (m, data) => (FsOps.readParquet(spark, data.toString), m) }
+
+  /** Per-file lineage rows of the committed snapshot (resolved through the
+    * manifest — snapshot ids are unique per commit, see commit()): one row
+    * per data file, numbered in name order, which is write-partition order.
+    * Built on the driver from the footers; no Spark job. */
+  def metrics(spark: SparkSession, stage: String): Option[DataFrame] =
+    committed(spark, stage).map { case (m, data) =>
+      spark.createDataFrame(FsOps.parquetFiles(hconf(spark), data).zipWithIndex.map { case (f, i) =>
+        TableIO.LineageRow(stage, m.snapshotId, i, f.rows, m.configHash, m.committedMs)
+      })
+    }
 
   override def commit(df: DataFrame, stage: String): (DataFrame, Manifest) = {
     val spark = df.sparkSession
@@ -178,26 +187,20 @@ final class ParquetSnapshotIO(root: String, configHash: String) extends TableIO 
     val dataPath = new Path(dir, snapshotId)
     df.write.mode("overwrite").parquet(dataPath.toString) // the commit's one data job
 
-    // Row count, bytes and lineage come from the footers of the files just
-    // written (driver-side reads, no Spark job): one lineage row per file,
-    // numbered in name order, which is write-partition order.
+    // Row count and bytes come from the footers of the files just written
+    // (driver-side reads, no Spark job).
     val files = FsOps.parquetFiles(conf, dataPath)
-    val now = System.currentTimeMillis()
-    spark.createDataFrame(files.zipWithIndex.map { case (f, i) =>
-      TableIO.LineageRow(stage, snapshotId, i, f.rows, configHash, now)
-    }).write.mode("overwrite").parquet(new Path(dir, s"${snapshotId}_metrics").toString)
-
-    val m = Manifest(snapshotId, configHash, files.map(_.rows).sum, stage, files.map(_.bytes).sum)
+    val m = Manifest(snapshotId, configHash, files.map(_.rows).sum, stage, files.map(_.bytes).sum,
+      System.currentTimeMillis())
     FsOps.writeRecord(conf, manifestPath(stage), m.fields) // the commit point
     // GC every snapshot dir the manifest no longer references — superseded
-    // commits AND stale-config leftovers (previously stranded forever; the
-    // same single-writer-per-checkpoint-root assumption the st4_cc sweep
-    // documents). A crash before the swing leaves the new dirs orphaned
-    // and the old manifest intact; a crash mid-GC leaves sweepable dirs —
-    // both healed by the next commit's GC.
+    // commits, stale-config leftovers and the `<snap>_metrics` lineage
+    // tables earlier releases wrote (the same single-writer-per-checkpoint-
+    // root assumption the st4_cc sweep documents). A crash before the swing
+    // leaves the new dir orphaned and the old manifest intact; a crash
+    // mid-GC leaves sweepable dirs — both healed by the next commit's GC.
     FsOps.listDirs(conf, dir)
-      .filter(p => p.getName.startsWith("snap-")
-        && !Set(snapshotId, s"${snapshotId}_metrics").contains(p.getName))
+      .filter(p => p.getName.startsWith("snap-") && p.getName != snapshotId)
       .foreach(FsOps.deleteRecursive(conf, _)) // best effort; next commit resweeps
     // Read back under the written schema, so Spark runs no schema-inference
     // job; parquet hands every column back nullable.

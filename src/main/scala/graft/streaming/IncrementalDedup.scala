@@ -20,12 +20,15 @@ import graft.model.GraftConfig
   *     the resolved latest binding per url with its component label]
   *
   * Per batch: extract -> new distinct contents (anti-join on stored
-  * signatures) -> signatures for new contents only -> LSH candidates of
-  * (new x (new + stored)) via band-key join -> verify (new texts join the
-  * batch; stored side keeps no text, so verification uses signature-level
-  * gates: MinHash-estimated Jaccard and SimHash Hamming) -> append edges ->
-  * connected components over the AFFECTED components only -> swap in the
-  * updated clusters table (untouched clusters carried forward verbatim).
+  * signatures) -> signatures for new contents only -> ONE banded
+  * candidate pass over the batch's band keys plus the stored band rows
+  * sharing them (new-vs-new and new-vs-stored pairs, salted by the
+  * combined census; see crossBatchCandidates) -> ONE exact verify of every
+  * pair whose two texts are on hand, signature estimates for the rest
+  * (the stored side keeps no text unless cfg.incRetainTexts) -> append
+  * state -> connected components over the AFFECTED components only ->
+  * swap in the updated clusters table (untouched clusters carried forward
+  * verbatim).
   *
   * This is the reference's checkpoint-resume design (nullable-checksum
   * columns as "already computed" state, file_db.rs:375-388) turned into
@@ -37,18 +40,22 @@ import graft.model.GraftConfig
   * The bounded-channel pipeline of the reference (main.rs:145-166) maps to
   * micro-batch backpressure.
   *
-  * Scale notes: per-batch work is O(batch) signatures + an equi-join of the
-  * batch's band keys against the state band table (pushdown-friendly
-  * parquet; Iceberg at real scale); hot stored bands are salted into
-  * bounded cells (same policy as batch ST2), so boilerplate bands that
-  * accumulate members over months cannot make per-batch work grow with
-  * stored-band size; reclustering is bounded to the components TOUCHED by
-  * the batch (new bindings, superseded bindings, new edges) — untouched
-  * clusters are carried forward verbatim, so per-batch CC cost is
-  * O(affected dup-graph), not O(all accumulated edges). State dirs are
-  * periodically compacted (dup edges merged, member history reduced to
-  * latest-per-url, dead nodes GC'd), so a years-long stream holds state
-  * proportional to the LIVE corpus, not to its history.
+  * Scale notes: signatures, candidates and verification shuffle and
+  * compute O(batch + its candidate pairs): the state band table and the
+  * stored signatures are scanned map-side against broadcast batch-sized
+  * key sets (pushdown-friendly parquet; Iceberg at real scale), never
+  * shuffled whole, and hot bands are salted into bounded cells (same
+  * policy as batch ST2), so boilerplate bands that accumulate members over
+  * months cannot make per-batch work grow with stored-band size. Connected components run
+  * only over the components TOUCHED by the batch (new bindings,
+  * superseded bindings, new edges), so CC cost is O(affected dup-graph),
+  * not O(all accumulated edges). The clusters table is NOT bounded that
+  * way: every batch reads it whole (the current bindings and the affected
+  * set come from it) and rewrites it whole through one table swap, so each
+  * batch does O(live urls) clusters I/O on top of its O(batch) work. State
+  * dirs are periodically compacted (dup edges merged, member history
+  * reduced to latest-per-url, dead nodes GC'd), so a years-long stream
+  * holds state proportional to the LIVE corpus, not to its history.
   *
   * The state root may be any Hadoop filesystem URI: every existence check,
   * version/journal record and table swap goes through [[FsOps]] on the
@@ -148,7 +155,7 @@ object IncrementalDedup {
     val want = wantBandChunks(cfg)
     if (have.getOrElse(0) != want) {
       if (exists(spark, dirs.signatures))
-        replaceTable(Pipeline.bandKeys(spark.read.parquet(dirs.signatures), cfg), dirs.bandIndex)
+        replaceTable(Pipeline.bandKeys(FsOps.readParquet(spark, dirs.signatures), cfg), dirs.bandIndex)
       writeVersion(spark, cfg, dirs, want)
     } else if (!stamped) writeVersion(spark, cfg, dirs, want) // stamp missing fields
   }
@@ -199,7 +206,7 @@ object IncrementalDedup {
           s"supported $StateVersion — refusing to reinterpret (upgrade the library)")
       case _ => // absent or older: migrate what exists, then stamp
         if (exists(spark, dirs.members)) {
-          val m = spark.read.parquet(dirs.members)
+          val m = FsOps.readParquet(spark, dirs.members)
           if (!m.columns.contains("batch_id")) {
             // Migrate via temp-dir + crash-safe swap: an in-place overwrite
             // would delete the only copy of member state before rewriting
@@ -221,7 +228,7 @@ object IncrementalDedup {
   }
 
   private def readOrEmpty(spark: SparkSession, path: String, schemaOf: DataFrame): DataFrame =
-    if (exists(spark, path)) spark.read.parquet(path)
+    if (exists(spark, path)) FsOps.readParquet(spark, path)
     else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schemaOf.schema)
 
   /** Process one micro-batch of pages against the state under `dirs`.
@@ -251,7 +258,8 @@ object IncrementalDedup {
     }
 
     val extracted = Pipeline.extract(batch, cfg).localCheckpoint(false)
-    val newContents = Pipeline.distinctContents(extracted)
+    // read by the new-content anti-join and as the texts on hand
+    val newContents = Pipeline.distinctContents(extracted).localCheckpoint(false)
 
     // ---- skip unchanged batches: a batch row matters only if it would
     // change its url's CURRENT binding (new url, changed content, or a
@@ -275,7 +283,7 @@ object IncrementalDedup {
         col("m.n_bytes").as("n_bytes"), col("m.warc_ts").as("warc_ts"))
       .withColumn("batch_id", lit(batchId))
     val prevC: DataFrame =
-      if (exists(spark, dirs.clusters)) spark.read.parquet(dirs.clusters).localCheckpoint(false)
+      if (exists(spark, dirs.clusters)) FsOps.readParquet(spark, dirs.clusters).localCheckpoint(false)
       else null
     val currentBindings =
       if (prevC != null) prevC.select("url", "node_id")
@@ -287,36 +295,30 @@ object IncrementalDedup {
 
     // ---- new contents = not yet in the signature state
     val contents =
-      if (!exists(spark, dirs.signatures)) newContents.localCheckpoint(false)
-      else newContents.join(
-        spark.read.parquet(dirs.signatures).select("node_id"),
-        Seq("node_id"), "left_anti").localCheckpoint(false)
+      if (!exists(spark, dirs.signatures)) newContents
+      else newContents.join(FsOps.readParquet(spark, dirs.signatures).select("node_id"),
+        Seq("node_id"), "left_anti")
+    val sigs = Pipeline.signatures(contents, cfg).localCheckpoint(false)
 
-    val sigs = Pipeline.signatures(contents, cfg)
+    // ---- candidates: ONE banded pass over the batch's band rows and the
+    // stored rows sharing their keys (crossBatchCandidates). bandKeys
+    // includes the SimHash chunk keys when cfg.simhashTier is on, so the
+    // stored index probes every enabled tier.
+    val newBands = Pipeline.bandKeys(sigs, cfg)
+    val pairs = crossBatchCandidates(newBands, readOrEmpty(spark, dirs.bandIndex, newBands), cfg)
       .localCheckpoint(false)
 
-    // ---- candidates: new-vs-new within the batch bands, plus new-vs-stored
-    // through the durable band index (salted hot-band treatment, see
-    // crossBatchCandidates). bandKeys includes the SimHash chunk keys when
-    // cfg.simhashTier is on, so the stored index probes every enabled tier.
-    val newBands = Pipeline.bandKeys(sigs, cfg)
-    val storedBands = readOrEmpty(spark, dirs.bandIndex, newBands)
-    val crossPairs = crossBatchCandidates(newBands, storedBands, cfg)
-      .distinct().localCheckpoint(false)
-    val newPairs = Pipeline.candidatePairs(sigs, cfg).pairs.localCheckpoint(false)
-
     // ---- verify. Two tiers, matching what each side can know:
-    //  - new-vs-new pairs have BOTH texts in this batch, so they get the
-    //    full batch ST3 pass rule (exact shingle Jaccard, SimHash Hamming,
-    //    suffix-automaton LCS) — identical semantics to Pipeline.run;
-    //  - cross-batch pairs: any pair whose BOTH texts are on hand gets the
-    //    same full ST3 pass rule — batch-parity semantics. "On hand" always
-    //    includes this batch's own extracted contents (so a RE-PUBLISHED
-    //    known content — the common re-crawl case — verifies exactly, never
-    //    by estimate), and with cfg.incRetainTexts ON additionally the
-    //    stored texts state. Pairs with a text not on hand (knob off and
-    //    the stored endpoint absent from this batch; or state predating
-    //    the toggle / GC'd content) fall back to the estimate tier:
+    //  - every pair whose BOTH texts are on hand gets the full batch ST3
+    //    pass rule (exact shingle Jaccard, SimHash Hamming, suffix-automaton
+    //    LCS) — batch-parity semantics. New-vs-new pairs always qualify;
+    //    "on hand" also includes every content this batch extracted (so a
+    //    RE-PUBLISHED known content — the common re-crawl case — verifies
+    //    exactly, never by estimate), and with cfg.incRetainTexts ON the
+    //    stored texts state;
+    //  - cross pairs whose stored text is not on hand (knob off and the
+    //    stored endpoint absent from this batch; or state predating the
+    //    toggle / GC'd content) fall back to the estimate tier:
     //    MinHash-estimated Jaccard over the 128-perm signatures OR SimHash
     //    Hamming. Threshold on the estimate is cfg.minJaccard minus 2
     //    sigma (sigma = sqrt(J(1-J)/numPerm)) so planted true pairs still
@@ -326,78 +328,55 @@ object IncrementalDedup {
     //    divergence is measurable, and IncrementalDedupSpec's parity tests
     //    gate cluster agreement with the batch pipeline on a planted
     //    corpus (exact agreement + zero est-only with the knob on).
-    val newVerified = Pipeline.verifyPairs(newPairs, contents.select("node_id", "text"), cfg)
-      .where(col("passed")).select("id_a", "id_b")
-      .localCheckpoint(false)
     val retain = cfg.incRetainTexts
-    // Texts ON HAND this batch: every distinct content the batch itself
-    // extracted — INCLUDING re-published contents already in signature
-    // state (a re-crawl puts a known text literally in hand, so a cross
-    // pair touching it deserves the full exact verify, not the permissive
-    // estimate; without this, an avoidable est-only edge diverges from
-    // batch semantics even though both texts are in this very batch) —
-    // plus, with incRetainTexts on, the stored texts table.
     // Scale contract: the stored texts table is the one state dir whose
-    // BYTES grow with the live corpus, so it must never be scanned whole
-    // per batch — prune it to this batch's cross-pair ENDPOINTS (a
-    // node_id-column semi-join; parquet reads only matching text rows)
-    // before any shuffle. Per-batch text I/O is O(batch + cross
-    // candidates), not O(live corpus), preserving the
-    // O(batch + affected dup-graph) bound.
+    // BYTES grow with the live corpus, so only its rows at this batch's
+    // stored pair endpoints are read (a node_id-column semi-join before any
+    // shuffle): per-batch text I/O is O(batch + cross candidates).
     val textsOnHand =
-      if (!retain) newContents.select("node_id", "text").localCheckpoint(false)
-      else {
-        val crossIds = crossPairs.select(col("id_a").as("node_id"))
-          .union(crossPairs.select(col("id_b").as("node_id"))).distinct()
-        readOrEmpty(spark, dirs.texts, newContents.select("node_id", "text"))
-          .select("node_id", "text")
-          .join(crossIds, Seq("node_id"), "left_semi")
-          .unionByName(newContents.select("node_id", "text"))
-          .dropDuplicates("node_id").localCheckpoint(false)
-      }
-    val exactCrossPairs = {
-      val have = textsOnHand.select("node_id")
-      crossPairs
-        .join(have.withColumnRenamed("node_id", "id_a"), Seq("id_a"), "left_semi")
-        .join(have.withColumnRenamed("node_id", "id_b"), Seq("id_b"), "left_semi")
-        .localCheckpoint(false)
-    }
-    val estCrossPairs = crossPairs.join(exactCrossPairs, Seq("id_a", "id_b"), "left_anti")
-      .localCheckpoint(false)
-    val crossExactVerified = Pipeline.verifyPairs(exactCrossPairs, textsOnHand, cfg)
-      .where(col("passed")).select("id_a", "id_b").localCheckpoint(false)
-    // Scale contract (same as dirs.texts above): the stored signature table
-    // grows with the live corpus (~1 KB of minhash per row), so prune it to
-    // this batch's est-pair ENDPOINTS before the wide joins — per-batch
+      if (!retain) newContents.select("node_id", "text")
+      else readOrEmpty(spark, dirs.texts, newContents.select("node_id", "text"))
+        .select("node_id", "text")
+        .join(pairs.select(col("stored_id").as("node_id")), Seq("node_id"), "left_semi")
+        .unionByName(newContents.select("node_id", "text"))
+        .dropDuplicates("node_id").localCheckpoint(false)
+    // the exact/estimate split: the stored endpoint (null for new-vs-new)
+    // left-joined to the ids on hand
+    val split = pairs.join(
+      textsOnHand.select(col("node_id").as("stored_id"), lit(true).as("on_hand")),
+      Seq("stored_id"), "left")
+    val exact = split.where(col("stored_id").isNull || col("on_hand").isNotNull)
+    val exactVerified = Pipeline.verifyPairs(exact.select("id_a", "id_b"), textsOnHand, cfg)
+      .where(col("passed")).select(col("id_a"), col("id_b"), lit(false).as("est"))
+    // The estimate tier reads the stored endpoint's signature from state and
+    // the new endpoint's from this batch's sigs. The stored signature table
+    // grows with the live corpus (~1 KB of minhash per row), so the
+    // (batch-sized) estimate pairs are broadcast into its scan: per-batch
     // signature traffic is O(est candidates), not O(live corpus).
-    val estIds = estCrossPairs.select(col("id_a").as("node_id"))
-      .union(estCrossPairs.select(col("id_b").as("node_id"))).distinct()
-    val allSigs = (if (exists(spark, dirs.signatures))
-      spark.read.parquet(dirs.signatures).unionByName(sigs) else sigs)
-      .select("node_id", "minhash", "simhash")
-      .join(estIds, Seq("node_id"), "left_semi")
     val estMin = cfg.minJaccard - 2.0 * math.sqrt(cfg.minJaccard * (1 - cfg.minJaccard) / cfg.numPerm)
     val maxHam = cfg.maxHamming
     import spark.implicits._
-    val a = allSigs.select(col("node_id").as("id_a"),
-      col("minhash").as("mh_a"), col("simhash").as("sh_a"))
-    val b = allSigs.select(col("node_id").as("id_b"),
-      col("minhash").as("mh_b"), col("simhash").as("sh_b"))
-    val crossEstVerified = estCrossPairs.join(a, "id_a").join(b, "id_b")
-      // each using-join moves its key column FIRST, so the column order here
-      // is (id_b, id_a, ...) — select explicitly before the POSITIONAL tuple
-      // decode or every cross-batch edge is stored orientation-reversed,
-      // breaking the edges table's id_a < id_b invariant (regression-gated
-      // by the parity test's orientation assertion)
-      .select(col("id_a"), col("id_b"), col("mh_a"), col("sh_a"), col("mh_b"), col("sh_b"))
+    val estPairs = split.where(col("stored_id").isNotNull && col("on_hand").isNull)
+      .select(col("id_a"), col("id_b"), col("stored_id"),
+        when(col("id_a") === col("stored_id"), col("id_b")).otherwise(col("id_a")).as("new_id"))
+    val estVerified = broadcast(estPairs)
+      .join(readOrEmpty(spark, dirs.signatures, sigs).select(col("node_id").as("stored_id"),
+        col("minhash").as("mh_s"), col("simhash").as("sh_s")), "stored_id")
+      .join(sigs.select(col("node_id").as("new_id"),
+        col("minhash").as("mh_n"), col("simhash").as("sh_n")), "new_id")
+      // select explicitly before the POSITIONAL tuple decode: each
+      // using-join moves its key column first, and a reversed (id_b, id_a)
+      // would break the edges table's id_a < id_b invariant (regression-
+      // gated by the parity test's orientation assertion)
+      .select(col("id_a"), col("id_b"), col("mh_s"), col("sh_s"), col("mh_n"), col("sh_n"))
       .as[(Long, Long, Seq[Long], Long, Seq[Long], Long)]
-      .flatMap { case (idA, idB, mhA, shA, mhB, shB) =>
-        val est = graft.signatures.MinHasher.estimateJaccard(mhA.toArray, mhB.toArray)
-        val ham = java.lang.Long.bitCount(shA ^ shB)
-        if (est >= estMin || ham <= maxHam) Some((idA, idB)) else None
-      }.toDF("id_a", "id_b")
-      .localCheckpoint(false)
-    val verified = newVerified.union(crossExactVerified).union(crossEstVerified)
+      .flatMap { case (idA, idB, mhS, shS, mhN, shN) =>
+        val est = graft.signatures.MinHasher.estimateJaccard(mhS.toArray, mhN.toArray)
+        val ham = java.lang.Long.bitCount(shS ^ shN)
+        if (est >= estMin || ham <= maxHam) Some((idA, idB, true)) else None
+      }.toDF("id_a", "id_b", "est")
+    // read by the edges append, the affected set and the metrics row
+    val verified = exactVerified.union(estVerified).localCheckpoint(false)
 
     // ---- append state. ORDER IS THE REPLAY-RESUME CONTRACT: foreachBatch
     // is at-least-once, the appends are not atomic as a group, and replay
@@ -412,7 +391,7 @@ object IncrementalDedup {
     // see "already processed" and the batch's candidate edges would be
     // lost FOREVER (silent recall loss).
     appendState(newBands, dirs.bandIndex)
-    appendState(verified, dirs.edges)
+    appendState(verified.select("id_a", "id_b"), dirs.edges)
     if (retain) appendState(contents.select("node_id", "text"), dirs.texts)
     appendState(newMemberRows, dirs.members)
     appendState(sigs, dirs.signatures) // LAST: gates replay recompute
@@ -425,14 +404,14 @@ object IncrementalDedup {
     // one instant between swap and append loses the audit row for that
     // batch; an at-most-once audit beats contradictory duplicates).
     // Its counts come from ONE aggregation over a tagged union of the
-    // (already materialized) tables, not one count job per table.
-    val counted = Seq(newPairs, crossPairs, newVerified, crossExactVerified, crossEstVerified)
-    val n = counted.zipWithIndex
-      .map { case (d, i) => d.select(lit(i).as("t")) }.reduce(_ union _)
-      .select(counted.indices.map(i => count_if(col("t") === i)): _*)
+    // (already materialized) pair and edge tables, not one count job each:
+    // t = 0 new-vs-new pair, 1 cross pair, 2 exact edge, 3 estimate edge.
+    val n = pairs.select(col("stored_id").isNotNull.cast("int").as("t"))
+      .union(verified.select((col("est").cast("int") + 2).as("t")))
+      .select((0 to 3).map(i => count_if(col("t") === i)): _*)
       .head()
     val metricsRow =
-      Seq((batchId, n.getLong(0), n.getLong(1), n.getLong(2) + n.getLong(3), n.getLong(4),
+      Seq((batchId, n.getLong(0), n.getLong(1), n.getLong(2), n.getLong(3),
         System.currentTimeMillis()))
         .toDF("batch_id", "candidates_new", "candidates_cross",
           "edges_exact_verified", "edges_est_only", "committed_ms")
@@ -450,7 +429,7 @@ object IncrementalDedup {
       compactStateIfNeeded(spark, cfg, dirs)
       return
     }
-    val batchUrls = newMemberRows.select("url").distinct()
+    val batchUrls = newMemberRows.select("url") // one row per url already
 
     // winner binding per batch url: its previous binding vs the batch rows,
     // deterministic (batch_id, warc_ts, node_id) struct max
@@ -475,7 +454,7 @@ object IncrementalDedup {
     // is duplicate-insensitive — the semi-joins below, and CC (union-find
     // ignores repeats; the distributed loop distincts its symmetrized set)
     // — and compaction dedups the table durably.
-    val edgesState = spark.read.parquet(dirs.edges).localCheckpoint(false)
+    val edgesState = FsOps.readParquet(spark, dirs.edges).localCheckpoint(false)
     val newlyLive = winners.select("node_id")
       .join(prevC.select("node_id"), Seq("node_id"), "left_anti")
     val resurrectNeighbors = edgesState
@@ -486,17 +465,17 @@ object IncrementalDedup {
         .select(col("id_a").as("node_id")))
 
     // A0 = batch-touched nodes: new winners, superseded old bindings,
-    // endpoints of this batch's new edges, and resurrection neighbors
+    // endpoints of this batch's new edges, and resurrection neighbors.
+    // A0, the affected clusters and the live affected nodes only ever key
+    // semi/anti-joins, which ignore duplicates: no distinct (a shuffle each).
     val a0 = winners.select("node_id")
       .union(prevOfBatch.select("node_id"))
       .union(verified.select(col("id_a").as("node_id")))
       .union(verified.select(col("id_b").as("node_id")))
       .union(resurrectNeighbors)
-      .distinct()
-      .localCheckpoint(false)
 
     val affClusters = prevC.join(a0, Seq("node_id"), "left_semi")
-      .select("cluster_id").distinct().localCheckpoint(false)
+      .select("cluster_id").localCheckpoint(false)
 
     // resolved members of the affected region: carried bindings of affected
     // clusters (non-batch urls, unchanged) + the batch winners
@@ -507,7 +486,7 @@ object IncrementalDedup {
 
     // edges among LIVE affected nodes (dead-node edges retired here — the
     // reference's changed-file invalidation at cluster time)
-    val liveAffA = affResolved.select(col("node_id").as("id_a")).distinct()
+    val liveAffA = affResolved.select(col("node_id").as("id_a"))
     val affEdges = edgesState
       .join(liveAffA, Seq("id_a"), "left_semi")
       .join(liveAffA.select(col("id_a").as("id_b")), Seq("id_b"), "left_semi")
@@ -526,72 +505,39 @@ object IncrementalDedup {
     compactStateIfNeeded(spark, cfg, dirs)
   }
 
-  /** Cross-batch candidate pairs: each NEW band row probes the stored band
-    * index on its key. COMBINED census first: per band key, stored members
-    * (restricted by a semi-join to the batch's keys — the stored index can
-    * hold billions of keys, the batch thousands) PLUS the batch's own
-    * contribution. Counting both sides matters: a stored group just under
-    * `maxBandGroup` would otherwise pair cold against an arbitrarily large
-    * batch contribution on the same key, exceeding the intended per-cell
-    * bound — the combined count keeps every join cell at ~maxBandGroup
-    * regardless of which side the mass sits on, exactly matching the batch
-    * path (where one table holds all members). Groups over the threshold
-    * are SALTED into ceil(count/maxBandGroup) cells with the same
-    * xxh64(node_id, band_key) bucketing the batch path uses, and each new
-    * member probes exactly ONE cell — per-new-member work stays
-    * O(maxBandGroup) instead of growing with accumulated boilerplate-band
-    * size, at the cost of partial in-band recall (a true pair still
-    * surfaces through its other bands). Only groups beyond
-    * hardMaxBandGroup are dropped, mirroring Pipeline.candidatePairs. Both
-    * census tables are bounded by the batch's distinct band keys, so the
-    * hot side is broadcast explicitly. The stored view excludes this
-    * batch's own nodes and the census counts distinct members — replay
-    * duplicates (see the append-order contract) must not shift a band
-    * across the salt/drop thresholds. */
+  /** The candidate pairs of a batch, new-vs-new and new-vs-stored, from
+    * ONE banded pass ([[Pipeline.bandedPairs]]: census, salting, grouping)
+    * over the batch's band rows plus the stored band rows that share a key
+    * with them. Only pairs with at least one new endpoint are kept, as
+    * (id_a, id_b, stored_id), `stored_id` null for a new-vs-new pair.
+    *
+    * The census counts stored and new members together, so every cell is
+    * salted by the combined distinct count, as the batch pipeline salts by
+    * the whole corpus: a stored group just under `maxBandGroup` cannot pair
+    * cold against a large batch contribution on the same key, and a
+    * new-vs-new pair in a band that is hot only once its stored members
+    * count is salted (or, beyond hardMaxBandGroup, dropped) too. The stored
+    * side is semi-joined to the batch's band keys (broadcast: the stored
+    * index can hold billions of keys, the batch thousands), so the pass is
+    * O(batch bands + their stored groups).
+    *
+    * Replay hygiene: foreachBatch is at-least-once and band rows land
+    * BEFORE the signature gate, so a crashed prior attempt of THIS batch
+    * may have already appended this batch's own band rows, and earlier
+    * crashed batches can leave duplicate rows in the index until
+    * compaction dedups it. The combined table is therefore reduced to one
+    * row per (node, key), a batch node staying new — a raw row count would
+    * inflate a band across maxBandGroup (spurious salting, partial recall)
+    * or hardMaxBandGroup (the band silently dropped, and its cross pairs
+    * are never re-probed once both sides hold signatures). */
   private[graft] def crossBatchCandidates(newBands: DataFrame, storedBands: DataFrame,
       cfg: GraftConfig): DataFrame = {
-    val hotCap = if (cfg.saltHotBands) cfg.hardMaxBandGroup.toLong else cfg.maxBandGroup.toLong
-    val maxGroup = cfg.maxBandGroup.toLong
-    // Replay hygiene: foreachBatch is at-least-once and band rows land
-    // BEFORE the signature gate, so a crashed prior attempt of THIS batch
-    // may have already appended this batch's own band rows — probing them
-    // would pair nodes against themselves (the batch path's job) and
-    // double-count the census. Drop the batch's own nodes from the stored
-    // view (broadcast anti-join: a map-side filter, the stored scan never
-    // shuffles). Earlier crashed batches can likewise leave historical
-    // duplicate rows in the index until compaction dedups it, so the
-    // census counts DISTINCT stored members — a raw row count would
-    // inflate a band across maxBandGroup (spurious salting, partial
-    // recall) or hardMaxBandGroup (the band silently dropped, and its
-    // cross pairs are never re-probed once both sides hold signatures).
-    val stored = storedBands
-      .join(broadcast(newBands.select("node_id").distinct()), Seq("node_id"), "left_anti")
-    // inner join: a cross pair needs >=1 member on EACH side of the key
-    val storedCounts = stored
-      .join(broadcast(newBands.select("band_key").distinct()), Seq("band_key"), "left_semi")
-      .groupBy("band_key").agg(countDistinct(col("node_id")).as("stored_n"))
-    val batchCounts = newBands.groupBy("band_key").agg(count(lit(1)).as("batch_n"))
-    val hot = storedCounts.join(batchCounts, Seq("band_key"))
-      .select(col("band_key"), (col("stored_n") + col("batch_n")).as("count"))
-      .where(col("count") > cfg.maxBandGroup)
-    def crossJoinPairs(n: DataFrame, s: DataFrame, keys: Seq[String]): DataFrame =
-      n.as("n").join(s.as("s"), keys)
-        .select(
-          least(col("n.node_id"), col("s.node_id")).as("id_a"),
-          greatest(col("n.node_id"), col("s.node_id")).as("id_b"))
-        .where(col("id_a") =!= col("id_b"))
-    val coldCross = crossJoinPairs(
-      newBands,
-      stored.join(broadcast(hot.select("band_key")), Seq("band_key"), "left_anti"),
-      Seq("band_key"))
-    val saltExpr = pmod(xxhash64(col("node_id"), col("band_key")),
-      floor((col("count") + lit(maxGroup - 1)) / lit(maxGroup)).cast("long"))
-    val survivingHot = hot.where(col("count") <= hotCap)
-    val hotCross = crossJoinPairs(
-      newBands.join(broadcast(survivingHot), Seq("band_key")).withColumn("salt", saltExpr),
-      stored.join(broadcast(survivingHot), Seq("band_key")).withColumn("salt", saltExpr),
-      Seq("band_key", "salt"))
-    coldCross.union(hotCross)
+    val stored = storedBands.select("node_id", "band_key")
+      .join(broadcast(newBands.select("band_key")), Seq("band_key"), "left_semi")
+    val bands = newBands.select(col("node_id"), col("band_key"), lit(true).as("is_new"))
+      .unionByName(stored.select(col("node_id"), col("band_key"), lit(false).as("is_new")))
+      .groupBy("node_id", "band_key").agg(max(col("is_new")).as("is_new"))
+    Pipeline.bandedPairs(bands, cfg).pairs
   }
 
   /** Full recluster from ground-truth state (members + edges): latest
@@ -600,15 +546,15 @@ object IncrementalDedup {
     * uses the bounded affected-component path instead. */
   private[streaming] def rebuildClusters(spark: SparkSession, cfg: GraftConfig, dirs: StateDirs): Unit = {
     if (!exists(spark, dirs.members)) return
-    val resolved = spark.read.parquet(dirs.members)
+    val resolved = FsOps.readParquet(spark, dirs.members)
       .groupBy("url")
       .agg(max(struct(col("batch_id"), col("warc_ts"), col("node_id"), col("n_bytes"))).as("m"))
       .select(col("url"), col("m.node_id").as("node_id"), col("m.n_bytes").as("n_bytes"),
         col("m.warc_ts").as("warc_ts"), col("m.batch_id").as("batch_id"))
       .localCheckpoint(false)
-    val liveA = resolved.select(col("node_id").as("id_a")).distinct()
-    val liveEdges =
-      (if (exists(spark, dirs.edges)) spark.read.parquet(dirs.edges).distinct()
+    val liveA = resolved.select(col("node_id").as("id_a")) // keys semi-joins only
+    val liveEdges = // CC ignores repeated edges
+      (if (exists(spark, dirs.edges)) FsOps.readParquet(spark, dirs.edges)
        else spark.emptyDataFrame.select(lit(0L).as("id_a"), lit(0L).as("id_b")).limit(0))
         .join(liveA, Seq("id_a"), "left_semi")
         .join(liveA.select(col("id_a").as("id_b")), Seq("id_b"), "left_semi")
@@ -696,11 +642,11 @@ object IncrementalDedup {
       Seq("signatures" -> dirs.signatures, "members" -> dirs.members, "clusters" -> dirs.clusters,
         "band_index" -> dirs.bandIndex, "texts" -> dirs.texts)
         .filter { case (name, p) => !done.contains(name) && exists(spark, p) }
-        .map { case (_, p) => spark.read.parquet(p).select(col("node_id").as("id")) }
+        .map { case (_, p) => FsOps.readParquet(spark, p).select(col("node_id").as("id")) }
     val edgeIdTables =
       if (done.contains("edges") || !exists(spark, dirs.edges)) Nil
       else {
-        val e = spark.read.parquet(dirs.edges)
+        val e = FsOps.readParquet(spark, dirs.edges)
         Seq(e.select(col("id_a").as("id")), e.select(col("id_b").as("id")))
       }
     val storedIds = (nodeIdTables ++ edgeIdTables)
@@ -727,7 +673,7 @@ object IncrementalDedup {
         if (rewrites >= crashAfterTables) // test hook: simulate dying midway
           throw new RuntimeException(s"injected crash before rewriting $name")
         rewrites += 1
-        if (exists(spark, path)) replaceTable(f(spark.read.parquet(path)), path)
+        if (exists(spark, path)) replaceTable(f(FsOps.readParquet(spark, path)), path)
         doneNow += name
         writeJournal(doneNow)
       }
@@ -778,10 +724,10 @@ object IncrementalDedup {
     if (!dirsToWatch.exists(p => FsOps.fileCount(hconf(spark), new Path(p)) > threshold))
       return false
 
-    val live = spark.read.parquet(dirs.clusters)
+    val live = FsOps.readParquet(spark, dirs.clusters)
       .select("node_id").distinct().localCheckpoint(true)
     def rewrite(path: String)(f: DataFrame => DataFrame): Unit =
-      if (exists(spark, path)) replaceTable(f(spark.read.parquet(path)), path)
+      if (exists(spark, path)) replaceTable(f(FsOps.readParquet(spark, path)), path)
     rewrite(dirs.members) { m =>
       m.groupBy("url")
         .agg(max(struct(col("batch_id"), col("warc_ts"), col("node_id"), col("n_bytes"))).as("m"))

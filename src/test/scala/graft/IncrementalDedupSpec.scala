@@ -470,17 +470,30 @@ class IncrementalDedupSpec extends SparkSpec {
       "expected est-only fallback edges against pre-toggle (unretained) nodes")
   }
 
+  /** The batch's candidate pairs from the one banded pass, split into
+    * (new-vs-new, cross) pair sets. */
+  private def candidates(batch: DataFrame, stored: DataFrame, c: GraftConfig)
+      : (Set[(Long, Long)], Set[(Long, Long)]) = {
+    val rows = IncrementalDedup.crossBatchCandidates(batch, stored, c).collect()
+    val (cross, within) = rows.partition(r => !r.isNullAt(2))
+    def pairs(rs: Array[org.apache.spark.sql.Row]) = rs.map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(cross.forall(r => Set(r.getLong(0), r.getLong(1)).contains(r.getLong(2))),
+      "stored_id must name a pair endpoint")
+    (pairs(within), pairs(cross))
+  }
+
   test("combined census: stored+batch jointly over maxBandGroup salts the cell") {
     import org.apache.spark.sql.functions.{xxhash64, pmod, lit => flit}
     val cfgC = cfg.copy(maxBandGroup = 4)
     // One band key: 3 stored members (cold under a stored-only census) plus
     // 3 batch members -> combined 6 > 4 -> the cell must be salted into
     // ceil(6/4) = 2 cells; an unsalted cold join would emit all 9 pairs.
+    // The one pass salts the batch's own members by the same combined
+    // count, so its new-vs-new pairs are those that share a salt cell.
     val key = 77L
     val stored = Seq(1L, 2L, 3L).map((_, key)).toDF("node_id", "band_key")
     val batch = Seq(11L, 12L, 13L).map((_, key)).toDF("node_id", "band_key")
-    val got = IncrementalDedup.crossBatchCandidates(batch, stored, cfgC)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val (gotNew, got) = candidates(batch, stored, cfgC)
     val salts = stored.union(batch)
       .withColumn("salt", pmod(xxhash64($"node_id", $"band_key"), flit(2L)))
       .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
@@ -489,6 +502,10 @@ class IncrementalDedupSpec extends SparkSpec {
     } yield (math.min(n, s), math.max(n, s))).toSet
     assert(expected.size < 9, "test fixture degenerate: all members hashed to one salt cell")
     assert(got == expected, s"expected salted cells $expected, got $got")
+    val expectedNew = Seq(11L, 12L, 13L).combinations(2).collect {
+      case Seq(a, b) if salts(a) == salts(b) => (a, b)
+    }.toSet
+    assert(gotNew == expectedNew, s"expected new-vs-new pairs $expectedNew, got $gotNew")
   }
 
   test("replay duplicates cannot shift a band across the salt/drop thresholds") {
@@ -501,17 +518,18 @@ class IncrementalDedupSpec extends SparkSpec {
     // 8 + 3 stored rows + 3 batch rows = 14 > hardMaxBandGroup = 10 and
     // silently drop the band — permanent recall loss, since these nodes
     // are never re-probed once signatures land. The true combined size is
-    // 4 + 3 = 7 <= maxBandGroup: a plain cold join emitting every cross
-    // pair, with the batch's own replay rows excluded from the stored side.
+    // 4 + 3 = 7 <= maxBandGroup: one cold cell emitting every cross pair
+    // and every new-vs-new pair, with the batch's own replay rows excluded
+    // from the stored side.
     val storedTrue = Seq(1L, 2L, 3L, 4L)
     val stored = (storedTrue ++ storedTrue ++ Seq(11L, 12L, 13L))
       .map((_, key)).toDF("node_id", "band_key")
     val batch = Seq(11L, 12L, 13L).map((_, key)).toDF("node_id", "band_key")
-    val got = IncrementalDedup.crossBatchCandidates(batch, stored, cfgC)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val (gotNew, got) = candidates(batch, stored, cfgC)
     val expected = (for { n <- Seq(11L, 12L, 13L); s <- storedTrue }
       yield (math.min(n, s), math.max(n, s))).toSet
     assert(got == expected, s"expected the full cold cross product $expected, got $got")
+    assert(gotNew == Set((11L, 12L), (11L, 13L), (12L, 13L)), s"new-vs-new pairs: $gotNew")
   }
 
   test("simhashTier chunk keys flow into the durable band index") {
@@ -714,6 +732,34 @@ class IncrementalDedupSpec extends SparkSpec {
       assert(spark.read.parquet(dirs.metrics).where(col("batch_id") === 2L).count() == 1,
         s"${dirs.root}, crash point $k: exactly one metrics row for the replayed batch")
     }
+  }
+
+  test("a stream's second batch runs a bounded number of Spark jobs") {
+    // At stream-batch sizes a batch's wall is set by Spark's fixed cost per
+    // job, so the job count is the cost gate. Batch 2 takes every path:
+    // a new-vs-new pair (c1-c2), a cross pair verified on estimates (h-g),
+    // one verified exactly (b-a: a2 re-publishes a's text) and the bounded
+    // recluster.
+    val gText = (1 to 60).map(i => s"gee$i").mkString(" ")
+    val hText = (1 to 60).map(i => if (i == 30) "zqh" else s"gee$i").mkString(" ")
+    val cText = (1 to 60).map(i => s"cee$i").mkString(" ")
+    val c2Text = (1 to 60).map(i => if (i == 30) "zqc" else s"cee$i").mkString(" ")
+    val dirs = StateDirs(Files.createTempDirectory("graft-inc-jobs").toString)
+    IncrementalDedup.processBatch(
+      df(Seq(page("u://a", baseText), page("u://z", otherText), page("u://g", gText))),
+      cfg, dirs, batchId = 1L)
+    val (_, n) = countingJobs(IncrementalDedup.processBatch(
+      df(Seq(page("u://b", nearText), page("u://h", hText), page("u://a2", baseText),
+        page("u://c1", cText), page("u://c2", c2Text))), cfg, dirs, batchId = 2L))
+    val c = spark.read.parquet(dirs.clusters).collect()
+      .map(r => r.getString(0) -> r.getLong(2)).toMap
+    assert(Set(c("u://a2"), c("u://b")) == Set(c("u://a")) && c("u://h") == c("u://g") &&
+      c("u://c1") == c("u://c2"))
+    assert(Set(c("u://a"), c("u://g"), c("u://c1"), c("u://z")).size == 4)
+    val m = spark.read.parquet(dirs.metrics).where(col("batch_id") === 2L).head()
+    assert(m.getAs[Long]("candidates_new") >= 1 && m.getAs[Long]("candidates_cross") >= 2)
+    assert(m.getAs[Long]("edges_est_only") >= 1 && m.getAs[Long]("edges_exact_verified") >= 2)
+    assert(n <= 45, s"second batch ran $n Spark jobs")
   }
 
   test("remap refuses pre-v3 state instead of wedging it behind its own journal") {

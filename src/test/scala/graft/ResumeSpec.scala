@@ -33,6 +33,9 @@ class ResumeSpec extends SparkSpec {
     val mb = Manifest("snap-deadbeef-1a2b3c4d", "deadbeef", 12345L, "st2_candidates", 678L)
     assert(Manifest.fromJson(withBytes).contains(mb))
     assert(mb.toJson == withBytes)
+    val mc = mb.copy(committedMs = 1760000000000L)
+    assert(mc.toJson == withBytes.dropRight(1) + """, "committed_ms": 1760000000000}""")
+    assert(Manifest.fromJson(mc.toJson).contains(mc))
     assert(Manifest.fromJson("""{"snapshot_id": "snap-abc", "config_hash": "deadbeef", """ +
       """"row_count": 12345, "committed_at_stage": "st2_candidates"}""").contains(m))
     val records = Seq(
@@ -123,50 +126,41 @@ class ResumeSpec extends SparkSpec {
     assert(r.report.count() > 0)
   }
 
-  test("commit runs at most two Spark jobs and reads back the written schema") {
-    import java.util.concurrent.atomic.AtomicInteger
+  test("commit runs one Spark job and reads back the written schema") {
     import org.apache.hadoop.fs.Path
-    import org.apache.spark.ListenerBusDrain
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val root = Files.createTempDirectory("graft-commit-jobs").toString
     val io = new ParquetSnapshotIO(root, cfg.configHash)
-    val sc = spark.sparkContext
     // already materialized: every job counted below belongs to the commit
     val extracted = Pipeline.extract(PagesGen.pages(spark, spec), cfg).localCheckpoint()
-    val group = "graft-commit-job-gate"
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    def commitCountingJobs(df: org.apache.spark.sql.DataFrame, stage: String) = {
-      sc.addSparkListener(listener)
-      sc.setJobGroup(group, "commit under test")
-      jobs.set(0)
-      try {
-        val out = io.commit(df, stage)
-        ListenerBusDrain(sc)
-        (out, jobs.get)
-      } finally {
-        sc.clearJobGroup()
-        sc.removeSparkListener(listener)
-      }
-    }
 
-    val ((committed, m), n) = commitCountingJobs(extracted, "st0_extracted")
-    assert(n <= 2, s"commit ran $n Spark jobs (data write + lineage write allowed)")
+    val ((committed, m), n) = countingJobs(io.commit(extracted, "st0_extracted"))
+    assert(n <= 1, s"commit ran $n Spark jobs (the data write allowed)")
     assert(m.rowCount == extracted.count())
-    assert(m.bytes > 0)
+    assert(m.bytes > 0 && m.committedMs > 0)
     assert(committed.schema ==
       spark.read.parquet(new Path(new Path(root, "st0_extracted"), m.snapshotId).toString).schema)
     assert(committed.count() == m.rowCount)
 
-    val ((empty, me), ne) = commitCountingJobs(extracted.limit(0), "st5_report")
-    assert(ne <= 2, s"empty commit ran $ne Spark jobs")
+    val ((empty, me), ne) = countingJobs(io.commit(extracted.limit(0), "st5_report"))
+    assert(ne <= 1, s"empty commit ran $ne Spark jobs")
     assert(me.rowCount == 0L)
     assert(empty.count() == 0L)
     assert(io.metrics(spark, "st5_report").get.collect().map(_.getAs[Long]("rows_out")).sum == 0L)
+  }
+
+  test("loading the committed stages runs no Spark job") {
+    val root = Files.createTempDirectory("graft-load-jobs").toString
+    val io = new ParquetSnapshotIO(root, cfg.configHash)
+    val r = Pipeline.run(spark, PagesGen.pages(spark, spec), cfg, io)
+    val stages = r.metrics.map(_.stage)
+    assert(stages.size == 6)
+    val (loaded, n) = countingJobs(stages.map(st => io.load(spark, st).get._1))
+    assert(n == 0, s"loading ${stages.size} stages ran $n Spark jobs (schema inference)")
+    // the footer schema is the one inference finds
+    stages.zip(loaded).foreach { case (st, df) =>
+      val data = s"$root/$st/${io.load(spark, st).get._2.snapshotId}"
+      assert(df.schema == spark.read.parquet(data).schema, s"$st load schema differs")
+    }
   }
 
   test("a durable run stores the page text once and commits ST1 without minhash") {
