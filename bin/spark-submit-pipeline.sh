@@ -5,7 +5,6 @@
 #   bin/spark-submit-pipeline.sh run --input <pages.parquet> --output <dir> [...]
 #                                                 # production pipeline (graft.Main;
 #                                                 #  all graft.Main flags pass through)
-#   bin/spark-submit-pipeline.sh bench            # Bench JSON (scaling + queries)
 #   bin/spark-submit-pipeline.sh verify SF OUT    # correctness dump
 #
 # Cores and driver heap default to the host running it: SPARK_GRAFT_CPUS = nproc, and
@@ -16,6 +15,14 @@
 # nothing else: the code never assumes local mode (all parallelism comes from
 # spark.sql.shuffle.partitions / defaultParallelism).
 set -euo pipefail
+
+# A missing or unknown mode prints the usage block above.
+case "${1:-}" in
+  run)    CLASS=graft.Main ;;
+  verify) CLASS=graft.Verify ;;
+  *) sed -n 's/^# \{0,1\}//; 4,8p' "$0" >&2; exit 2 ;;
+esac
+shift
 cd "$(dirname "$0")/.."
 
 JAR=$(ls target/scala-2.13/duplicatefinderspark_2.13-*.jar 2>/dev/null | head -1 || true)
@@ -24,14 +31,6 @@ if [ -z "$JAR" ]; then
   sbt -batch package > /dev/null
   JAR=$(ls target/scala-2.13/duplicatefinderspark_2.13-*.jar | head -1)
 fi
-
-MODE="${1:-bench}"
-case "$MODE" in
-  run)    CLASS=graft.Main;       shift || true ;;
-  bench)  CLASS=graft.Bench;      shift || true ;;
-  verify) CLASS=graft.Verify;     shift || true ;;
-  *) echo "unknown mode $MODE" >&2; exit 2 ;;
-esac
 
 CPUS="${SPARK_GRAFT_CPUS:-$(nproc)}"
 MEM="${SPARK_DRIVER_MEM:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' /proc/meminfo 2>/dev/null || echo 2g)}"

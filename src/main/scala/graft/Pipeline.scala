@@ -191,9 +191,9 @@ object Pipeline {
   }
 
   /** Census + salting + within-group pair generation over any
-    * (node_id, band_key) table — shared by the MinHash-band tier (ST2), the
-    * SimHash chunk tier (`simhashPairs`) and the incremental mode's one
-    * candidate pass (`IncrementalDedup.crossBatchCandidates`).
+    * (node_id, band_key) table — shared by ST2 (`candidatePairs`, over
+    * `bandKeys`) and the incremental mode's one candidate pass
+    * (`IncrementalDedup.crossBatchCandidates`).
     *
     * When `bands` carries a boolean `is_new` column (the incremental pass),
     * only pairs with a new endpoint are emitted, as (id_a, id_b, stored_id):
@@ -258,44 +258,15 @@ object Pipeline {
     Candidates(pairs, stats)
   }
 
-  // ---------------------------------------------------------------- ST2'
-  /** SimHash Hamming tier as a first-class candidate generator, by
-    * pigeonhole chunk banding (the classic SimHash-dedup table scheme,
-    * Manku/Jain/Sarma WWW'07 — public technique): the 64-bit fingerprint is
-    * split into `maxHamming + 1` near-equal bit ranges, and any two
-    * fingerprints within Hamming distance `maxHamming` must agree on at
-    * least one whole chunk — so the chunk-key self-join has RECALL 1.0 for
-    * the Hamming gate (a structural guarantee, unlike the MinHash band
-    * s-curve) whenever no chunk group exceeds `maxBandGroup`. Candidates
-    * then pass an exact `bit_count(xor)` filter.
-    *
-    * Chunk keys flow through the same census/salting machinery as the
-    * MinHash bands (`bandedPairs`): low-entropy chunks (boilerplate-heavy
-    * corpora concentrate fingerprint regions) are salted or stop-banded
-    * identically — those guarded groups trade the exact-recall guarantee
-    * for bounded work, visibly, via the same honest recall counters.
-    *
-    * Returns (id_a, id_b, hamming) with id_a < id_b, hamming <= maxHamming.
-    * Role analog: the reference's cheap-filter tier promoted to a full
-    * candidate generator (/root/reference/src/process_matches.rs:255-264).
-    */
-  def simhashPairs(sigs: DataFrame, cfg: GraftConfig): DataFrame = {
-    val bands = sigs.select(col("node_id"), explode(simhashChunkKeys(cfg)).as("band_key"))
-    val sh = sigs.select(col("node_id"), col("simhash"))
-    bandedPairs(bands, cfg).pairs
-      .join(sh.toDF("id_a", "sh_a"), "id_a")
-      .join(sh.toDF("id_b", "sh_b"), "id_b")
-      .withColumn("hamming", bit_count(col("sh_a").bitwiseXOR(col("sh_b"))).cast("int"))
-      .where(col("hamming") <= cfg.maxHamming)
-      .select("id_a", "id_b", "hamming")
-  }
-
   /** The `maxHamming + 1` pigeonhole chunk keys of a 64-bit `simhash`
     * column: near-equal bit ranges covering all 64 bits (e.g. maxHamming=3
     * -> 4 x 16), each keyed as xxh64(chunk index, chunk bits) — seeding by
     * index keeps equal bit patterns in different chunk positions from
     * colliding into one join key (mirrors the band-index seeding of the
-    * MinHash band_hashes). */
+    * MinHash band_hashes). Two fingerprints within Hamming distance
+    * `maxHamming` agree on at least one whole chunk (Manku/Jain/Sarma
+    * WWW'07), so the chunk tier's recall for the Hamming gate is structural
+    * wherever no chunk group is salted or dropped. */
   private def simhashChunkKeys(cfg: GraftConfig): Column = {
     val chunks = cfg.maxHamming + 1
     require(chunks >= 1 && chunks <= 64, s"maxHamming=${cfg.maxHamming} out of range")

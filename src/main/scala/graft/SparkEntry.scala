@@ -182,18 +182,18 @@ object SparkEntry {
       Pipeline.canonicalMap(r.clusters).orderBy("url")
     }),
 
-    // ---- standalone SimHash tier (pigeonhole chunk banding), hash-checked
-    // against planted structure: the corpus is every document (node 2d)
-    // plus, for doc_id % 7 == 3, an identical copy (node 2d+1). Identical
-    // text => identical SimHash => Hamming 0, and the chunk tier's
-    // pigeonhole property makes finding every planted pair a STRUCTURAL
-    // guarantee (all chunks agree), so the restricted output is a pure
-    // function of the plant — ANSI-SQL-expressible. The query pins the
-    // UNSALTED regime (maxBandGroup high enough that no chunk group can
-    // salt at any testdata sf): the pigeonhole guarantee is exact only
-    // without salting, and an oracle must not depend on which salt cell a
-    // planted pair's ids hash into. Pairs at Hamming 1..maxHamming (and
-    // exclusion beyond) are gated by SimHashPairsSpec's brute-force
+    // ---- ST2 with the SimHash chunk tier on (pigeonhole chunk banding),
+    // hash-checked against planted structure: the corpus is every document
+    // (node 2d) plus, for doc_id % 7 == 3, an identical copy (node 2d+1).
+    // Identical text => identical SimHash => Hamming 0, and the chunk
+    // tier's pigeonhole property makes finding every planted pair a
+    // STRUCTURAL guarantee (all chunks agree), so the restricted output is
+    // a pure function of the plant — ANSI-SQL-expressible. The query pins
+    // the UNSALTED regime (maxBandGroup high enough that no band or chunk
+    // group can salt at any testdata sf): the pigeonhole guarantee is exact
+    // only without salting, and an oracle must not depend on which salt
+    // cell a planted pair's ids hash into. Pairs at Hamming 1..maxHamming
+    // (and exclusion beyond) are gated by SimHashPairsSpec's brute-force
     // equality; salted/stop-band behavior by CandidatePairsSpec.
     "simhash_planted" -> ((s, dir) => {
       val d = docs(s, dir)
@@ -202,8 +202,8 @@ object SparkEntry {
         .select((col("doc_id") * 2 + 1).as("node_id"), col("text"))
       val corpus = base.union(copies)
         .withColumn("n_bytes", length(col("text")).cast("long"))
-      val exactCfg = cfg.copy(maxBandGroup = Int.MaxValue / 2)
-      Pipeline.simhashPairs(Pipeline.signatures(corpus, exactCfg), exactCfg)
+      val exactCfg = cfg.copy(maxBandGroup = Int.MaxValue / 2, simhashTier = true)
+      Pipeline.candidatePairs(Pipeline.signatures(corpus, exactCfg), exactCfg).pairs
         .where(pmod(col("id_a"), lit(2)) === 0 && col("id_b") === col("id_a") + 1)
         .select(floor(col("id_a") / 2).cast("long").as("doc_id"))
         .orderBy("doc_id")

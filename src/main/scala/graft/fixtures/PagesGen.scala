@@ -207,21 +207,6 @@ object PagesGen {
   }
 
   // --------------------------------------------------------- public API
-  /** nUnits distinct web-page-sized texts in the ST1 input shape
-    * (node_id, n_bytes, text) — the signature-stage benchmark corpus
-    * WITHOUT paying the (untimed) extract+dedup prep of a full pages run.
-    * Same deterministic text generator as `pages`. */
-  def syntheticContents(spark: SparkSession, nUnits: Long, seed: Long = 42L,
-      tokensScale: Int = 1): DataFrame = {
-    import spark.implicits._
-    spark.range(0L, nUnits)
-      .map { i =>
-        val t = unitTexts(i, seed, tokensScale).head._2
-        (i, t.length.toLong, t)
-      }
-      .toDF("node_id", "n_bytes", "text")
-  }
-
   def pages(spark: SparkSession, spec: Spec): DataFrame = {
     import spark.implicits._
     val seed = spec.seed

@@ -431,17 +431,12 @@ object IncrementalDedup {
     }
     val batchUrls = newMemberRows.select("url") // one row per url already
 
-    // winner binding per batch url: its previous binding vs the batch rows,
-    // deterministic (batch_id, warc_ts, node_id) struct max
+    // winner binding per batch url: its previous binding vs the batch rows
     val prevOfBatch = prevC.join(batchUrls, Seq("url"), "left_semi")
       .select("url", "node_id", "n_bytes", "warc_ts", "batch_id")
       .localCheckpoint(false)
-    val winners = newMemberRows.select("url", "node_id", "n_bytes", "warc_ts", "batch_id")
-      .unionByName(prevOfBatch)
-      .groupBy("url")
-      .agg(max(struct(col("batch_id"), col("warc_ts"), col("node_id"), col("n_bytes"))).as("m"))
-      .select(col("url"), col("m.node_id").as("node_id"), col("m.n_bytes").as("n_bytes"),
-        col("m.warc_ts").as("warc_ts"), col("m.batch_id").as("batch_id"))
+    val winners = latestBinding(
+      newMemberRows.select("url", "node_id", "n_bytes", "warc_ts", "batch_id").unionByName(prevOfBatch))
       .localCheckpoint(false)
 
     // Resurrected nodes — live now but not live before (a url reverting to
@@ -493,10 +488,7 @@ object IncrementalDedup {
 
     val cc = graft.cluster.ConnectedComponents.run(spark, affEdges, cfg.maxCcIterations,
       localThreshold = cfg.ccLocalThreshold)
-    val newAff = affResolved
-      .join(cc, affResolved("node_id") === cc("id"), "left")
-      .withColumn("cluster_id", coalesce(col("cluster_id"), col("node_id")))
-      .select("url", "node_id", "cluster_id", "n_bytes", "warc_ts", "batch_id")
+    val newAff = labeled(affResolved, cc)
 
     val untouched = prevC.join(affClusters, Seq("cluster_id"), "left_anti")
       .select("url", "node_id", "cluster_id", "n_bytes", "warc_ts", "batch_id")
@@ -546,12 +538,7 @@ object IncrementalDedup {
     * uses the bounded affected-component path instead. */
   private[streaming] def rebuildClusters(spark: SparkSession, cfg: GraftConfig, dirs: StateDirs): Unit = {
     if (!exists(spark, dirs.members)) return
-    val resolved = FsOps.readParquet(spark, dirs.members)
-      .groupBy("url")
-      .agg(max(struct(col("batch_id"), col("warc_ts"), col("node_id"), col("n_bytes"))).as("m"))
-      .select(col("url"), col("m.node_id").as("node_id"), col("m.n_bytes").as("n_bytes"),
-        col("m.warc_ts").as("warc_ts"), col("m.batch_id").as("batch_id"))
-      .localCheckpoint(false)
+    val resolved = latestBinding(FsOps.readParquet(spark, dirs.members)).localCheckpoint(false)
     val liveA = resolved.select(col("node_id").as("id_a")) // keys semi-joins only
     val liveEdges = // CC ignores repeated edges
       (if (exists(spark, dirs.edges)) FsOps.readParquet(spark, dirs.edges)
@@ -560,12 +547,26 @@ object IncrementalDedup {
         .join(liveA.select(col("id_a").as("id_b")), Seq("id_b"), "left_semi")
     val cc = graft.cluster.ConnectedComponents.run(spark, liveEdges, cfg.maxCcIterations,
       localThreshold = cfg.ccLocalThreshold)
-    val clusters = resolved
+    replaceTable(labeled(resolved, cc), dirs.clusters)
+  }
+
+  /** The latest binding of every url among `members` (url, node_id,
+    * n_bytes, warc_ts, batch_id): the max of (batch_id, warc_ts, node_id),
+    * deterministic whatever the partitioning. Every resolution path (the
+    * batch winners, a full rebuild, compaction) applies this one rule. */
+  private def latestBinding(members: DataFrame): DataFrame =
+    members.groupBy("url")
+      .agg(max(struct(col("batch_id"), col("warc_ts"), col("node_id"), col("n_bytes"))).as("m"))
+      .select(col("url"), col("m.node_id").as("node_id"), col("m.n_bytes").as("n_bytes"),
+        col("m.warc_ts").as("warc_ts"), col("m.batch_id").as("batch_id"))
+
+  /** `resolved` bindings with their CC labels (`cc`: id, cluster_id); a
+    * node without an edge is its own cluster. */
+  private def labeled(resolved: DataFrame, cc: DataFrame): DataFrame =
+    resolved
       .join(cc, resolved("node_id") === cc("id"), "left")
       .withColumn("cluster_id", coalesce(col("cluster_id"), col("node_id")))
       .select("url", "node_id", "cluster_id", "n_bytes", "warc_ts", "batch_id")
-    replaceTable(clusters, dirs.clusters)
-  }
 
   /** Identity-key remap of stored state — the graft analog of the
     * reference's device-number remap maintenance op
@@ -728,12 +729,7 @@ object IncrementalDedup {
       .select("node_id").distinct().localCheckpoint(true)
     def rewrite(path: String)(f: DataFrame => DataFrame): Unit =
       if (exists(spark, path)) replaceTable(f(FsOps.readParquet(spark, path)), path)
-    rewrite(dirs.members) { m =>
-      m.groupBy("url")
-        .agg(max(struct(col("batch_id"), col("warc_ts"), col("node_id"), col("n_bytes"))).as("m"))
-        .select(col("url"), col("m.node_id").as("node_id"), col("m.n_bytes").as("n_bytes"),
-          col("m.warc_ts").as("warc_ts"), col("m.batch_id").as("batch_id"))
-    }
+    rewrite(dirs.members)(latestBinding)
     rewrite(dirs.signatures)(_.join(live, Seq("node_id"), "left_semi"))
     // retained texts (incRetainTexts): live nodes only, one row per node —
     // same GC-then-resurrect trade as signatures (the batch re-carries the

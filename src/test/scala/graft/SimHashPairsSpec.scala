@@ -1,21 +1,32 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.typedLit
+
 import graft.model.GraftConfig
 
-/** ST2' SimHash pigeonhole chunk tier (Pipeline.simhashPairs): recall for
-  * Hamming <= maxHamming is a STRUCTURAL guarantee (any two fingerprints
-  * within distance H agree on at least one of H+1 chunks), and the exact
-  * bit_count(xor) filter makes precision exact. Gated here by brute-force
-  * all-pairs equality — both directions, all distances. */
+/** ST2's SimHash pigeonhole chunk tier (`Pipeline.candidatePairs` with
+  * `simhashTier` on): recall for Hamming <= maxHamming is a STRUCTURAL
+  * guarantee (any two fingerprints within distance H agree on at least one
+  * of H+1 chunks). The spec applies the exact bit_count(xor) gate itself,
+  * as ST3 does, and checks brute-force all-pairs equality — both
+  * directions, all distances. Every frame's `band_hashes` is empty, so only
+  * chunk keys can collide. */
 class SimHashPairsSpec extends SparkSpec {
   import spark.implicits._
 
-  private def sigsOf(rows: Seq[(Long, Long)]) =
-    rows.toDF("node_id", "simhash")
+  /** Chunk-tier candidates of `sigs` within `maxHamming`, with distances. */
+  private def chunkPairs(sigs: DataFrame, cfg: GraftConfig): Set[(Long, Long, Int)] = {
+    val simhash = sigs.select("node_id", "simhash").as[(Long, Long)].collect().toMap
+    val chunkKeysOnly = sigs.withColumn("band_hashes", typedLit(Seq.empty[Long]))
+    Pipeline.candidatePairs(chunkKeysOnly, cfg.copy(simhashTier = true)).pairs
+      .as[(Long, Long)].collect()
+      .map { case (a, b) => (a, b, java.lang.Long.bitCount(simhash(a) ^ simhash(b))) }
+      .filter(_._3 <= cfg.maxHamming).toSet
+  }
 
   private def pairsOf(rows: Seq[(Long, Long)], cfg: GraftConfig): Set[(Long, Long, Int)] =
-    Pipeline.simhashPairs(sigsOf(rows), cfg)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+    chunkPairs(rows.toDF("node_id", "simhash"), cfg)
 
   private def brute(rows: Seq[(Long, Long)], maxH: Int): Set[(Long, Long, Int)] =
     (for {
@@ -76,9 +87,8 @@ class SimHashPairsSpec extends SparkSpec {
     val corpus = (docs ++ copies).toDF("node_id", "text")
       .withColumn("n_bytes", org.apache.spark.sql.functions.length($"text").cast("long"))
     val cfg = GraftConfig()
-    val got = Pipeline.simhashPairs(Pipeline.signatures(corpus, cfg), cfg)
-      .where($"id_b" === $"id_a" + 1)
-      .collect().map(r => (r.getLong(0), r.getInt(2))).toSet
+    val got = chunkPairs(Pipeline.signatures(corpus, cfg), cfg)
+      .collect { case (a, b, h) if b == a + 1 => (a, h) }
     assert(got == copies.map(c => (c._1 - 1, 0)).toSet)
   }
 }
