@@ -11,8 +11,8 @@ import graft.model.GraftConfig
   * Thin by design: every pipeline semantic lives in [[Pipeline]]; this main
   * only (1) parses CLI knobs into a [[GraftConfig]], (2) picks the stage IO
   * (durable [[ParquetSnapshotIO]] under `--checkpoint`, so a killed run
-  * resumes from its last committed stage — including mid-ST4, per-iteration
-  * CC labels; the dir may be on any Hadoop filesystem — hdfs://, abfs://,
+  * resumes from its last committed stage — including mid-ST4, per-round
+  * CC edges; the dir may be on any Hadoop filesystem — hdfs://, abfs://,
   * file://, or scheme-less = the default FS — see
   * [[graft.checkpoint.FsOps]]), and (3) writes the four user-facing
   * outputs as distributed sinks:

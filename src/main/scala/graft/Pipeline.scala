@@ -458,7 +458,7 @@ object Pipeline {
     val spark = extracted.sparkSession
 
     val edges = verified.where(col("passed")).select(col("id_a"), col("id_b"))
-    val cc = ConnectedComponents.run(spark, edges, cfg.maxCcIterations,
+    val cc = ConnectedComponents.run(spark, edges,
       localThreshold = cfg.ccLocalThreshold, durableDir = ccDurableDir)
 
     val members = extracted
@@ -621,9 +621,9 @@ object Pipeline {
     }
 
     val verified = stage("st3_verified")(verifyPairs(candidates, distinctContents(extracted), cfg))
-    // Durable IOs extend resume INSIDE ST4: the CC loop commits labels per
-    // iteration under io.ccDurableDir, so a crash mid-propagation resumes
-    // from the last committed iteration, not from scratch.
+    // Durable IOs extend resume INSIDE ST4: the CC loop commits its edge
+    // table per round under io.ccDurableDir, so a crash mid-loop resumes
+    // from the last committed round, not from scratch.
     val clusters = stage("st4_clusters")(cluster(extracted, verified, cfg, io.ccDurableDir))
     val rep = stage("st5_report")(report(clusters))
 

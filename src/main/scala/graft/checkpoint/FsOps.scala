@@ -14,7 +14,7 @@ import org.apache.spark.sql.types.{DataType, StructType}
 private[graft] final case class ParquetFile(rows: Long, bytes: Long)
 
 /** Hadoop-FileSystem primitives shared by every durable store
-  * (ParquetSnapshotIO, ConnectedComponents' per-iteration label store,
+  * (ParquetSnapshotIO, ConnectedComponents' per-round edge store,
   * IncrementalDedup's state root), so a checkpoint or state root can live
   * on ANY Hadoop filesystem — `file://` in the
   * sandbox, `hdfs://` / `abfs://` on a cluster. The previous java.nio

@@ -27,9 +27,9 @@ trait TableIO {
   def commit(df: DataFrame, stage: String): (DataFrame, Manifest)
 
   /** Durable scratch directory for ST4's iterative connected components,
-    * if this IO is durable at all: the CC loop then commits its label
-    * table per iteration and a restarted run resumes mid-propagation
-    * instead of from scratch (executor/driver loss costs one iteration).
+    * if this IO is durable at all: the CC loop then commits its edge
+    * table per round and a restarted run resumes mid-loop instead of
+    * from scratch (executor/driver loss costs one round).
     * In-memory IOs return None — there is nothing to resume into.
     *
     * NOT a pure accessor on durable impls: it may sweep stale sibling
@@ -125,10 +125,10 @@ final class ParquetSnapshotIO(root: String, configHash: String) extends TableIO 
   private def stageDir(stage: String) = new Path(root, stage)
   private def manifestPath(stage: String) = new Path(stageDir(stage), "_manifest.json")
 
-  /** ST4's per-iteration CC label commits live beside the stage snapshots,
-    * keyed by config hash (the label store itself re-keys by edge hash).
+  /** ST4's per-round CC edge commits live beside the stage snapshots,
+    * keyed by config hash (the edge store itself re-keys by edge hash).
     * Sibling dirs from OTHER config hashes are swept here: a config change
-    * makes their labels unresumable (the pipeline would recompute edges
+    * makes their rounds unresumable (the pipeline would recompute edges
     * under the new config), so without the sweep every config change would
     * strand one st4_cc/<hash> dir forever. */
   // SINGLE-WRITER ASSUMPTION (here and in commit()'s snapshot GC): a

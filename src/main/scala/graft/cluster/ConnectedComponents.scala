@@ -1,55 +1,68 @@
 package graft.cluster
 
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Iterative min-label propagation connected components over a DataFrame of
-  * undirected edges (ST4). Labels converge to the component-minimum node id,
-  * so cluster ids are deterministic (no partition-dependent id generation —
-  * SURVEY.md §7.5).
+/** Connected components over a DataFrame of undirected edges (ST4) by
+  * alternating small-star and large-star (Kiveris et al., "Connected
+  * Components in MapReduce and Beyond", SoCC 2014). Every node is labeled
+  * with its component's minimum id, so cluster ids are deterministic (no
+  * partition-dependent id generation — SURVEY.md §7.5).
+  *
+  * The loop's state is the edge table itself, each edge stored once as
+  * (lo, hi) with lo < hi. A round rewrites it twice, each rewrite one
+  * shuffle that keeps every component's node set:
+  *  - small-star hangs each node and its smaller neighbours on the least
+  *    of them;
+  *  - large-star hangs each node's larger neighbours on the least of the
+  *    node and its neighbours.
+  * Both leave a forest of stars centred on component minima unchanged, and
+  * alternating them reaches that forest from any graph (the round bound is
+  * on `run`), so a sliding-window chain of near-dups needs no special case.
+  * Labels are read off the stars: a leaf maps to its centre, a centre to
+  * itself.
   *
   * Scale notes (100 TB design):
-  *  - each iteration is ONE shuffle: neighbor label messages and the node's
-  *    own label are unioned and hash-aggregated together, and the
-  *    changed-label count rides on the same job via `observe` — there is no
-  *    separate convergence-check join+count job (driver sync points are the
-  *    Amdahl term in scaling efficiency, so the loop keeps exactly one
-  *    action per iteration);
-  *  - `localCheckpoint` after every iteration truncates lineage so plan size
-  *    and task closures stay O(1) in the iteration count (on a real cluster,
-  *    a reliable checkpoint dir / stage table is the durable variant);
-  *  - dup-graph components are dense with tiny diameters, so iteration
-  *    counts are small (observed 2-4 on web-dup shaped graphs); `maxIter`
-  *    is a safety bound only.
+  *  - a round is ONE Spark job: large-star's aggregate counts the nodes
+  *    that break the star shape of its input via `observe`, on the same
+  *    job as the round's commit (or eager `localCheckpoint`), so there is
+  *    no separate convergence-check job;
+  *  - the commit / checkpoint truncates lineage, so plan size and task
+  *    closures stay O(1) in the round count;
+  *  - each step aggregates a node's neighbours into one array, so a hub of
+  *    degree d is one row of d ids in one task.
   */
 object ConnectedComponents {
 
   /** Edge sets at or below this row count are solved by union-find on the
-    * driver (one collect instead of ~2 jobs per label-propagation round).
-    * The dup-pair edge set is tiny relative to the corpus, but at 10^12-doc
-    * scale it still exceeds any driver, so the distributed loop is the
-    * default beyond the threshold. 2M edges = 32 MB collected. */
+    * driver (one collect instead of one job per round). The dup-pair edge
+    * set is tiny relative to the corpus, but at 10^12-doc scale it still
+    * exceeds any driver, so the distributed loop is the default beyond the
+    * threshold. 2M edges = 32 MB collected. */
   final val LocalEdgeThreshold = 2_000_000L
 
-  /** Iterations executed by the most recent `run` on this JVM (diagnostic /
-    * test hook for durable resume; not part of the result contract). */
-  @volatile var lastRunIterations: Int = 0
+  private final val EdgeSchema = "lo BIGINT, hi BIGINT"
 
-  /** edges: two LongType columns (src, dst), undirected, self-loops ok.
-    * Returns (id, cluster_id) for every node that appears in an edge.
+  /** edges: two LongType columns (src, dst), undirected, self-loops and
+    * repeats ok. Returns (id, cluster_id) for every node that appears in an
+    * edge. The distributed path stops at the first round whose large-star
+    * input is already a star forest, which takes O(log² n) rounds for n
+    * nodes; there is no round bound to exceed.
     *
-    * `durableDir`: when set, the distributed loop commits its label table
-    * after every iteration (atomic manifest rename, keyed by a hash of the
-    * edge set) and a restarted run RESUMES from the last committed labels
-    * instead of from scratch — executor/driver loss on a long job costs one
-    * iteration, not the whole propagation. Correctness of resume: min-label
-    * propagation is monotone (labels only decrease, always to the id of a
-    * node in the same component), so the fixpoint from any committed
-    * intermediate state equals the from-scratch fixpoint. State written
-    * under a different edge set is ignored (edge-hash mismatch). */
-  def run(spark: SparkSession, edges: DataFrame, maxIter: Int,
+    * `durableDir`: when set, every round commits its edge table (atomic
+    * manifest rename, keyed by a hash of the input edge set) and a
+    * restarted run continues from the last committed round instead of from
+    * scratch, so executor/driver loss on a long job costs one round. Every
+    * committed edge table has the input's components, so the star forest
+    * reached from it is the one reached from scratch. State written under a
+    * different edge set is ignored (edge-hash mismatch).
+    *
+    * `crashAfterRounds` is a test hook: the run dies before starting its
+    * (crashAfterRounds+1)-th round, so resume is exercisable mid-loop. */
+  def run(spark: SparkSession, edges: DataFrame,
       localThreshold: Long = LocalEdgeThreshold,
-      durableDir: Option[String] = None): DataFrame = {
+      durableDir: Option[String] = None,
+      crashAfterRounds: Int = Int.MaxValue): DataFrame = {
     import spark.implicits._
     val e = edges.toDF("src", "dst").where($"src" =!= $"dst")
 
@@ -58,7 +71,7 @@ object ConnectedComponents {
     // stage, materializes here at full width; a limit+collect probe would
     // let CollectLimit's progressive partition scan serialize it), then a
     // cheap collect from cache. Union-find needs neither dedup nor
-    // symmetrization, so the old distinct shuffle is gone entirely.
+    // normalization.
     val cached = e.localCheckpoint(false)
     val nEdges = cached.count()
     if (nEdges == 0) return spark.emptyDataset[(Long, Long)].toDF("id", "cluster_id")
@@ -66,96 +79,68 @@ object ConnectedComponents {
       return runLocal(spark, cached.as[(Long, Long)].collect())
     }
 
-    val sym = cached.union(cached.select($"dst".as("src"), $"src".as("dst")))
-      .distinct()
-      .localCheckpoint(true)
-
-    // Durable-resume bookkeeping: labels keyed by an order-independent hash
-    // of the (symmetrized) edge set, committed per iteration via atomic
-    // manifest rename. XOR aggregation — no ANSI sum-overflow hazard.
+    val input = cached.select(least($"src", $"dst").as("lo"), greatest($"src", $"dst").as("hi"))
+    // Durable-resume key: an order-independent hash of the distinct edge
+    // set. XOR aggregation — no ANSI sum-overflow hazard; distinct first,
+    // or a repeated edge would cancel itself out of the hash.
     val durable = durableDir.map { dir =>
-      val row = sym.agg(
-        bit_xor(xxhash64($"src", $"dst")), count(lit(1))).head()
-      new DurableLabels(dir, f"${row.getLong(0)}%016x-${row.getLong(1)}")
+      val row = input.distinct().agg(bit_xor(xxhash64($"lo", $"hi")), count(lit(1))).head()
+      new DurableEdges(dir, f"${row.getLong(0)}%016x-${row.getLong(1)}")
     }
 
-    var startIter = 0
-    var labels = durable.flatMap(_.load(spark)) match {
-      case Some((df, k)) =>
-        startIter = k
-        df.localCheckpoint(true)
-      case None =>
-        sym.select($"src".as("id")).distinct()
-          .withColumn("label", $"id")
-          .localCheckpoint(true)
-    }
-
-    var iter = startIter
-    var executed = 0
-    var converged = false
-    // Resume needs at least ONE verification iteration beyond the committed
-    // k: the converged final commit lands at exactly k == maxIter when the
-    // run used its full bound, and a driver kill between that commit and
-    // run()'s return would otherwise resume straight into the unconverged
-    // throw below despite holding the correct fixpoint. Monotone propagation
-    // makes the extra iteration harmless (a converged state observes 0
-    // changes and exits); a genuinely unconverged resume still throws.
-    val iterBound = if (startIter > 0) math.max(maxIter, startIter + 1) else maxIter
-    while (!converged && iter < iterBound) {
-      val msgs = sym.join(labels, sym("src") === labels("id"))
-        .select(sym("dst").as("id"), labels("label").as("cand"), lit(false).as("own"))
-      val unioned = msgs.union(
-        labels.select($"id", $"label".as("cand"), lit(true).as("own")))
-      val agg = unioned
-        .groupBy("id")
-        .agg(min($"cand").as("label"),
-          min(when($"own", $"cand")).as("old_label"))
-      val obs = Observation(s"cc_iter_${System.identityHashCode(agg)}_$iter")
-      val observed = agg.observe(obs,
-        sum(when($"label" =!= $"old_label", 1L).otherwise(0L)).as("changed"))
-        .select($"id", $"label")
-      val next = durable match {
-        case Some(d) => d.commit(observed, iter + 1) // durable write IS the lineage cut
-        case None    => observed.localCheckpoint(true) // eager: runs the one job
+    var (forest, round) = durable.flatMap(_.load(spark)).getOrElse((input, 0))
+    var settled = false
+    var ran = 0
+    while (!settled) {
+      if (ran >= crashAfterRounds)
+        throw new RuntimeException(s"injected crash before CC round ${round + 1}")
+      val obs = Observation()
+      val next = largeStar(smallStar(forest), obs)
+      forest = durable match {
+        case Some(d) => d.commit(next, round + 1) // durable write IS the lineage cut
+        case None    => next.localCheckpoint(true) // eager: runs the one job
       }
-      val changed = obs.get.get("changed") match {
-        case Some(n: Long) => n
-        case _             => 0L
-      }
-      labels = next
-      converged = changed == 0L
-      iter += 1
-      executed += 1
+      settled = obs.get.get("unsettled").contains(0L)
+      round += 1
+      ran += 1
     }
-    lastRunIterations = executed
-    // maxIter is a SAFETY bound, not an answer: min-label propagation moves
-    // a component's minimum one hop per iteration, so a component of
-    // diameter > maxIter would exit here unconverged — silently returning
-    // it would split one real cluster into several (under-merged dedup,
-    // undetectable downstream). Fail loudly instead; dup graphs converge in
-    // 2-4 iterations, so hitting this means the graph shape (e.g. a long
-    // chain of sliding-window near-dups) genuinely needs a larger
-    // cfg.maxCcIterations.
-    if (!converged)
-      throw new IllegalStateException(
-        s"connected components did not converge within maxIter=$maxIter " +
-          "(component diameter exceeds the iteration bound) - raise maxCcIterations; " +
-          "returning partial labels would silently split clusters")
-    labels.select($"id", $"label".as("cluster_id"))
+    forest.select($"hi".as("id"), $"lo".as("cluster_id"))
+      .union(forest.select($"lo".as("id"), $"lo".as("cluster_id")).distinct())
   }
 
-  /** Per-iteration durable label store: `<dir>/labels-iter<k>` parquet plus
-    * a `_cc_manifest.json` record (`FsOps.writeRecord`: atomic rename)
-    * holding (edge_hash, iter).
+  /** Each node u with smaller neighbours N: u and every member of N are
+    * linked to min(N) instead. */
+  private def smallStar(edges: DataFrame): DataFrame =
+    edges.groupBy(col("hi").as("u")).agg(collect_set(col("lo")).as("n"))
+      .select(array_min(col("n")).as("lo"), explode(array_union(col("n"), array(col("u")))).as("hi"))
+      .where(col("hi") =!= col("lo"))
+
+  /** Each node u's larger neighbours are linked to the least of u and all
+    * its neighbours instead. `obs` counts the nodes of the input that break
+    * the star-forest shape (a node with a smaller neighbour and a second
+    * neighbour); at 0 the output equals the input. */
+  private def largeStar(edges: DataFrame, obs: Observation): DataFrame = {
+    val (u, n) = (col("u"), col("n"))
+    edges.select(col("lo").as("u"), col("hi").as("v"))
+      .union(edges.select(col("hi").as("u"), col("lo").as("v")))
+      .groupBy(u).agg(collect_set(col("v")).as("n"))
+      .observe(obs, count_if(array_min(n) < u && size(n) > 1).as("unsettled"))
+      .select(least(u, array_min(n)).as("lo"), explode(filter(n, (v: Column) => v > u)).as("hi"))
+  }
+
+  /** Per-round durable edge store: `<dir>/edges-round<k>` parquet plus a
+    * `_cc_manifest.json` record (`FsOps.writeRecord`: atomic rename)
+    * holding (edge_hash, iter = rounds done).
     * The manifest only ever points at a fully-written snapshot; state under
     * a different edgeHash is ignored and overwritten. All filesystem ops go
     * through [[graft.checkpoint.FsOps]], so `dir` may live on any Hadoop
     * filesystem (shared hdfs:// on a cluster, file:// in the sandbox). */
-  private final class DurableLabels(dir: String, edgeHash: String) {
+  private final class DurableEdges(dir: String, edgeHash: String) {
     import org.apache.hadoop.fs.Path
     import graft.checkpoint.FsOps
     private val root = new Path(dir)
     private val manifest = new Path(root, "_cc_manifest.json")
+    private def payload(round: Int) = new Path(root, s"edges-round$round")
 
     def load(spark: SparkSession): Option[(DataFrame, Int)] = {
       val conf = spark.sparkContext.hadoopConfiguration
@@ -163,37 +148,36 @@ object ConnectedComponents {
         case Some(h) if h == edgeHash =>
           for {
             k <- kv.get("iter").map(_.toInt)
-            p = new Path(root, s"labels-iter$k") if FsOps.exists(conf, p)
-          } yield (spark.read.parquet(p.toString), k)
+            p = payload(k) if FsOps.exists(conf, p)
+          } yield (spark.read.schema(EdgeSchema).parquet(p.toString), k)
         case _ =>
-          // Labels committed under a DIFFERENT edge set are useless to this
+          // Edges committed under a DIFFERENT input are useless to this
           // run and would otherwise accumulate forever (every edge-set
-          // change strands its label dirs): clear the whole store and start
+          // change strands its round dirs): clear the whole store and start
           // fresh.
           FsOps.deleteRecursive(conf, root)
           None
       })
     }
 
-    def commit(labels: DataFrame, iter: Int): DataFrame = {
-      val conf = labels.sparkSession.sparkContext.hadoopConfiguration
+    def commit(edges: DataFrame, round: Int): DataFrame = {
+      val spark = edges.sparkSession
+      val conf = spark.sparkContext.hadoopConfiguration
       FsOps.mkdirs(conf, root)
-      val p = new Path(root, s"labels-iter$iter")
-      labels.write.mode("overwrite").parquet(p.toString)
-      FsOps.writeRecord(conf, manifest, Seq("edge_hash" -> edgeHash, "iter" -> iter))
-      // GC: once the manifest points at iter k, every OTHER labels-iter*
-      // dir is unreachable by any resume — sweep them all (not just k-1:
-      // a crash between a past manifest rename and its GC would otherwise
-      // strand that iteration's dir forever, since later commits would only
-      // ever delete their own predecessor). GC failure must never abort a
-      // commit whose manifest already landed; a dir that resists deletion
-      // is re-swept by the next commit (FsOps.deleteRecursive is
-      // best-effort by contract).
-      FsOps.listDirs(conf, root)
-        .filter(d => d.getName.startsWith("labels-iter") && d.getName != p.getName)
+      val p = payload(round)
+      edges.write.mode("overwrite").parquet(p.toString)
+      FsOps.writeRecord(conf, manifest, Seq("edge_hash" -> edgeHash, "iter" -> round))
+      // GC: once the manifest points at round k, every OTHER dir is
+      // unreachable by any resume — earlier rounds, a dir stranded by a
+      // crash between a past manifest rename and its GC, and a store of an
+      // older layout (whose payload is never read as edges). GC failure
+      // must never abort a commit whose manifest already landed; a dir that
+      // resists deletion is re-swept by the next commit
+      // (FsOps.deleteRecursive is best-effort by contract).
+      FsOps.listDirs(conf, root).filter(_.getName != p.getName)
         .foreach(FsOps.deleteRecursive(conf, _))
       // the written schema, so the read-back runs no schema-inference job
-      labels.sparkSession.read.schema(labels.schema.toNullable).parquet(p.toString)
+      spark.read.schema(EdgeSchema).parquet(p.toString)
     }
   }
 

@@ -63,9 +63,6 @@ final case class GraftConfig(
       * unless set (analog of --show-fully-hardlinked, options.rs:55-58). */
     showFullyExact: Boolean = true,
     seed: Long = 42L,
-    /** Max connected-components iterations (safety bound; convergence is
-      * detected by delta=0 well before this on dup graphs). */
-    maxCcIterations: Int = 25,
     /** Partition count for the ST3 verify mapPartitions (0 = 2x default
       * parallelism). Verify is CPU-bound with tiny row bytes, so AQE's
       * bytes-targeted coalescing would serialize it — parallelism must be
@@ -78,7 +75,7 @@ final case class GraftConfig(
     verifySalt: Int = 16,
     /** Edge-count threshold below which ST4 connected components run as
       * driver-side union-find (one collect) instead of the distributed
-      * label-propagation loop. Defaults to
+      * large-star/small-star loop. Defaults to
       * ConnectedComponents.LocalEdgeThreshold (2M edges = 32 MB collected);
       * tests lower it to exercise the distributed/durable path on small
       * graphs. */

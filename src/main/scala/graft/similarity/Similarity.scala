@@ -309,7 +309,7 @@ object Similarity {
       .join(units.withColumnRenamed("id", "id_b").withColumnRenamed("unit", "unit_b"), "id_b")
       .where(dotProduct(col("unit_a"), col("unit_b")) >= minCos)
       .select("id_a", "id_b")
-    ConnectedComponents.run(spark, edges, maxIter = 25)
+    ConnectedComponents.run(spark, edges)
       .select(col("id").as(idCol), col("cluster_id"))
   }
 }

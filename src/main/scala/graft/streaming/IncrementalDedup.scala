@@ -447,8 +447,8 @@ object IncrementalDedup {
     // No distinct: that was a full shuffle of the accumulated edge HISTORY
     // every batch (O(state), violating the per-batch bound). Every consumer
     // is duplicate-insensitive — the semi-joins below, and CC (union-find
-    // ignores repeats; the distributed loop distincts its symmetrized set)
-    // — and compaction dedups the table durably.
+    // ignores repeats; the distributed loop collects neighbour sets) — and
+    // compaction dedups the table durably.
     val edgesState = FsOps.readParquet(spark, dirs.edges).localCheckpoint(false)
     val newlyLive = winners.select("node_id")
       .join(prevC.select("node_id"), Seq("node_id"), "left_anti")
@@ -486,7 +486,7 @@ object IncrementalDedup {
       .join(liveAffA, Seq("id_a"), "left_semi")
       .join(liveAffA.select(col("id_a").as("id_b")), Seq("id_b"), "left_semi")
 
-    val cc = graft.cluster.ConnectedComponents.run(spark, affEdges, cfg.maxCcIterations,
+    val cc = graft.cluster.ConnectedComponents.run(spark, affEdges,
       localThreshold = cfg.ccLocalThreshold)
     val newAff = labeled(affResolved, cc)
 
@@ -545,7 +545,7 @@ object IncrementalDedup {
        else spark.emptyDataFrame.select(lit(0L).as("id_a"), lit(0L).as("id_b")).limit(0))
         .join(liveA, Seq("id_a"), "left_semi")
         .join(liveA.select(col("id_a").as("id_b")), Seq("id_b"), "left_semi")
-    val cc = graft.cluster.ConnectedComponents.run(spark, liveEdges, cfg.maxCcIterations,
+    val cc = graft.cluster.ConnectedComponents.run(spark, liveEdges,
       localThreshold = cfg.ccLocalThreshold)
     replaceTable(labeled(resolved, cc), dirs.clusters)
   }

@@ -240,6 +240,13 @@ class PipelineSpec extends SparkSpec {
       urls == Seq("https://ex/h", "https://ex/i", "https://ex/j") && red == 10 })
   }
 
+  test("a 40-page edit chain is one cluster on the distributed CC path") {
+    // one path through all 40 pages: the longest diameter 40 pages can have
+    val r = Pipeline.run(spark, EditChain.pages(spark, 40), GraftConfig(ccLocalThreshold = 0L))
+    val chain = assignment(r.report)
+    assert(chain.size == 40 && chain.values.toSet.size == 1, s"clusters: ${chain.values.toSet}")
+  }
+
   test("mixed cluster reports exact subgroups (unit type 6)") {
     // unit 6: base + exact copy + near copy -> one cluster, 2 exact subgroups
     val u6 = result.report.where(col("url").rlike("/u6/")).collect()

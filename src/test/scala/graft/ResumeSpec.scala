@@ -183,57 +183,65 @@ class ResumeSpec extends SparkSpec {
 
   test("ST4 resumes connected components mid-propagation under a durable IO") {
     import org.apache.spark.sql.functions.col
-    val root = Files.createTempDirectory("graft-cc-resume").toString
-    // force the distributed CC path so per-iteration durable commits engage
+    // force the distributed CC path so per-round durable commits engage;
+    // the edit chain's path takes several rounds
     val ccCfg = cfg.copy(ccLocalThreshold = 0L)
-    val pages = PagesGen.pages(spark, spec)
-    val io = new ParquetSnapshotIO(root, ccCfg.configHash)
-    assert(io.ccDurableDir.isDefined)
+    val pages = PagesGen.pages(spark, spec).unionByName(EditChain.pages(spark, 40))
 
-    // simulate a run killed BETWEEN CC iterations: stages st0..st3 committed,
-    // then one CC iteration committed to the durable label store, then death
-    // (st4 never committed)
-    val extracted = Pipeline.extract(pages, ccCfg)
-    val (committedExtracted, _) = io.commit(extracted, "st0_extracted")
-    val (sigs, _) = io.commit(
-      Pipeline.signatures(Pipeline.distinctContents(committedExtracted), ccCfg), "st1_signatures")
-    val (cands, _) = io.commit(Pipeline.candidatePairs(sigs, ccCfg).pairs, "st2_candidates")
-    val (verified, _) = io.commit(
-      Pipeline.verifyPairs(cands, Pipeline.distinctContents(committedExtracted), ccCfg), "st3_verified")
-    val edges = verified.where(col("passed")).select("id_a", "id_b")
-    // maxIter exhaustion now THROWS (silent partial labels would split
-    // clusters) — but the iteration it ran is already durably committed,
-    // which is exactly the mid-propagation death this test simulates.
-    intercept[IllegalStateException] {
-      graft.cluster.ConnectedComponents.run(spark, edges, maxIter = 1,
-        localThreshold = 0L, durableDir = io.ccDurableDir)
+    // stages st0..st3 committed under a fresh root; returns ST4's edges
+    def committedThroughSt3(io: ParquetSnapshotIO) = {
+      val extracted = Pipeline.extract(pages, ccCfg)
+      val (committedExtracted, _) = io.commit(extracted, "st0_extracted")
+      val (sigs, _) = io.commit(
+        Pipeline.signatures(Pipeline.distinctContents(committedExtracted), ccCfg), "st1_signatures")
+      val (cands, _) = io.commit(Pipeline.candidatePairs(sigs, ccCfg).pairs, "st2_candidates")
+      val (verified, _) = io.commit(
+        Pipeline.verifyPairs(cands, Pipeline.distinctContents(committedExtracted), ccCfg), "st3_verified")
+      verified.where(col("passed")).select("id_a", "id_b")
     }
-    assert(graft.cluster.ConnectedComponents.lastRunIterations == 1)
-    // how many iterations a from-scratch propagation needs on this graph
-    graft.cluster.ConnectedComponents.run(spark, edges, maxIter = 50, localThreshold = 0L)
-    val scratchIters = graft.cluster.ConnectedComponents.lastRunIterations
-    assert(scratchIters >= 2)
+    def newIo(prefix: String) =
+      new ParquetSnapshotIO(Files.createTempDirectory(prefix).toString, ccCfg.configHash)
 
-    // the restarted pipeline run must pick up the committed iteration
-    val r = Pipeline.run(spark, pages, ccCfg, io)
-    val rep = r.report.collect().map(_.toString).sorted
-    assert(graft.cluster.ConnectedComponents.lastRunIterations < scratchIters,
-      s"ST4 did not resume from durable CC state: ${graft.cluster.ConnectedComponents.lastRunIterations}")
+    // simulate a run killed BETWEEN CC rounds: stages st0..st3 committed,
+    // then one CC round committed to the durable edge store, then death
+    // (st4 never committed)
+    val io = newIo("graft-cc-resume")
+    assert(io.ccDurableDir.isDefined)
+    val edges = committedThroughSt3(io)
+    val crash = intercept[RuntimeException] {
+      graft.cluster.ConnectedComponents.run(spark, edges,
+        localThreshold = 0L, durableDir = io.ccDurableDir, crashAfterRounds = 1)
+    }
+    assert(crash.getMessage.contains("injected crash"))
 
-    // and the resumed result is identical to a from-scratch run
-    val fresh = Pipeline.run(spark, pages, cfg.copy(ccLocalThreshold = 0L))
-      .report.collect().map(_.toString).sorted
+    // the same killed-before-ST4 state with no CC round committed
+    val freshIo = newIo("graft-cc-fresh")
+    committedThroughSt3(freshIo)
+
+    // the restarted pipeline run must pick up the committed round: it
+    // starts fewer Spark jobs than the run whose CC starts from scratch
+    def report(i: ParquetSnapshotIO) =
+      Pipeline.run(spark, pages, ccCfg, i).report.collect().map(_.toString).sorted
+    val (rep, resumedJobs) = countingJobs(report(io))
+    val (fresh, freshJobs) = countingJobs(report(freshIo))
+    assert(resumedJobs < freshJobs,
+      s"ST4 did not resume from durable CC state: $resumedJobs jobs vs $freshJobs fresh")
+
+    // and the resumed result is identical to a from-scratch run, on either
+    // CC path
     assert(rep.sameElements(fresh))
+    assert(rep.sameElements(Pipeline.run(spark, pages, cfg).report.collect().map(_.toString).sorted))
   }
 
   test("stale CC label stores are swept: other config hashes and stranded iteration dirs") {
     import java.nio.file.Paths
     val root = Files.createTempDirectory("graft-cc-sweep").toString
     val pages = PagesGen.pages(spark, spec)
-    val cfgA = cfg.copy(ccLocalThreshold = 0L) // distributed CC -> durable label commits
+    val cfgA = cfg.copy(ccLocalThreshold = 0L) // distributed CC -> durable edge commits
     val ioA = new ParquetSnapshotIO(root, cfgA.configHash)
-    // a stranded label dir (crash between a past manifest rename and its GC,
-    // manifest long gone): the first commit of any run must sweep it
+    // a stranded dir (a label table of an older store layout, or a crash
+    // between a past manifest rename and its GC, manifest long gone): the
+    // first commit of any run must sweep it
     val stranded = Paths.get(root, "st4_cc", cfgA.configHash, "labels-iter99")
     Files.createDirectories(stranded)
     Files.write(stranded.resolve("junk"), Array[Byte](1))
@@ -243,8 +251,8 @@ class ResumeSpec extends SparkSpec {
     assert(!Files.exists(stranded), "stranded labels-iter dir survived a commit")
     import scala.jdk.CollectionConverters._
     assert(Files.list(storeA).iterator().asScala
-      .count(_.getFileName.toString.startsWith("labels-iter")) == 1,
-      "more than one labels-iter dir retained after convergence")
+      .count(_.getFileName.toString.startsWith("edges-round")) == 1,
+      "more than one edges-round dir retained after convergence")
 
     // a config change makes A's labels unresumable: B's run sweeps the
     // whole sibling store instead of stranding one dir per config change
