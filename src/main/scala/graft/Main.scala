@@ -159,10 +159,7 @@ object Main {
     try os.write(metricsJson.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally os.close()
 
-    // rows_out is -1 under in-memory IO (no durable count); omit it there
-    val stageSummary = metrics
-      .map(m => m.stage + (if (m.rows_out >= 0) s"=${m.rows_out}" else ""))
-      .mkString(" ")
+    val stageSummary = metrics.map(m => s"${m.stage}=${m.rows_out}").mkString(" ")
     println(s"[graft] done: $stageSummary -> $out")
   }
 }

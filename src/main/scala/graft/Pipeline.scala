@@ -172,7 +172,7 @@ object Pipeline {
     * those only when metrics are read). Returns the pair table plus a lazy
     * BandStats thunk riding on the cached census. */
   def candidatePairs(sigs: DataFrame, cfg: GraftConfig): Candidates =
-    bandedPairs(bandKeys(sigs, cfg), cfg)
+    bandedPairs(bandKeys(sigs, cfg), cfg.maxBandGroup, cfg.hotBandCap)
 
   /** All (node_id, band_key) rows this config's candidate generators join
     * on: the MinHash band hashes (already seeded by band index, so the hash
@@ -192,13 +192,17 @@ object Pipeline {
 
   /** Census + salting + within-group pair generation over any
     * (node_id, band_key) table — shared by ST2 (`candidatePairs`, over
-    * `bandKeys`) and the incremental mode's one candidate pass
-    * (`IncrementalDedup.crossBatchCandidates`).
+    * `bandKeys`), the incremental mode's one candidate pass
+    * (`IncrementalDedup.crossBatchCandidates`) and the vector tier's
+    * sign-LSH buckets (`Similarity.candidatePairs`).
+    *
+    * `hotCap` is the largest group that is salted rather than dropped; at
+    * `maxBandGroup` every hot group is dropped (pure stop-band semantics).
     *
     * When `bands` carries a boolean `is_new` column (the incremental pass),
     * only pairs with a new endpoint are emitted, as (id_a, id_b, stored_id):
     * `stored_id` is the endpoint that is not new, null when both are. */
-  private[graft] def bandedPairs(bands: DataFrame, cfg: GraftConfig): Candidates = {
+  private[graft] def bandedPairs(bands: DataFrame, maxBandGroup: Int, hotCap: Int): Candidates = {
     // Hot-band census (one partial-agg shuffle), kept distributed. Lazily
     // checkpointed: the pair job materializes it once for the join below,
     // and the stats thunk then reads the cached partitions.
@@ -211,9 +215,8 @@ object Pipeline {
     // the lineage cut is what keeps the pair plan's CI-gated single-pass
     // shape (PlanSpec: exactly one band-key explode — a cached census would
     // re-print its explode subtree inside the pair plan).
-    val hotCap = if (cfg.saltHotBands) cfg.hardMaxBandGroup.toLong else cfg.maxBandGroup.toLong
     val hotCounts = bands.groupBy("band_key").count()
-      .where(col("count") > cfg.maxBandGroup)
+      .where(col("count") > maxBandGroup)
       .localCheckpoint(false)
 
     // ONE pass over the band-key table — at web scale it is the largest
@@ -230,7 +233,7 @@ object Pipeline {
     //    O(size * maxBandGroup), not O(size^2), at the cost of partial
     //    in-band recall (counted honestly in BandStats);
     //  - over-cap bands (> hotCap) are dropped (boilerplate stop-band).
-    val maxGroup = cfg.maxBandGroup.toLong
+    val maxGroup = maxBandGroup.toLong
     val classified = bands
       .join(hotCounts, Seq("band_key"), "left")
       .where(col("count").isNull || col("count") <= hotCap)
@@ -330,7 +333,7 @@ object Pipeline {
   ): DataFrame = {
     val spark = candidates.sparkSession
     import spark.implicits._
-    val joined = verifyInput(candidates, contents, cfg)
+    val joined = verifyInput(candidates, contents)
 
     val k = cfg.shingleK
     val minJ = cfg.minJaccard
@@ -398,17 +401,17 @@ object Pipeline {
   }
 
   /** The partitioned verify input. CPU-bound stage with tiny row bytes:
-    * force core-proportional parallelism (AQE's bytes-targeted coalescing
-    * would serialize it). The repartition key is (id_a, id_b mod
-    * verifySalt): id_a alone co-locates each left text's pairs for the
-    * shingle memo, but a hub content pairing with 10^5 others would land its
-    * whole CPU-bound workload in one partition — the salt bounds any one
-    * content's share to ~1/verifySalt of its pairs while keeping most memo
-    * locality (each partition still sees runs of the same id_a). */
+    * force core-proportional parallelism, 2 x default parallelism (AQE's
+    * bytes-targeted coalescing would serialize it, SURVEY.md §4.3). The
+    * repartition key is (id_a, id_b mod 16): id_a alone co-locates each
+    * left text's pairs for the shingle memo, but a hub content pairing with
+    * 10^5 others would land its whole CPU-bound workload in one partition —
+    * the salt bounds any one content's share to ~1/16 of its pairs while
+    * keeping most memo locality (each partition still sees runs of the same
+    * id_a). */
   private[graft] def verifyInput(
       candidates: DataFrame,
-      contents: DataFrame,
-      cfg: GraftConfig
+      contents: DataFrame
   ): Dataset[(Long, Long, String, String)] = {
     val spark = candidates.sparkSession
     import spark.implicits._
@@ -429,14 +432,12 @@ object Pipeline {
     val need = contents.join(ids, Seq("node_id"), "left_semi")
     val a = need.select(col("node_id").as("id_a"), col("text").as("text_a"))
     val b = need.select(col("node_id").as("id_b"), col("text").as("text_b"))
-    val nPart =
-      if (cfg.verifyPartitions > 0) cfg.verifyPartitions
-      else spark.sparkContext.defaultParallelism * 2
     candidates
       .join(a, "id_a")
       .join(b, "id_b")
       .select("id_a", "id_b", "text_a", "text_b")
-      .repartition(nPart, col("id_a"), pmod(col("id_b"), lit(cfg.verifySalt.toLong)))
+      .repartition(spark.sparkContext.defaultParallelism * 2,
+        col("id_a"), pmod(col("id_b"), lit(16L)))
       .as[(Long, Long, String, String)]
   }
 
@@ -521,15 +522,13 @@ object Pipeline {
     * /root/reference/src/duplicate_group.rs:21-25,143-146): outer array =
     * exact subgroups (distinct contents), inner = urls of identical text. */
   def reportNested(clusters: DataFrame): DataFrame = {
+    // redundant_bytes is ST4's per-cluster A5 figure, constant within a
+    // cluster, so it rides along as a grouping key
     clusters
-      .groupBy("cluster_id", "node_id")
-      .agg(sort_array(collect_list(col("url"))).as("urls"),
-        first(col("n_bytes")).as("sub_bytes"),
-        count(lit(1)).as("sub_count"))
-      .groupBy("cluster_id")
-      .agg(
-        sort_array(collect_list(col("urls"))).as("duplicates"),
-        (sum(col("sub_bytes") * col("sub_count")) - max(col("sub_bytes"))).cast("long").as("redundant_bytes_ub"))
+      .groupBy("cluster_id", "redundant_bytes", "node_id")
+      .agg(sort_array(collect_list(col("url"))).as("urls"))
+      .groupBy("cluster_id", "redundant_bytes")
+      .agg(sort_array(collect_list(col("urls"))).as("duplicates"))
       .orderBy("cluster_id")
   }
 
@@ -543,9 +542,7 @@ object Pipeline {
     val spark = clusters.sparkSession
     import spark.implicits._
     reportNested(clusters)
-      .select(to_json(struct(
-        col("duplicates"),
-        col("redundant_bytes_ub").as("redundant_bytes"))))
+      .select(to_json(struct(col("duplicates"), col("redundant_bytes"))))
       .as[String]
   }
 
@@ -635,9 +632,8 @@ object Pipeline {
       case Some(f) =>
         val s = f()
         base.map {
-          // No wall_ms condition: bandStats is Some only when ST2 was
-          // COMPUTED this run (a loaded stage never assigns it), and an
-          // in-memory commit's plan construction can round to 0 ms.
+          // bandStats is Some only when ST2 was COMPUTED this run (a
+          // loaded stage never assigns it).
           case m if m.stage == "st2_candidates" =>
             m.copy(dropped_by_guard = s.droppedBandGroups,
               salted_groups = s.saltedBandGroups, salted_members = s.saltedMembers)

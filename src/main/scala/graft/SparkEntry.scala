@@ -166,7 +166,7 @@ object SparkEntry {
           col("cluster_key"),
           array_join(array_sort(transform(col("duplicates"), a => array_join(a, ","))), ";")
             .as("duplicates"),
-          col("redundant_bytes_ub").as("redundant_bytes"))
+          col("redundant_bytes"))
         .orderBy("cluster_key")
     }),
 

@@ -1,7 +1,8 @@
 package graft.checkpoint
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions._
 
 /** Per-stage checkpoint storage with atomic manifest commits (ST* resume).
   *
@@ -59,7 +60,6 @@ object TableIO {
     * Iceberg's to list). */
   def lineageRows(committed: DataFrame, stage: String, configHash: String,
       snapshotId: String): DataFrame = {
-    import org.apache.spark.sql.functions._
     committed
       .groupBy(spark_partition_id().as("partition_id"))
       .agg(count(lit(1)).as("rows_out"))
@@ -208,13 +208,18 @@ final class ParquetSnapshotIO(root: String, configHash: String) extends TableIO 
   }
 }
 
-/** In-memory IO: nothing is durable, but every stage is lazily
-  * local-checkpointed so downstream stages that branch from it (e.g. ST1
-  * signatures and ST3 verify both read ST0) share one materialization
-  * instead of recomputing the lineage per branch — the in-memory analog of
-  * the durable per-stage snapshot. */
+/** In-memory IO: nothing is durable, but every stage is local-checkpointed
+  * so downstream stages that branch from it (e.g. ST1 signatures and ST3
+  * verify both read ST0) share one materialization instead of recomputing
+  * the lineage per branch — the in-memory analog of the durable per-stage
+  * snapshot. The checkpoint is eager, and an `observe` on that same job
+  * counts its rows, so a commit costs one Spark job and the stage metrics
+  * carry the stage's real wall time and row count. */
 object NoCheckpointIO extends TableIO {
   override def load(spark: SparkSession, stage: String): Option[(DataFrame, Manifest)] = None
-  override def commit(df: DataFrame, stage: String): (DataFrame, Manifest) =
-    (df.localCheckpoint(false), Manifest("in-memory", "none", -1L, stage))
+  override def commit(df: DataFrame, stage: String): (DataFrame, Manifest) = {
+    val obs = Observation()
+    val committed = df.observe(obs, count(lit(1)).as("rows")).localCheckpoint(true)
+    (committed, Manifest("in-memory", "none", obs.get("rows").asInstanceOf[Long], stage))
+  }
 }

@@ -63,16 +63,6 @@ final case class GraftConfig(
       * unless set (analog of --show-fully-hardlinked, options.rs:55-58). */
     showFullyExact: Boolean = true,
     seed: Long = 42L,
-    /** Partition count for the ST3 verify mapPartitions (0 = 2x default
-      * parallelism). Verify is CPU-bound with tiny row bytes, so AQE's
-      * bytes-targeted coalescing would serialize it — parallelism must be
-      * proportional to cores, not data size (SURVEY.md §4.3). */
-    verifyPartitions: Int = 0,
-    /** Salt modulus for the ST3 verify repartition key (id_a, id_b mod
-      * verifySalt): bounds a hub content's share of the CPU-bound verify
-      * work to ~1/verifySalt of its pairs while keeping shingle-memo
-      * locality on id_a. 1 = unsalted. */
-    verifySalt: Int = 16,
     /** Edge-count threshold below which ST4 connected components run as
       * driver-side union-find (one collect) instead of the distributed
       * large-star/small-star loop. Defaults to
@@ -115,8 +105,12 @@ final case class GraftConfig(
   require(numPerm % bands == 0, s"numPerm=$numPerm must be divisible by bands=$bands")
   def rowsPerBand: Int = numPerm / bands
 
+  /** Band groups larger than this are dropped: `hardMaxBandGroup` when hot
+    * bands are salted, `maxBandGroup` (every hot band) when they are not. */
+  def hotBandCap: Int = if (saltHotBands) hardMaxBandGroup else maxBandGroup
+
   /** Stable hash of EVERY knob — deliberately including performance-only
-    * ones (partition counts, salt thresholds, iteration bounds) — stamped
+    * ones (salt thresholds, the CC local threshold) — stamped
     * into stage manifests so resume only reuses snapshots computed under
     * the same config (analog of the reference's schema_version gate,
     * file_db.rs:66-77). Conservative by contract (GraftConfigSpec gates

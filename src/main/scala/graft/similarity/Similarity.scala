@@ -1,8 +1,9 @@
 package graft.similarity
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Pipeline
 import graft.cluster.ConnectedComponents
 import graft.functions.EmbeddingFunctions._
 
@@ -15,9 +16,10 @@ import graft.functions.EmbeddingFunctions._
   *    baseline; right answer whenever the corpus side fits in an executor
   *    (dims * rows * 8B). At 100 TB the corpus is the big side: keep the
   *    broadcast on whichever side is small, or go to the bucketed paths.
-  *  - `annTopK` (sign-LSH): random-hyperplane band keys -> bucket self-join.
-  *    Sub-quadratic; recall tuned by (bits, bands); hot buckets capped by
-  *    `maxBucket` exactly like the text tier's stop-band guard.
+  *  - `annTopK` (sign-LSH): random-hyperplane band keys grouped and paired
+  *    by the text tier's own candidate generator (`Pipeline.bandedPairs`).
+  *    Sub-quadratic; recall tuned by (bits, bands); buckets larger than
+  *    `maxBucket` are dropped, the text tier's stop-band guard.
   *  - `ivfTopK`: IVF coarse quantizer — nlist deterministic data-sampled
   *    centroids, corpus assigned to nearest cell (1 shuffle on cell id),
   *    queries probe `nprobe` nearest cells. The scale path: candidate count
@@ -168,52 +170,23 @@ object Similarity {
     else ranked.select("vec_id", "neighbor_id", "sim", "rank")
   }
 
-  /** Distinct candidate pairs (id_a < id_b) from sign-LSH buckets, with the
-    * hot-bucket guard. Returns (pairs, lazy droppedBuckets count). Mirrors
-    * the text tier's ST2 (Pipeline.candidatePairs) on vector band keys: the
-    * census is a JOIN, never a driver collect or an eager count — the hot
-    * set can be large on a boilerplate-rich corpus, and an eager count
-    * would force an extra driver-synchronized job per call. */
+  /** Distinct candidate pairs (id_a < id_b) from sign-LSH buckets: the
+    * vector band keys go through `Pipeline.bandedPairs`, the one banded
+    * candidate generator of the text, SimHash-chunk and incremental tiers,
+    * with both guard bounds at `maxBucket`, so every bucket above it is
+    * dropped and counted in `stats().droppedBandGroups`. */
   def candidatePairs(df: DataFrame, cfg: AnnConfig,
-      idCol: String = "vec_id", vecCol: String = "embedding"): (DataFrame, () => Long) = {
-    val spark = df.sparkSession
-    import spark.implicits._
-
-    val buckets = df.select(
-      col(idCol).as("id"),
-      explode(embeddingBandKeys(col(vecCol), cfg.bits, cfg.bands, cfg.seed)).as("bucket"))
-
-    // lazily checkpointed: the pair job materializes it; the thunk then
-    // counts the cached partitions (AQE broadcasts the anti-join side when
-    // it fits)
-    val hot = buckets.groupBy("bucket").count()
-      .where(col("count") > cfg.maxBucket).select("bucket")
-      .localCheckpoint(false)
-    val cold = buckets.join(hot, Seq("bucket"), "left_anti")
-
-    val pairs = cold
-      .groupBy("bucket")
-      .agg(collect_list(col("id")).as("ids"))
-      .where(size(col("ids")) >= 2)
-      .select(col("ids"))
-      .as[Seq[Long]]
-      .flatMap { ids =>
-        val s = ids.distinct.sorted.toArray
-        for {
-          i <- 0 until s.length - 1
-          j <- i + 1 until s.length
-        } yield (s(i), s(j))
-      }
-      .distinct()
-      .toDF("id_a", "id_b")
-    (pairs, () => hot.count())
-  }
+      idCol: String = "vec_id", vecCol: String = "embedding"): Pipeline.Candidates =
+    Pipeline.bandedPairs(
+      df.select(col(idCol).as("node_id"),
+        explode(embeddingBandKeys(col(vecCol), cfg.bits, cfg.bands, cfg.seed)).as("band_key")),
+      cfg.maxBucket, cfg.maxBucket)
 
   /** Approximate cosine top-k via sign-LSH buckets (both directions of each
     * candidate pair, exact cosine on candidates only). */
   def annTopK(df: DataFrame, k: Int, cfg: AnnConfig = AnnConfig(),
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val (pairs, _) = candidatePairs(df, cfg, idCol, vecCol)
+    val pairs = candidatePairs(df, cfg, idCol, vecCol).pairs
     val sym = pairs.select(col("id_a").as("vec_id"), col("id_b").as("neighbor_id"))
       .union(pairs.select(col("id_b").as("vec_id"), col("id_a").as("neighbor_id")))
 
@@ -301,7 +274,7 @@ object Similarity {
   def nearDupClusters(df: DataFrame, minCos: Double, cfg: AnnConfig = AnnConfig(),
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val spark = df.sparkSession
-    val (pairs, _) = candidatePairs(df, cfg, idCol, vecCol)
+    val pairs = candidatePairs(df, cfg, idCol, vecCol).pairs
     val units = withUnit(df.select(col(idCol).as("id"), col(vecCol)), vecCol)
       .select(col("id"), col("unit"))
     val edges = pairs

@@ -529,7 +529,7 @@ object IncrementalDedup {
     val bands = newBands.select(col("node_id"), col("band_key"), lit(true).as("is_new"))
       .unionByName(stored.select(col("node_id"), col("band_key"), lit(false).as("is_new")))
       .groupBy("node_id", "band_key").agg(max(col("is_new")).as("is_new"))
-    Pipeline.bandedPairs(bands, cfg).pairs
+    Pipeline.bandedPairs(bands, cfg.maxBandGroup, cfg.hotBandCap).pairs
   }
 
   /** Full recluster from ground-truth state (members + edges): latest

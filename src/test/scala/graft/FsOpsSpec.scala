@@ -18,7 +18,7 @@ class NoFcLocalFs extends org.apache.hadoop.fs.RawLocalFileSystem {
 }
 
 /** Unit gates for the Hadoop-FS primitives under every durable store
-  * (ParquetSnapshotIO manifests/GC, CC's per-iteration label store). The
+  * (ParquetSnapshotIO manifests/GC, CC's per-round edge store). The
   * stores' semantics are tested in ResumeSpec/ConnectedComponentsSpec;
   * these pin the primitives' contracts — atomic-overwrite rename, absent-
   * path behavior, cross-scheme equivalence — so a future FS-layer change

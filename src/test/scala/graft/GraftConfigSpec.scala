@@ -31,8 +31,6 @@ class GraftConfigSpec extends AnyFunSuite {
       "excludeUrlRegex" -> base.copy(excludeUrlRegex = Some(".*spam.*")),
       "showFullyExact" -> base.copy(showFullyExact = false),
       "seed" -> base.copy(seed = 43L),
-      "verifyPartitions" -> base.copy(verifyPartitions = 8),
-      "verifySalt" -> base.copy(verifySalt = 4),
       "ccLocalThreshold" -> base.copy(ccLocalThreshold = 0L),
       "incCompactFileThreshold" -> base.copy(incCompactFileThreshold = 8),
       "incRetainTexts" -> base.copy(incRetainTexts = true),

@@ -91,18 +91,28 @@ class PlanSpec extends SparkSpec {
     // fork into an anti-join branch and a join branch that each rescan and
     // regroup it. The census subtree is localCheckpoint'd (LogicalRDD), so
     // exactly one Generate/explode of the band keys may appear in the pair
-    // plan. (range source: a literal Seq could constant-fold.)
+    // plan. The vector tier's sign-LSH buckets run through the same
+    // generator and must keep the same shape. (range source: a literal Seq
+    // could constant-fold.)
     val sigs = spark.range(0, 200).select(
       col("id").as("node_id"),
       array(pmod(col("id"), lit(5L)), pmod(col("id") + 1, lit(7L))).as("band_hashes"))
-    val plan = Pipeline.candidatePairs(sigs, SparkEntry.cfg)
-      .pairs.queryExecution.optimizedPlan.toString
-    val explodes = "Generate explode".r.findAllIn(plan).length
-    assert(explodes == 1,
-      s"expected 1 band-key explode in the pair plan, got $explodes:\n${plan.take(2000)}")
-    val aggs = "Aggregate".r.findAllIn(plan).length
-    assert(aggs <= 2, // collect_list group + (none else); distinct folds into it
-      s"pair plan regroups the band table:\n${plan.take(2000)}")
+    val vecs = spark.range(0, 200).select(
+      col("id").as("vec_id"),
+      array(pmod(col("id"), lit(5L)).cast("float"), lit(1.0f)).as("embedding"))
+    val plans = Seq(
+      "text" -> Pipeline.candidatePairs(sigs, SparkEntry.cfg).pairs,
+      "vector" -> graft.similarity.Similarity.candidatePairs(vecs,
+        graft.similarity.Similarity.AnnConfig(bits = 16, bands = 4)).pairs)
+    for ((tier, pairs) <- plans) {
+      val plan = pairs.queryExecution.optimizedPlan.toString
+      val explodes = "Generate explode".r.findAllIn(plan).length
+      assert(explodes == 1,
+        s"$tier: expected 1 band-key explode in the pair plan, got $explodes:\n${plan.take(2000)}")
+      val aggs = "Aggregate".r.findAllIn(plan).length
+      assert(aggs <= 2, // collect_list group + (none else); distinct folds into it
+        s"$tier: pair plan regroups the band table:\n${plan.take(2000)}")
+    }
   }
 
   test("verify input prunes contents with a semi-join before the wide joins") {
@@ -112,7 +122,7 @@ class PlanSpec extends SparkSpec {
     // shuffling it into the pair joins wholesale
     val candidates = Seq((1L, 2L), (2L, 3L)).toDF("id_a", "id_b")
     val contents = (1L to 100L).map(i => (i, s"t$i")).toDF("node_id", "text")
-    val plan = Pipeline.verifyInput(candidates, contents, SparkEntry.cfg)
+    val plan = Pipeline.verifyInput(candidates, contents)
       .queryExecution.optimizedPlan.toString
     assert(plan.contains("LeftSemi"), s"no semi-join prune in verify input:\n${plan.take(2000)}")
   }
@@ -134,7 +144,7 @@ class PlanSpec extends SparkSpec {
       pmod(col("id"), lit(100L)).as("node_id"),
       lit(3L).as("n_bytes"),
       concat(lit("t"), pmod(col("id"), lit(100L)).cast("string")).as("text"))
-    val plan = Pipeline.verifyInput(candidates, Pipeline.distinctContents(extracted), SparkEntry.cfg)
+    val plan = Pipeline.verifyInput(candidates, Pipeline.distinctContents(extracted))
       .queryExecution.executedPlan match {
         case a: AdaptiveSparkPlanExec => a.initialPlan
         case p => p

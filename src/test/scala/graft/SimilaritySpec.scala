@@ -198,13 +198,13 @@ class SimilaritySpec extends SparkSpec {
     val rows = (0L until 10L).map(i => (i, v)) ++ Seq((100L, neg), (101L, neg))
     val df = rows.toDF("vec_id", "embedding")
     val capped = Similarity.AnnConfig(bits = 256, bands = 32, maxBucket = 5)
-    val (coldPairs, dropped) = Similarity.candidatePairs(df, capped)
-    val got = coldPairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val c = Similarity.candidatePairs(df, capped)
+    val got = c.pairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got == Set((100L, 101L)), s"hot-clique pairs must be dropped, got $got")
-    assert(dropped() >= 1L, "dropped-bucket census must count the hot buckets")
-    val (allPairs, dropped2) = Similarity.candidatePairs(df, Similarity.AnnConfig())
-    assert(allPairs.count() == 45L + 1L, "default cap keeps the full clique")
-    assert(dropped2() == 0L)
+    assert(c.stats().droppedBandGroups >= 1L, "dropped-bucket census must count the hot buckets")
+    val all = Similarity.candidatePairs(df, Similarity.AnnConfig())
+    assert(all.pairs.count() == 45L + 1L, "default cap keeps the full clique")
+    assert(all.stats().droppedBandGroups == 0L)
   }
 
   test("band keys are invariant under repartitioning") {
