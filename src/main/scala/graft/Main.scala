@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-import graft.checkpoint.{NoCheckpointIO, ParquetSnapshotIO, TableIO}
+import graft.checkpoint.{FsOps, NoCheckpointIO, ParquetSnapshotIO, TableIO}
 import graft.model.GraftConfig
 
 /** spark-submit entrypoint — the north rule's deployment surface
@@ -27,6 +27,9 @@ import graft.model.GraftConfig
   *   - `<output>/metrics.json`   per-stage lineage/metrics rows (driver-
   *                               written; one small JSON array; `bytes` is
   *                               the committed snapshot's file bytes)
+  *
+  * The outputs keep the session's parquet codec; only the engine's own
+  * durable tables are always zstd ([[graft.checkpoint.FsOps.writeParquet]]).
   *
   * The session comes from `SparkSession.builder().getOrCreate()` with NO
   * master/partition overrides: on a cluster, spark-submit flags (master,
@@ -122,7 +125,9 @@ object Main {
   def run(spark: SparkSession, args: CliArgs): Unit = {
     val pages = args.table match {
       case Some(t) => spark.read.table(t)
-      case None    => spark.read.parquet(args.input.get)
+      // a flat Spark-written dir reads under its footer schema (no
+      // inference job); other inputs fall back to inference
+      case None    => FsOps.readParquet(spark, args.input.get)
     }
     // The snapshot key folds the INPUT LOCATOR into the config hash:
     // ParquetSnapshotIO reuses any stage committed under the same key, and

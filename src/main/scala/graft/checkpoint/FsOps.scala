@@ -3,6 +3,8 @@ package graft.checkpoint
 import java.nio.charset.StandardCharsets
 import java.util.UUID
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileContext, FileStatus, FileSystem, Options, Path, UnsupportedFileSystemException}
 import org.apache.parquet.hadoop.ParquetFileReader
@@ -10,8 +12,10 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{DataType, StructType}
 
-/** One parquet data file of a committed snapshot (see [[FsOps.parquetFiles]]). */
-private[graft] final case class ParquetFile(rows: Long, bytes: Long)
+/** One parquet data file of a committed snapshot (see [[FsOps.parquetFiles]]):
+  * its rows, its length and the codecs of its column chunks (none for a
+  * file without a row group). */
+private[graft] final case class ParquetFile(rows: Long, bytes: Long, codecs: Set[String])
 
 /** Hadoop-FileSystem primitives shared by every durable store
   * (ParquetSnapshotIO, ConnectedComponents' per-round edge store,
@@ -25,10 +29,11 @@ private[graft] final case class ParquetFile(rows: Long, bytes: Long)
   * scheme-less root now means "the default filesystem" on BOTH sides,
   * which is exactly the shared-FS semantics a cluster needs.
   *
-  * Every store commits through the same two decisions made here: small
+  * Every store commits through the same three decisions made here: small
   * records (manifests, version files, journals) in one flat JSON format,
-  * written by [[writeRecord]] and read by [[readRecord]]; and whole-table
-  * replacement by [[swapDir]], healed by [[recoverSwap]].
+  * written by [[writeRecord]] and read by [[readRecord]]; table data in
+  * zstd parquet, written by [[writeParquet]]; and whole-table replacement
+  * by [[swapDir]], healed by [[recoverSwap]].
   *
   * Atomicity: the record swing uses `FileContext.rename(OVERWRITE)` and
   * [[swapDir]] uses `FileSystem.rename`, both atomic on rename-native
@@ -202,11 +207,14 @@ private[graft] object FsOps {
   }
 
   /** Every data file under a parquet output dir, in name order (which is
-    * write-partition order), with its row count and length. The counts come
-    * from the footers, read on the driver through the dir's Hadoop
+    * write-partition order), with its row count, length and codecs. They
+    * come from the footers, read on the driver through the dir's Hadoop
     * filesystem: a commit learns what it wrote without a Spark job. */
   def parquetFiles(conf: Configuration, dir: Path): Seq[ParquetFile] =
-    dataFiles(conf, dir).map(s => ParquetFile(footer(conf, s)(_.getRecordCount), s.getLen))
+    dataFiles(conf, dir).map(s => footer(conf, s) { r =>
+      ParquetFile(r.getRecordCount, s.getLen,
+        r.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala.map(_.getCodec.name)).toSet)
+    })
 
   /** The parquet table at `dir`, read under the Spark schema that Spark's
     * parquet writer stores in every file footer (taken from the first data
@@ -221,6 +229,15 @@ private[graft] object FsOps {
     }.map(json => DataType.fromJson(json).asInstanceOf[StructType].toNullable)
     schema.fold(spark.read)(spark.read.schema).parquet(dir)
   }
+
+  /** Write `df` as parquet at `path` under save `mode`: the one writer of
+    * every engine-owned durable table (stage snapshots, the CC round store,
+    * incremental state). It always stores zstd, a per-write option, so the
+    * session codec that user outputs follow is left alone. Readers need no
+    * counterpart: parquet records the codec per column chunk, so a table
+    * holding files of an older codec still reads and takes zstd appends. */
+  def writeParquet(df: DataFrame, path: String, mode: String): Unit =
+    df.write.mode(mode).option("compression", "zstd").parquet(path)
 
   /** Best-effort recursive delete (GC sweeps must never abort a commit
     * whose manifest already landed; a resisting dir is re-swept later). */

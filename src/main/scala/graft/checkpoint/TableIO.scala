@@ -14,10 +14,9 @@ import org.apache.spark.sql.functions._
   * under the current config hash", exactly generalizing the reference's
   * `--resume-stage3/4` entry points (/root/reference/src/main.rs:114-119).
   *
-  * The sandbox impl is Parquet + rename-based atomic manifest; on a real
-  * cluster the same interface is backed by Iceberg snapshots (commit =
-  * snapshot, configHash = snapshot property) — all resume semantics live
-  * above this trait.
+  * The durable impl is zstd Parquet ([[FsOps.writeParquet]]) plus a
+  * rename-based atomic manifest on any Hadoop filesystem; all resume
+  * semantics live above this trait.
   */
 trait TableIO {
   /** Committed snapshot for `stage` under `configHash`, if any. */
@@ -40,10 +39,8 @@ trait TableIO {
 }
 
 object TableIO {
-  /** One lineage row of a committed snapshot: the ONE schema of every
-    * durable impl's lineage (ParquetSnapshotIO builds it on read, IcebergIO
-    * writes it), so the metrics stores can never drift apart (north-rule
-    * §7.6). */
+  /** One lineage row of a committed snapshot (built on read by
+    * [[ParquetSnapshotIO.metrics]], north-rule §7.6). */
   final case class LineageRow(
       stage: String,
       snapshot_id: String,
@@ -51,31 +48,12 @@ object TableIO {
       rows_out: Long,
       config_hash: String,
       committed_ms: Long)
-
-  private val lineageColumns =
-    org.apache.spark.sql.Encoders.product[LineageRow].schema.fieldNames.toSeq
-
-  /** Lineage rows derived from a committed table by a Spark job: one row
-    * per read partition of the committed data (IcebergIO, whose files are
-    * Iceberg's to list). */
-  def lineageRows(committed: DataFrame, stage: String, configHash: String,
-      snapshotId: String): DataFrame = {
-    committed
-      .groupBy(spark_partition_id().as("partition_id"))
-      .agg(count(lit(1)).as("rows_out"))
-      .withColumn("stage", lit(stage))
-      .withColumn("snapshot_id", lit(snapshotId))
-      .withColumn("config_hash", lit(configHash))
-      .withColumn("committed_ms", lit(System.currentTimeMillis()))
-      .select(lineageColumns.map(col): _*)
-  }
 }
 
 /** The commit record of one stage snapshot, stored in the [[FsOps]]
   * record format. `bytes` is the snapshot's data-file bytes and
-  * `committedMs` its commit time (0 where unknown: in-memory IO, Iceberg,
-  * and manifests written before the field existed; a 0 time is not
-  * written). */
+  * `committedMs` its commit time (0 where unknown: in-memory IO and
+  * manifests written before the field existed; a 0 time is not written). */
 final case class Manifest(
     snapshotId: String,
     configHash: String,
@@ -185,7 +163,7 @@ final class ParquetSnapshotIO(root: String, configHash: String) extends TableIO 
     val dir = stageDir(stage)
     FsOps.mkdirs(conf, dir)
     val dataPath = new Path(dir, snapshotId)
-    df.write.mode("overwrite").parquet(dataPath.toString) // the commit's one data job
+    FsOps.writeParquet(df, dataPath.toString, "overwrite") // the commit's one data job
 
     // Row count and bytes come from the footers of the files just written
     // (driver-side reads, no Spark job).

@@ -165,7 +165,7 @@ object ConnectedComponents {
       val conf = spark.sparkContext.hadoopConfiguration
       FsOps.mkdirs(conf, root)
       val p = payload(round)
-      edges.write.mode("overwrite").parquet(p.toString)
+      FsOps.writeParquet(edges, p.toString, "overwrite")
       FsOps.writeRecord(conf, manifest, Seq("edge_hash" -> edgeHash, "iter" -> round))
       // GC: once the manifest points at round k, every OTHER dir is
       // unreachable by any resume — earlier rounds, a dir stranded by a
@@ -216,6 +216,7 @@ object ConnectedComponents {
       i += 1
     }
     val rows = (0 until n).map(j => (ids(j), minOf.get(find(j)).longValue()))
-    spark.createDataset(rows).toDF("id", "cluster_id").repartition(spark.sparkContext.defaultParallelism)
+    // a local relation already scans as defaultParallelism slices
+    spark.createDataset(rows).toDF("id", "cluster_id")
   }
 }

@@ -43,8 +43,8 @@ import graft.model.GraftConfig
   * Scale notes: signatures, candidates and verification shuffle and
   * compute O(batch + its candidate pairs): the state band table and the
   * stored signatures are scanned map-side against broadcast batch-sized
-  * key sets (pushdown-friendly parquet; Iceberg at real scale), never
-  * shuffled whole, and hot bands are salted into bounded cells (same
+  * key sets (pushdown-friendly parquet), never shuffled whole, and hot
+  * bands are salted into bounded cells (same
   * policy as batch ST2), so boilerplate bands that accumulate members over
   * months cannot make per-batch work grow with stored-band size. Connected components run
   * only over the components TOUCHED by the batch (new bindings,
@@ -755,16 +755,15 @@ object IncrementalDedup {
     * `<path>.tmp-*` dir and swapped in only once complete — never an
     * in-place overwrite of its own input. [[FsOps.swapDir]] keeps the old or
     * the new table present at every instant; the next batch's
-    * `recoverSwap` heals a crash mid-swap. (Iceberg snapshot commit is the
-    * real-cluster equivalent.) */
+    * `recoverSwap` heals a crash mid-swap. */
   private def replaceTable(df: DataFrame, path: String): Unit = {
     val tmp = s"$path.tmp-${java.util.UUID.randomUUID()}"
-    df.write.parquet(tmp)
+    FsOps.writeParquet(df, tmp, "errorifexists")
     FsOps.swapDir(hconf(df.sparkSession), new Path(tmp), new Path(path))
   }
 
   private def appendParquet(df: DataFrame, path: String): Unit =
-    df.write.mode("append").parquet(path)
+    FsOps.writeParquet(df, path, "append")
 
   /** Start the incremental query on a streaming pages DataFrame. */
   def start(pagesStream: DataFrame, cfg: GraftConfig, stateRoot: String): StreamingQuery = {

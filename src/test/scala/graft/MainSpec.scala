@@ -162,4 +162,18 @@ class MainSpec extends SparkSpec {
     metrics3 should not include "\"wall_ms\":0"
     spark.read.parquet(s"$dir/out3/report").count() should not be report.count()
   }
+
+  test("a fully resumed Main.run on a flat input starts no schema-inference job") {
+    // The input is read under the schema in its first footer, as stage
+    // loads are; an inferring read would make this resume 11 jobs.
+    val dir = Files.createTempDirectory("graft-main-resume-jobs").toString
+    PagesGen.pages(spark, PagesGen.Spec(nUnits = 30)).write.parquet(s"$dir/pages")
+    def argv(out: String) = Main.parse(Seq("--input", s"$dir/pages", "--output", s"$dir/$out",
+      "--checkpoint", s"$dir/ck"))
+    Main.run(spark, argv("out1"))
+    val (_, n) = countingJobs(Main.run(spark, argv("out2")))
+    val metrics = new String(Files.readAllBytes(java.nio.file.Paths.get(s"$dir/out2/metrics.json")))
+    """"wall_ms":(\d+)""".r.findAllMatchIn(metrics).map(_.group(1)).toSet shouldBe Set("0")
+    assert(n <= 10, s"resumed Main.run started $n Spark jobs")
+  }
 }

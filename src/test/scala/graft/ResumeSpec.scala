@@ -7,11 +7,6 @@ import graft.fixtures.PagesGen
 import graft.model.GraftConfig
 import graft.streaming.IncrementalDedup
 
-/** Stand-in for Spark's / Iceberg's NoSuchTableException: top-level so its
-  * BINARY name ends with "NoSuchTableException" exactly like the real ones
-  * (a method-local class would compile to `...$1` and defeat the match). */
-private class TestNoSuchTableException extends RuntimeException("table absent")
-
 /** Checkpoint/resume semantics (SURVEY.md §5.1 item 5): a stage with a
   * committed snapshot under the current config hash is loaded, not
   * recomputed; a config change invalidates all snapshots. */
@@ -298,37 +293,5 @@ class ResumeSpec extends SparkSpec {
       s"stages not resumed under a URI root: ${r2.metrics.filter(_.wall_ms > 0).map(_.stage)}")
     assert(r2.metrics.zip(r2.metrics.drop(1)).forall { case (p, m) => m.rows_in == p.rows_out })
     assert(rep1.sameElements(r2.report.collect().map(_.toString).sorted))
-  }
-
-  test("IcebergIO fail-fasts in the jar-less sandbox (runtime guard, SURVEY §7.4)") {
-    // The thin Iceberg impl compiles against plain Spark API; the sandbox
-    // has no iceberg-spark-runtime jar, so the guard must reject use with
-    // the documented message instead of failing deep inside a format lookup.
-    assert(!graft.checkpoint.IcebergIO.available, "sandbox unexpectedly has Iceberg")
-    val io = new graft.checkpoint.IcebergIO("cat", "graft", cfg.configHash)
-    val e = intercept[IllegalStateException] {
-      io.commit(PagesGen.pages(spark, PagesGen.Spec(nUnits = 1)), "st0_extracted")
-    }
-    assert(e.getMessage.contains("iceberg-spark-runtime"))
-    assert(intercept[IllegalStateException] {
-      io.load(spark, "st0_extracted")
-    }.getMessage.contains("ParquetSnapshotIO"))
-  }
-
-  test("IcebergIO table-absence matcher is specific: table-level only") {
-    import graft.checkpoint.IcebergIO.isTableAbsent
-    // absent TABLE (fresh run, no snapshot yet) -> None paths
-    assert(isTableAbsent(new org.apache.spark.sql.AnalysisException(
-      "TABLE_OR_VIEW_NOT_FOUND", Map("relationName" -> "`cat`.`ns`.`st0`"))))
-    assert(isTableAbsent(new TestNoSuchTableException))
-    assert(isTableAbsent(new RuntimeException("wrapped", new TestNoSuchTableException)))
-    // misconfiguration/infrastructure failures MUST surface, even when the
-    // message superficially says "not found" (the old substring heuristics
-    // mapped these to a silent full recompute)
-    assert(!isTableAbsent(new org.apache.spark.sql.AnalysisException(
-      "CATALOG_NOT_FOUND", Map("catalogName" -> "`cat`", "config" -> "x"))))
-    assert(!isTableAbsent(new org.apache.spark.sql.AnalysisException(
-      "SCHEMA_NOT_FOUND", Map("schemaName" -> "`ns`"))))
-    assert(!isTableAbsent(new RuntimeException("metastore not found / connection refused")))
   }
 }
