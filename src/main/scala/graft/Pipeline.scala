@@ -135,11 +135,10 @@ object Pipeline {
     extracted.select("node_id", "n_bytes", "text").dropDuplicates("node_id")
 
   // ---------------------------------------------------------------- ST1
-  /** One row per distinct text: (node_id, n_bytes, minhash, simhash,
-    * band_hashes). Signature computed exactly once per content (J3).
-    * Input: `distinctContents` output (already deduped by node_id).
-    * `minhash` is read only by the incremental mode's estimate tier; the
-    * batch run commits the table without it. */
+  /** One row per distinct text: (node_id, n_bytes, simhash, band_hashes).
+    * Signature computed exactly once per content (J3). Input:
+    * `distinctContents` output (already deduped by node_id). The MinHash
+    * signature itself is not kept: only its band hashes are read. */
   def signatures(contents: DataFrame, cfg: GraftConfig): DataFrame = {
     contents
       .select("node_id", "n_bytes", "text")
@@ -148,7 +147,6 @@ object Pipeline {
       .select(
         col("node_id"),
         col("n_bytes"),
-        col("sig.minhash").as("minhash"),
         col("sig.simhash").as("simhash"),
         col("sig.band_hashes").as("band_hashes"))
   }
@@ -604,11 +602,9 @@ object Pipeline {
 
     // ST0 holds the only committed copy of the page text: ST1 and ST3 each
     // derive the distinct contents from it inline (ST3's is pruned to the
-    // candidate ids before its dedup shuffle, see verifyInput). ST1
-    // commits without `minhash`, which no batch stage reads.
+    // candidate ids before its dedup shuffle, see verifyInput).
     val extracted = stage("st0_extracted")(extract(pages, cfg))
-    val sigs = stage("st1_signatures")(
-      signatures(distinctContents(extracted), cfg).drop("minhash"))
+    val sigs = stage("st1_signatures")(signatures(distinctContents(extracted), cfg))
 
     var bandStats: Option[() => BandStats] = None
     val candidates = stage("st2_candidates") {

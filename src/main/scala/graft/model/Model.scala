@@ -71,27 +71,15 @@ final case class GraftConfig(
       * graphs. */
     ccLocalThreshold: Long = 2_000_000L,
     /** Incremental-mode state compaction trigger: when any state dir
-      * (members/edges/band_index/signatures) holds more than this many
-      * files after a batch, the dir is rewritten compacted — duplicate
-      * edges merged, member history reduced to the latest binding per url,
-      * and nodes no live url binds GC'd (their signature is recomputed
-      * from the page text if the content ever resurrects). Bounds both
-      * per-batch scan cost and state size on a years-long stream.
+      * (members/edges/band_index/signatures/texts/metrics) holds more than
+      * this many files after a batch, the state is rewritten compacted —
+      * duplicate edges merged, member history reduced to the latest
+      * binding per url, nodes no live url binds GC'd (a content that
+      * resurrects re-enters as new: its page carries the text, and its
+      * signature is recomputed) and the metrics log coalesced. Bounds
+      * both per-batch scan cost and state size on a years-long stream.
       * 0 disables compaction. */
     incCompactFileThreshold: Int = 64,
-    /** Incremental mode: retain each distinct content's TEXT in durable
-      * state so cross-batch candidate pairs get the FULL batch ST3 verify
-      * (exact shingle Jaccard AND SimHash Hamming AND LCS) instead of the
-      * signature-estimate gates — batch/incremental cluster parity at the
-      * cost of state growing with live corpus text bytes (vs signatures
-      * only). Pairs whose stored text is missing (state predating the
-      * toggle, or GC'd then resurrected mid-stream) fall back to the est
-      * gates and are counted in the batch metrics row's edges_est_only.
-      * Texts are keyed by node_id = content hash, so a retained text can
-      * be missing or orphaned but never stale. Off by default: at 100 TB
-      * the signature-only state is ~100x smaller, and the measured est-gate
-      * divergence on web corpora is small (IncrementalDedupSpec parity). */
-    incRetainTexts: Boolean = false,
     /** Canonicalize urls at extraction (graft.web.UrlCanon: case, default
       * ports, www, fragments, index segments, trailing slashes, tracking
       * params) BEFORE exclusion, binding, and reporting — the web analogue
@@ -147,7 +135,6 @@ final case class PageExtracted(
 final case class DocSignature(
     node_id: Long,
     n_bytes: Long,
-    minhash: Array[Long],
     simhash: Long,
     band_hashes: Array[Long]
 )

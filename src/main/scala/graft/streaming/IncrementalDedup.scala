@@ -13,22 +13,25 @@ import graft.model.GraftConfig
   * Streaming, `foreachBatch`): each micro-batch runs the batch stages on the
   * NEW urls only, against durable state tables —
   *
-  *   signatures(node_id, n_bytes, minhash, simhash, band_hashes)   [state]
+  *   signatures(node_id, n_bytes, simhash, band_hashes)             [state]
+  *   band_index(node_id, band_key)                                  [state]
+  *   texts(node_id, text)                                           [state]
   *   members(url, node_id, n_bytes, warc_ts, batch_id)              [state]
   *   edges(id_a, id_b)                                              [state]
   *   clusters(url, node_id, cluster_id, n_bytes, warc_ts, batch_id) [state+output:
   *     the resolved latest binding per url with its component label]
+  *   metrics(batch_id, candidates_new, candidates_cross,
+  *     edges_exact_verified, edges_est_only, committed_ms)          [audit log]
   *
   * Per batch: extract -> new distinct contents (anti-join on stored
   * signatures) -> signatures for new contents only -> ONE banded
   * candidate pass over the batch's band keys plus the stored band rows
   * sharing them (new-vs-new and new-vs-stored pairs, salted by the
   * combined census; see crossBatchCandidates) -> ONE exact verify of every
-  * pair whose two texts are on hand, signature estimates for the rest
-  * (the stored side keeps no text unless cfg.incRetainTexts) -> append
-  * state -> connected components over the AFFECTED components only ->
-  * swap in the updated clusters table (untouched clusters carried forward
-  * verbatim).
+  * pair by batch ST3's pass rule, over the batch's texts and the stored
+  * texts of its stored endpoints -> append state -> connected components
+  * over the AFFECTED components only -> swap in the updated clusters table
+  * (untouched clusters carried forward verbatim).
   *
   * This is the reference's checkpoint-resume design (nullable-checksum
   * columns as "already computed" state, file_db.rs:375-388) turned into
@@ -41,12 +44,12 @@ import graft.model.GraftConfig
   * micro-batch backpressure.
   *
   * Scale notes: signatures, candidates and verification shuffle and
-  * compute O(batch + its candidate pairs): the state band table and the
-  * stored signatures are scanned map-side against broadcast batch-sized
-  * key sets (pushdown-friendly parquet), never shuffled whole, and hot
-  * bands are salted into bounded cells (same
-  * policy as batch ST2), so boilerplate bands that accumulate members over
-  * months cannot make per-batch work grow with stored-band size. Connected components run
+  * compute O(batch + its candidate pairs): the state band table, the
+  * stored signatures and the stored texts are scanned map-side against
+  * batch-sized key sets (pushdown-friendly parquet), never shuffled whole,
+  * and hot bands are salted into bounded cells (same policy as batch ST2),
+  * so boilerplate bands that accumulate members over months cannot make
+  * per-batch work grow with stored-band size. Connected components run
   * only over the components TOUCHED by the batch (new bindings,
   * superseded bindings, new edges), so CC cost is O(affected dup-graph),
   * not O(all accumulated edges). The clusters table is NOT bounded that
@@ -68,9 +71,9 @@ object IncrementalDedup {
     val signatures = s"$root/signatures"
     val bandIndex = s"$root/band_index"
     val members = s"$root/members"
-    /** Optional (cfg.incRetainTexts): (node_id, text) per distinct content,
-      * enabling full ST3 verify on cross-batch pairs. node_id is the
-      * content hash, so rows can be missing/orphaned but never stale. */
+    /** (node_id, text) per distinct content, so that cross-batch pairs get
+      * the full ST3 verify. node_id is the content hash, so a row can be
+      * orphaned but never stale. */
     val texts = s"$root/texts"
     val edges = s"$root/edges"
     val clusters = s"$root/clusters"
@@ -82,19 +85,15 @@ object IncrementalDedup {
     def tables: Seq[String] = Seq(signatures, bandIndex, members, texts, edges, clusters, metrics)
   }
 
-  /** Current state-schema version. History:
-    *  1 — round-1 layout: members(url, node_id, n_bytes), no re-crawl
-    *      invalidation possible;
-    *  2 — members carry (warc_ts, batch_id) so the latest binding per url
-    *      wins deterministically;
-    *  3 — clusters carry the resolved (warc_ts, batch_id) binding per url,
-    *      enabling the bounded affected-component recluster (migration =
-    *      one full rebuild from members+edges).
-    * Mirrors the reference's schema_version gate + v<=2 -> v3 migration
-    * (/root/reference/src/file_db.rs:66-77, 457-511): older versions are
-    * migrated in place, NEWER versions are refused (never silently
-    * reinterpreted by old code). */
-  final val StateVersion = 3
+  /** Current state-schema version: 4 means every signature row has its
+    * text in `texts`, so every cross-batch pair is verified exactly.
+    * Versions 1-3 kept no texts (their cross pairs were accepted on
+    * signature estimates), so a root of theirs that holds tables cannot be
+    * brought to v4 from its own state and is refused with a request to
+    * rebuild it from its pages; a NEWER version is refused too (never
+    * silently reinterpreted by old code). Mirrors the reference's
+    * schema_version gate (/root/reference/src/file_db.rs:66-77). */
+  final val StateVersion = 4
 
   private def hconf(spark: SparkSession) = spark.sparkContext.hadoopConfiguration
 
@@ -104,8 +103,7 @@ object IncrementalDedup {
   private def writeVersion(spark: SparkSession, cfg: GraftConfig, dirs: StateDirs,
       bandChunks: Int): Unit =
     FsOps.writeRecord(hconf(spark), new Path(dirs.versionFile), Seq(
-      "version" -> StateVersion, "simhash_tier" -> (if (bandChunks > 0) 1 else 0),
-      "band_chunks" -> bandChunks, "sig_config" -> sigConfigOf(cfg)))
+      "version" -> StateVersion, "band_chunks" -> bandChunks, "sig_config" -> sigConfigOf(cfg)))
 
   private def tierEnabled(cfg: GraftConfig): Boolean =
     cfg.simhashTier && cfg.maxHamming >= 0
@@ -119,25 +117,15 @@ object IncrementalDedup {
     if (tierEnabled(cfg)) cfg.maxHamming + 1 else 0
 
   /** The durable-state signature fingerprint: every knob that changes the
-    * MEANING of stored minhash/band_hashes/simhash rows. A restart with a
+    * MEANING of stored band_hashes/simhash rows. A restart with a
     * different value cannot be reconciled with existing signature state —
     * new band keys would never match stored ones (silent, permanent
-    * cross-batch recall loss) and estimate-tier comparisons would mix
-    * incompatible permutation families — so `ensureStateVersion` refuses
-    * it loudly. Thresholds (minJaccard, maxHamming-as-verify-gate, LCS)
+    * cross-batch recall loss) — so `ensureStateVersion` refuses it
+    * loudly. Thresholds (minJaccard, maxHamming-as-verify-gate, LCS)
     * are deliberately NOT in the fingerprint: they gate future decisions,
     * not the validity of stored rows. */
   private[streaming] def sigConfigOf(cfg: GraftConfig): String =
     s"k${cfg.shingleK}|p${cfg.numPerm}|b${cfg.bands}|s${cfg.seed}"
-
-  /** Which chunk-key families the durable band index holds, as recorded in
-    * the version record. Legacy records (pre-field) hold only the boolean
-    * tier: true maps to -1 ("chunk keys of an UNKNOWN maxHamming" — never
-    * equal to any want, forcing one rebuild that stamps the real count),
-    * false to 0. Absent record (pre-knob state) means MinHash-only. */
-  private[graft] def bandChunksOf(version: Map[String, String]): Option[Int] =
-    version.get("band_chunks").map(_.toInt)
-      .orElse(version.get("simhash_tier").map(t => if (t == "1") -1 else 0))
 
   /** The durable band index holds the key families of whichever tiers were
     * enabled when its rows were appended, so a `simhashTier` toggle — or a
@@ -148,24 +136,34 @@ object IncrementalDedup {
     * would strand chunk keys forever). The rebuild is a deterministic
     * projection of the signature state (band_hashes and simhash are both
     * retained per node) — no text is recomputed — via the same crash-safe
-    * swap as every state rewrite. `have` is the recorded chunk count;
-    * `stamped` says the record already carries every field. */
+    * swap as every state rewrite. `have` is the chunk count the version
+    * record names; a record without one is rebuilt and stamped. */
   private def ensureBandIndex(spark: SparkSession, cfg: GraftConfig, dirs: StateDirs,
-      have: Option[Int], stamped: Boolean): Unit = {
+      have: Option[Int]): Unit = {
     val want = wantBandChunks(cfg)
-    if (have.getOrElse(0) != want) {
+    if (!have.contains(want)) {
       if (exists(spark, dirs.signatures))
         replaceTable(Pipeline.bandKeys(FsOps.readParquet(spark, dirs.signatures), cfg), dirs.bandIndex)
       writeVersion(spark, cfg, dirs, want)
-    } else if (!stamped) writeVersion(spark, cfg, dirs, want) // stamp missing fields
+    }
   }
 
-  /** Version gate + in-place migration, run once per batch (cheap: one
-    * record read once current). v1 members gain warc_ts = epoch,
-    * batch_id = -1 — strictly older than any live batch, so any future
-    * re-crawl of a v1 url supersedes its binding; v<=2 clusters are
-    * rebuilt from ground truth (members + edges) into the v3
-    * resolved-binding shape. A version from the future is refused. */
+  /** The refusal of a root holding tables of schema version `v` (absent:
+    * v1, which wrote no version record), any version but the current. */
+  private def versionRefusal(dirs: StateDirs, v: Option[Int]): IllegalStateException =
+    new IllegalStateException(v match {
+      case Some(n) if n > StateVersion =>
+        s"incremental state at ${dirs.root} has schema version $n, newer than " +
+          s"supported $StateVersion — refusing to reinterpret (upgrade the library)"
+      case _ =>
+        s"incremental state at ${dirs.root} is schema v${v.getOrElse(1)}, which kept no page " +
+          s"texts, so its cross-batch pairs cannot be verified exactly under v$StateVersion - " +
+          "rebuild it from its pages into a fresh state root"
+    })
+
+  /** Version gate, run once per batch (one record read): an empty root is
+    * stamped with the current version; a root of another version that
+    * holds tables is refused (see [[StateVersion]]). */
   private[streaming] def ensureStateVersion(spark: SparkSession, cfg: GraftConfig, dirs: StateDirs): Unit = {
     // Heal interrupted swaps first: every swapped table must be present (or
     // restored from its aside copy) before any state is read this batch.
@@ -182,48 +180,24 @@ object IncrementalDedup {
     // meaningful under the (shingleK, numPerm, bands, seed) that computed
     // them. A silent mismatch is the worst failure mode this state has —
     // new band keys never match stored ones, so every cross-batch
-    // near-duplicate goes undetected with no error. A stamp from an older
-    // library version is absent: trust-on-first-use (stamped below), same
-    // as the pre-knob tier field.
+    // near-duplicate goes undetected with no error. Every v4 record
+    // carries the stamp, so an absent one is refused as a mismatch.
     val version = FsOps.readRecord(conf, new Path(dirs.versionFile)).getOrElse(Map.empty)
-    version.get("sig_config").foreach { stored =>
-      val cur = sigConfigOf(cfg)
-      if (stored != cur)
-        throw new IllegalStateException(
-          s"incremental state at ${dirs.root} was built with signature config " +
-            s"[$stored] but this run uses [$cur] (shingleK|numPerm|bands|seed) - " +
-            "stored signatures and band keys are incompatible with the new config. " +
-            "Revert the config, point at a fresh state root, or rebuild state from " +
-            "the original pages")
-    }
     version.get("version").map(_.toInt) match {
       case Some(StateVersion) => // current; key-family toggle still possible
-        val have = bandChunksOf(version)
-        ensureBandIndex(spark, cfg, dirs, have, have.isDefined && version.contains("sig_config"))
-      case Some(v) if v > StateVersion =>
-        throw new IllegalStateException(
-          s"incremental state at ${dirs.root} has schema version $v, newer than " +
-          s"supported $StateVersion — refusing to reinterpret (upgrade the library)")
-      case _ => // absent or older: migrate what exists, then stamp
-        if (exists(spark, dirs.members)) {
-          val m = FsOps.readParquet(spark, dirs.members)
-          if (!m.columns.contains("batch_id")) {
-            // Migrate via temp-dir + crash-safe swap: an in-place overwrite
-            // would delete the only copy of member state before rewriting
-            // it, and a crash mid-write (before the version stamp) would be
-            // unrecoverable. The swap keeps old-or-new present throughout;
-            // re-running the migration after any crash is idempotent (the
-            // batch_id column guard above).
-            replaceTable(m.withColumn("warc_ts", lit(new java.sql.Timestamp(0L)))
-              .withColumn("batch_id", lit(-1L))
-              .select("url", "node_id", "n_bytes", "warc_ts", "batch_id"), dirs.members)
-          }
-          rebuildClusters(spark, cfg, dirs) // v<=2 clusters -> v3 shape
-          // pre-knob states hold a MinHash-only band index: stamp that,
-          // then let the toggle path rebuild if this config wants more
-          writeVersion(spark, cfg, dirs, 0)
-          ensureBandIndex(spark, cfg, dirs, Some(0), stamped = true)
-        } else writeVersion(spark, cfg, dirs, wantBandChunks(cfg)) // fresh state
+        val cur = sigConfigOf(cfg)
+        if (!version.get("sig_config").contains(cur))
+          throw new IllegalStateException(
+            s"incremental state at ${dirs.root} was built with signature config " +
+              s"[${version.getOrElse("sig_config", "?")}] but this run uses [$cur] " +
+              "(shingleK|numPerm|bands|seed) - stored signatures and band keys are " +
+              "incompatible with the new config. Revert the config, point at a fresh " +
+              "state root, or rebuild state from the original pages")
+        ensureBandIndex(spark, cfg, dirs, version.get("band_chunks").map(_.toInt))
+      case Some(v) if v > StateVersion => throw versionRefusal(dirs, Some(v))
+      case v => // absent or older: only an empty root may be stamped
+        if (dirs.tables.exists(exists(spark, _))) throw versionRefusal(dirs, v)
+        writeVersion(spark, cfg, dirs, wantBandChunks(cfg))
     }
   }
 
@@ -258,7 +232,7 @@ object IncrementalDedup {
     }
 
     val extracted = Pipeline.extract(batch, cfg).localCheckpoint(false)
-    // read by the new-content anti-join and as the texts on hand
+    // read by the new-content anti-join and as the batch's texts in the verify
     val newContents = Pipeline.distinctContents(extracted).localCheckpoint(false)
 
     // ---- skip unchanged batches: a batch row matters only if it would
@@ -308,75 +282,22 @@ object IncrementalDedup {
     val pairs = crossBatchCandidates(newBands, readOrEmpty(spark, dirs.bandIndex, newBands), cfg)
       .localCheckpoint(false)
 
-    // ---- verify. Two tiers, matching what each side can know:
-    //  - every pair whose BOTH texts are on hand gets the full batch ST3
-    //    pass rule (exact shingle Jaccard, SimHash Hamming, suffix-automaton
-    //    LCS) — batch-parity semantics. New-vs-new pairs always qualify;
-    //    "on hand" also includes every content this batch extracted (so a
-    //    RE-PUBLISHED known content — the common re-crawl case — verifies
-    //    exactly, never by estimate), and with cfg.incRetainTexts ON the
-    //    stored texts state;
-    //  - cross pairs whose stored text is not on hand (knob off and the
-    //    stored endpoint absent from this batch; or state predating the
-    //    toggle / GC'd content) fall back to the estimate tier:
-    //    MinHash-estimated Jaccard over the 128-perm signatures OR SimHash
-    //    Hamming. Threshold on the estimate is cfg.minJaccard minus 2
-    //    sigma (sigma = sqrt(J(1-J)/numPerm)) so planted true pairs still
-    //    pass. The estimate tier is strictly MORE permissive than batch
-    //    ST3 (no exact-J, no LCS gate, OR of the gates); every edge it
-    //    accepts is counted as est_only in the batch metrics row so the
-    //    divergence is measurable, and IncrementalDedupSpec's parity tests
-    //    gate cluster agreement with the batch pipeline on a planted
-    //    corpus (exact agreement + zero est-only with the knob on).
-    val retain = cfg.incRetainTexts
-    // Scale contract: the stored texts table is the one state dir whose
-    // BYTES grow with the live corpus, so only its rows at this batch's
-    // stored pair endpoints are read (a node_id-column semi-join before any
-    // shuffle): per-batch text I/O is O(batch + cross candidates).
-    val textsOnHand =
-      if (!retain) newContents.select("node_id", "text")
-      else readOrEmpty(spark, dirs.texts, newContents.select("node_id", "text"))
-        .select("node_id", "text")
-        .join(pairs.select(col("stored_id").as("node_id")), Seq("node_id"), "left_semi")
-        .unionByName(newContents.select("node_id", "text"))
-        .dropDuplicates("node_id").localCheckpoint(false)
-    // the exact/estimate split: the stored endpoint (null for new-vs-new)
-    // left-joined to the ids on hand
-    val split = pairs.join(
-      textsOnHand.select(col("node_id").as("stored_id"), lit(true).as("on_hand")),
-      Seq("stored_id"), "left")
-    val exact = split.where(col("stored_id").isNull || col("on_hand").isNotNull)
-    val exactVerified = Pipeline.verifyPairs(exact.select("id_a", "id_b"), textsOnHand, cfg)
-      .where(col("passed")).select(col("id_a"), col("id_b"), lit(false).as("est"))
-    // The estimate tier reads the stored endpoint's signature from state and
-    // the new endpoint's from this batch's sigs. The stored signature table
-    // grows with the live corpus (~1 KB of minhash per row), so the
-    // (batch-sized) estimate pairs are broadcast into its scan: per-batch
-    // signature traffic is O(est candidates), not O(live corpus).
-    val estMin = cfg.minJaccard - 2.0 * math.sqrt(cfg.minJaccard * (1 - cfg.minJaccard) / cfg.numPerm)
-    val maxHam = cfg.maxHamming
-    import spark.implicits._
-    val estPairs = split.where(col("stored_id").isNotNull && col("on_hand").isNull)
-      .select(col("id_a"), col("id_b"), col("stored_id"),
-        when(col("id_a") === col("stored_id"), col("id_b")).otherwise(col("id_a")).as("new_id"))
-    val estVerified = broadcast(estPairs)
-      .join(readOrEmpty(spark, dirs.signatures, sigs).select(col("node_id").as("stored_id"),
-        col("minhash").as("mh_s"), col("simhash").as("sh_s")), "stored_id")
-      .join(sigs.select(col("node_id").as("new_id"),
-        col("minhash").as("mh_n"), col("simhash").as("sh_n")), "new_id")
-      // select explicitly before the POSITIONAL tuple decode: each
-      // using-join moves its key column first, and a reversed (id_b, id_a)
-      // would break the edges table's id_a < id_b invariant (regression-
-      // gated by the parity test's orientation assertion)
-      .select(col("id_a"), col("id_b"), col("mh_s"), col("sh_s"), col("mh_n"), col("sh_n"))
-      .as[(Long, Long, Seq[Long], Long, Seq[Long], Long)]
-      .flatMap { case (idA, idB, mhS, shS, mhN, shN) =>
-        val est = graft.signatures.MinHasher.estimateJaccard(mhS.toArray, mhN.toArray)
-        val ham = java.lang.Long.bitCount(shS ^ shN)
-        if (est >= estMin || ham <= maxHam) Some((idA, idB, true)) else None
-      }.toDF("id_a", "id_b", "est")
+    // ---- verify: ONE exact pass by batch ST3's rule (exact shingle
+    // Jaccard, SimHash Hamming, suffix-automaton LCS) over every pair. The
+    // texts are this batch's contents plus the stored texts of the pairs'
+    // stored endpoints: the texts table is the one state dir whose BYTES
+    // grow with the live corpus, so only those rows are read (a node_id
+    // semi-join before any shuffle) and per-batch text I/O is O(batch +
+    // cross candidates). A re-published known content verifies on the
+    // batch's copy of its text.
+    val texts = readOrEmpty(spark, dirs.texts, newContents.select("node_id", "text"))
+      .select("node_id", "text")
+      .join(pairs.select(col("stored_id").as("node_id")), Seq("node_id"), "left_semi")
+      .unionByName(newContents.select("node_id", "text"))
+      .dropDuplicates("node_id").localCheckpoint(false)
     // read by the edges append, the affected set and the metrics row
-    val verified = exactVerified.union(estVerified).localCheckpoint(false)
+    val verified = Pipeline.verifyPairs(pairs.select("id_a", "id_b"), texts, cfg)
+      .where(col("passed")).select("id_a", "id_b").localCheckpoint(false)
 
     // ---- append state. ORDER IS THE REPLAY-RESUME CONTRACT: foreachBatch
     // is at-least-once, the appends are not atomic as a group, and replay
@@ -391,28 +312,30 @@ object IncrementalDedup {
     // see "already processed" and the batch's candidate edges would be
     // lost FOREVER (silent recall loss).
     appendState(newBands, dirs.bandIndex)
-    appendState(verified.select("id_a", "id_b"), dirs.edges)
-    if (retain) appendState(contents.select("node_id", "text"), dirs.texts)
+    appendState(verified, dirs.edges)
+    appendState(contents.select("node_id", "text"), dirs.texts)
     appendState(newMemberRows, dirs.members)
     appendState(sigs, dirs.signatures) // LAST: gates replay recompute
-    // The per-batch metrics row (the durable counter that makes the
-    // est-only divergence auditable over a stream's life) is computed here
-    // but appended AFTER the clusters swap: appended earlier, a crash
-    // before the swap would make the replayed batch append a SECOND row
-    // for the same batch_id. After the swap, the replay exits at the
-    // unchanged-bindings check — at most one row per batch (a crash in the
-    // one instant between swap and append loses the audit row for that
-    // batch; an at-most-once audit beats contradictory duplicates).
+    // The per-batch metrics row (the durable audit of a stream's candidate
+    // and edge counts) is computed here but appended AFTER the clusters
+    // swap: appended earlier, a crash before the swap would make the
+    // replayed batch append a SECOND row for the same batch_id. After the
+    // swap, the replay exits at the unchanged-bindings check — at most one
+    // row per batch (a crash in the one instant between swap and append
+    // loses the audit row for that batch; an at-most-once audit beats
+    // contradictory duplicates).
     // Its counts come from ONE aggregation over a tagged union of the
     // (already materialized) pair and edge tables, not one count job each:
-    // t = 0 new-vs-new pair, 1 cross pair, 2 exact edge, 3 estimate edge.
+    // t = 0 new-vs-new pair, 1 cross pair, 2 verified edge. Every edge is
+    // exactly verified, so `edges_est_only` is 0; the column stays for
+    // readers of the log's schema.
     val n = pairs.select(col("stored_id").isNotNull.cast("int").as("t"))
-      .union(verified.select((col("est").cast("int") + 2).as("t")))
-      .select((0 to 3).map(i => count_if(col("t") === i)): _*)
+      .union(verified.select(lit(2).as("t")))
+      .select((0 to 2).map(i => count_if(col("t") === i)): _*)
       .head()
+    import spark.implicits._
     val metricsRow =
-      Seq((batchId, n.getLong(0), n.getLong(1), n.getLong(2), n.getLong(3),
-        System.currentTimeMillis()))
+      Seq((batchId, n.getLong(0), n.getLong(1), n.getLong(2), 0L, System.currentTimeMillis()))
         .toDF("batch_id", "candidates_new", "candidates_cross",
           "edges_exact_verified", "edges_est_only", "committed_ms")
 
@@ -534,9 +457,9 @@ object IncrementalDedup {
 
   /** Full recluster from ground-truth state (members + edges): latest
     * binding per url, live-edge CC, every url labeled. Used for the first
-    * batch, v<3 migration, and cluster-state recovery; per-batch processing
+    * batch and cluster-state recovery; per-batch processing
     * uses the bounded affected-component path instead. */
-  private[streaming] def rebuildClusters(spark: SparkSession, cfg: GraftConfig, dirs: StateDirs): Unit = {
+  private def rebuildClusters(spark: SparkSession, cfg: GraftConfig, dirs: StateDirs): Unit = {
     if (!exists(spark, dirs.members)) return
     val resolved = latestBinding(FsOps.readParquet(spark, dirs.members)).localCheckpoint(false)
     val liveA = resolved.select(col("node_id").as("id_a")) // keys semi-joins only
@@ -591,17 +514,14 @@ object IncrementalDedup {
       crashAfterTables: Int = Int.MaxValue): Unit = {
     val conf = hconf(spark)
     dirs.tables.foreach(t => FsOps.recoverSwap(conf, new Path(t)))
-    // Version gate BEFORE any journal write: the clusters rewrite below
-    // selects v3 columns (warc_ts, batch_id), so a remap over pre-v3 state
-    // would fail AFTER journaling and rewriting five tables — and the
-    // leftover journal blocks ensureStateVersion (hence the migration that
-    // would fix it) from ever running: a wedged state. Refuse up front.
+    // Version gate BEFORE any journal write: a remap over state of another
+    // version would journal and rewrite tables that processBatch refuses
+    // anyway, or fail midway on their older columns. Refuse up front, as
+    // processBatch does.
     if (dirs.tables.exists(exists(spark, _))) {
       val v = FsOps.readRecord(conf, new Path(dirs.versionFile))
         .flatMap(_.get("version")).map(_.toInt)
-      require(v.contains(StateVersion),
-        s"incremental state at ${dirs.root} is schema v${v.getOrElse(1)}, not v$StateVersion " +
-          "- run any processBatch (ensureStateVersion) to migrate BEFORE remapping node ids")
+      if (!v.contains(StateVersion)) throw versionRefusal(dirs, v)
     }
     val m = mapping.select(col("old_id").cast("long").as("old_id"),
       col("new_id").cast("long").as("new_id")).distinct().localCheckpoint(true)
@@ -703,14 +623,16 @@ object IncrementalDedup {
 
   /** Rewrite accumulated state compacted when any dir's file count exceeds
     * cfg.incCompactFileThreshold. Without this, `appendParquet` adds files
-    * per batch forever and the per-batch `edges.distinct()` scan creeps
-    * with total history. Compaction:
+    * per batch forever, and every batch's scans of the edges, band index,
+    * signatures and texts tables (map-side, against batch-sized key sets)
+    * pay for each file and each duplicate or dead row of the whole history.
+    * Compaction:
     *  - members -> latest binding per url (exactly the reduction every
     *    resolution path computes; superseded history carries no signal);
     *  - edges -> distinct, endpoints restricted to LIVE nodes (an edge on a
     *    node no url binds cannot affect clustering; cluster time retires
     *    them anyway — compaction just stops paying to rescan them);
-    *  - band_index / signatures -> live nodes only. This trades the
+    *  - band_index / signatures / texts -> live nodes only. This trades the
     *    "resurrected content needs no recompute" property for bounded
     *    state: a url reverting to GC'd content re-enters as new content
     *    (the batch carries its text, so the signature is recomputed and
@@ -731,9 +653,8 @@ object IncrementalDedup {
       if (exists(spark, path)) replaceTable(f(FsOps.readParquet(spark, path)), path)
     rewrite(dirs.members)(latestBinding)
     rewrite(dirs.signatures)(_.join(live, Seq("node_id"), "left_semi"))
-    // retained texts (incRetainTexts): live nodes only, one row per node —
-    // same GC-then-resurrect trade as signatures (the batch re-carries the
-    // text, so a resurrected content is re-retained on re-entry)
+    // texts: live nodes only, one row per node (a replayed batch may have
+    // appended a content twice)
     rewrite(dirs.texts)(_.dropDuplicates("node_id").join(live, Seq("node_id"), "left_semi"))
     rewrite(dirs.bandIndex)(_.distinct().join(live, Seq("node_id"), "left_semi"))
     rewrite(dirs.edges) { e =>

@@ -20,9 +20,8 @@ import graft.streaming.IncrementalDedup.StateDirs
   * footers through [[FsOps.parquetFiles]]. */
 class CodecSpec extends SparkSpec {
 
-  // the distributed CC path, so the per-round edge store is written too;
-  // retained texts, so the state root holds every table it can
-  private val cfg = GraftConfig(ccLocalThreshold = 0L, incRetainTexts = true)
+  // the distributed CC path, so the per-round edge store is written too
+  private val cfg = GraftConfig(ccLocalThreshold = 0L)
   private val stages = Seq("st0_extracted", "st1_signatures", "st2_candidates",
     "st3_verified", "st4_clusters", "st5_report")
   private val stateTables = Set("signatures", "band_index", "members", "texts", "edges",

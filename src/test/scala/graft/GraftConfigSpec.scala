@@ -33,7 +33,6 @@ class GraftConfigSpec extends AnyFunSuite {
       "seed" -> base.copy(seed = 43L),
       "ccLocalThreshold" -> base.copy(ccLocalThreshold = 0L),
       "incCompactFileThreshold" -> base.copy(incCompactFileThreshold = 8),
-      "incRetainTexts" -> base.copy(incRetainTexts = true),
       "canonicalizeUrls" -> base.copy(canonicalizeUrls = true)
     )
     // Completeness: one variant per case-class field (a new knob added

@@ -5,7 +5,6 @@ import java.nio.file.Files
 import graft.checkpoint.{FsOps, Manifest, ParquetSnapshotIO}
 import graft.fixtures.PagesGen
 import graft.model.GraftConfig
-import graft.streaming.IncrementalDedup
 
 /** Checkpoint/resume semantics (SURVEY.md §5.1 item 5): a stage with a
   * committed snapshot under the current config hash is loaded, not
@@ -18,7 +17,7 @@ class ResumeSpec extends SparkSpec {
   test("manifest json round-trips") {
     val m = Manifest("snap-abc", "deadbeef", 12345L, "st2_candidates")
     assert(Manifest.fromJson(m.toJson).contains(m))
-    // Records exactly as earlier releases wrote them: stage manifests with and
+    // Records exactly as releases write them: stage manifests with and
     // without `bytes`, the CC label manifest, the incremental state version
     // file and the remap journal. Each reads back through the one record
     // parser and renders back byte-identically, so existing checkpoints and
@@ -36,8 +35,8 @@ class ResumeSpec extends SparkSpec {
     val records = Seq(
       """{"edge_hash": "00000000075bcd15-42", "iter": 3}""" ->
         Seq("edge_hash" -> "00000000075bcd15-42", "iter" -> 3),
-      """{"version": 3, "simhash_tier": 1, "band_chunks": 4, "sig_config": "k5|p128|b32|s42"}""" ->
-        Seq("version" -> 3, "simhash_tier" -> 1, "band_chunks" -> 4, "sig_config" -> "k5|p128|b32|s42"),
+      """{"version": 4, "band_chunks": 4, "sig_config": "k5|p128|b32|s42"}""" ->
+        Seq("version" -> 4, "band_chunks" -> 4, "sig_config" -> "k5|p128|b32|s42"),
       """{"mapping_hash": "000000000000abcd-3", "done": "signatures,texts"}""" ->
         Seq("mapping_hash" -> "000000000000abcd-3", "done" -> "signatures,texts"),
       """{"mapping_hash": "000000000000abcd-3", "done": ""}""" ->
@@ -46,14 +45,6 @@ class ResumeSpec extends SparkSpec {
       assert(FsOps.parseRecord(json) == fields.map { case (k, v) => k -> v.toString }.toMap, json)
       assert(FsOps.renderRecord(fields) == json)
     }
-    // the band-index families a version record names: current, and legacy
-    // records holding only the boolean tier (on = unknown chunk count)
-    assert(IncrementalDedup.bandChunksOf(FsOps.parseRecord(records(1)._1)).contains(4))
-    assert(IncrementalDedup.bandChunksOf(
-      FsOps.parseRecord("""{"version": 3, "simhash_tier": 1}""")).contains(-1))
-    assert(IncrementalDedup.bandChunksOf(
-      FsOps.parseRecord("""{"version": 2, "simhash_tier": 0}""")).contains(0))
-    assert(IncrementalDedup.bandChunksOf(Map.empty).isEmpty)
   }
 
   test("second run resumes every stage from committed snapshots") {
