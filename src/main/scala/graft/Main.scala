@@ -125,8 +125,8 @@ object Main {
   def run(spark: SparkSession, args: CliArgs): Unit = {
     val pages = args.table match {
       case Some(t) => spark.read.table(t)
-      // a flat Spark-written dir reads under its footer schema (no
-      // inference job); other inputs fall back to inference
+      // a Spark-written dir, flat or partitioned, reads under its footer
+      // schema (no inference job); other inputs fall back to inference
       case None    => FsOps.readParquet(spark, args.input.get)
     }
     // The snapshot key folds the INPUT LOCATOR into the config hash:

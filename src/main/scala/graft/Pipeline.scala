@@ -135,20 +135,21 @@ object Pipeline {
     extracted.select("node_id", "n_bytes", "text").dropDuplicates("node_id")
 
   // ---------------------------------------------------------------- ST1
-  /** One row per distinct text: (node_id, n_bytes, simhash, band_hashes).
-    * Signature computed exactly once per content (J3). Input:
-    * `distinctContents` output (already deduped by node_id). The MinHash
-    * signature itself is not kept: only its band hashes are read. */
-  def signatures(contents: DataFrame, cfg: GraftConfig): DataFrame = {
+  /** One row per distinct text: (node_id, n_bytes, simhash, band_hashes),
+    * plus the `text` itself when `withText` (the incremental state's one
+    * per-content row). Signature computed exactly once per content (J3).
+    * Input: `distinctContents` output (already deduped by node_id). The
+    * MinHash signature itself is not kept: only its band hashes are read. */
+  def signatures(contents: DataFrame, cfg: GraftConfig, withText: Boolean = false): DataFrame = {
     contents
       .select("node_id", "n_bytes", "text")
       .withColumn("sig",
         GraftFunctions.docSignature(col("text"), cfg.shingleK, cfg.numPerm, cfg.bands, cfg.seed))
-      .select(
+      .select(Seq(
         col("node_id"),
         col("n_bytes"),
         col("sig.simhash").as("simhash"),
-        col("sig.band_hashes").as("band_hashes"))
+        col("sig.band_hashes").as("band_hashes")) ++ Option.when(withText)(col("text")): _*)
   }
 
   // ---------------------------------------------------------------- ST2
@@ -177,8 +178,9 @@ object Pipeline {
     * itself is the join key; 32 rows per distinct doc, not 128), plus the
     * SimHash pigeonhole chunk keys when `cfg.simhashTier` is on — ONE
     * unified key table, so ST2 runs one census and one pair shuffle for
-    * both tiers, and the incremental mode's durable band index stores (and
-    * therefore cross-batch-probes) every enabled tier with no extra state.
+    * both tiers, and the incremental mode, which derives the stored side's
+    * keys from its signature rows at probe time, probes every enabled tier
+    * under the current config with no extra state.
     * Chunk-collision candidates above `maxHamming` are a superset, not an
     * error: ST3's exact pass rule decides; the false-collision rate per
     * chunk is ~2^-16 and hot chunks salt like any hot band. */

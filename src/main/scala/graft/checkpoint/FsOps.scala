@@ -216,14 +216,23 @@ private[graft] object FsOps {
         r.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala.map(_.getCodec.name)).toSet)
     })
 
+  /** The first data file directly under `dir`, else under its `k=v`
+    * partition dirs, searched depth-first in name order. */
+  private def firstDataFile(conf: Configuration, dir: Path): Option[FileStatus] =
+    dataFiles(conf, dir).headOption.orElse(
+      listDirs(conf, dir).filter(d => d.getName.contains("=") && !d.getName.startsWith("."))
+        .sortBy(_.getName).iterator.flatMap(firstDataFile(conf, _)).nextOption())
+
   /** The parquet table at `dir`, read under the Spark schema that Spark's
     * parquet writer stores in every file footer (taken from the first data
-    * file), so the read runs no schema-inference job. Spark infers the
-    * schema only when `dir` holds no file written by Spark. */
+    * file, under `k=v` partition dirs too), so the read runs no
+    * schema-inference job; Spark still appends the partition columns it
+    * discovers from the dir names. Spark infers the schema only when `dir`
+    * holds no file written by Spark. */
   def readParquet(spark: SparkSession, dir: String): DataFrame = {
     val conf = spark.sparkContext.hadoopConfiguration
     val p = new Path(dir)
-    val schema = (if (exists(conf, p)) dataFiles(conf, p).headOption else None).flatMap { s =>
+    val schema = (if (exists(conf, p)) firstDataFile(conf, p) else None).flatMap { s =>
       footer(conf, s)(r => Option(r.getFooter.getFileMetaData.getKeyValueMetaData
         .get("org.apache.spark.sql.parquet.row.metadata")))
     }.map(json => DataType.fromJson(json).asInstanceOf[StructType].toNullable)

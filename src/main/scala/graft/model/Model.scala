@@ -71,7 +71,7 @@ final case class GraftConfig(
       * graphs. */
     ccLocalThreshold: Long = 2_000_000L,
     /** Incremental-mode state compaction trigger: when any state dir
-      * (members/edges/band_index/signatures/texts/metrics) holds more than
+      * (members/edges/signatures/metrics) holds more than
       * this many files after a batch, the state is rewritten compacted —
       * duplicate edges merged, member history reduced to the latest
       * binding per url, nodes no live url binds GC'd (a content that

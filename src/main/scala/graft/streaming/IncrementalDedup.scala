@@ -13,9 +13,8 @@ import graft.model.GraftConfig
   * Streaming, `foreachBatch`): each micro-batch runs the batch stages on the
   * NEW urls only, against durable state tables —
   *
-  *   signatures(node_id, n_bytes, simhash, band_hashes)             [state]
-  *   band_index(node_id, band_key)                                  [state]
-  *   texts(node_id, text)                                           [state]
+  *   signatures(node_id, n_bytes, simhash, band_hashes, text)       [state:
+  *     one row per distinct content]
   *   members(url, node_id, n_bytes, warc_ts, batch_id)              [state]
   *   edges(id_a, id_b)                                              [state]
   *   clusters(url, node_id, cluster_id, n_bytes, warc_ts, batch_id) [state+output:
@@ -24,29 +23,31 @@ import graft.model.GraftConfig
   *     edges_exact_verified, edges_est_only, committed_ms)          [audit log]
   *
   * Per batch: extract -> new distinct contents (anti-join on stored
-  * signatures) -> signatures for new contents only -> ONE banded
-  * candidate pass over the batch's band keys plus the stored band rows
-  * sharing them (new-vs-new and new-vs-stored pairs, salted by the
-  * combined census; see crossBatchCandidates) -> ONE exact verify of every
-  * pair by batch ST3's pass rule, over the batch's texts and the stored
-  * texts of its stored endpoints -> append state -> connected components
-  * over the AFFECTED components only -> swap in the updated clusters table
-  * (untouched clusters carried forward verbatim).
+  * signatures) -> signature rows, text included, for new contents only ->
+  * ONE banded candidate pass over the batch's band keys plus the stored
+  * keys sharing them, derived at probe time from the stored signature rows
+  * under the current config (new-vs-new and new-vs-stored pairs, salted by
+  * the combined census; see crossBatchCandidates) -> ONE exact verify of
+  * every pair by batch ST3's pass rule, over the batch's texts and the
+  * stored texts of its stored endpoints -> append state -> connected
+  * components over the AFFECTED components only -> swap in the updated
+  * clusters table (untouched clusters carried forward verbatim).
   *
   * This is the reference's checkpoint-resume design (nullable-checksum
   * columns as "already computed" state, file_db.rs:375-388) turned into
   * streaming state: presence in the signatures table == stage done for that
-  * content, forever. That contract is only sound because the signatures
-  * append runs LAST in every batch (see the append block in processBatch):
-  * foreachBatch is at-least-once, and a replay after a crash must recompute
-  * a content's candidates/edges unless ALL of them are already durable.
-  * The bounded-channel pipeline of the reference (main.rs:145-166) maps to
-  * micro-batch backpressure.
+  * content, forever; like the reference's one `metadata` row per file
+  * (file_db.rs:33-36), its text and signature are one row. That contract
+  * is only sound because the signatures append runs LAST in every batch
+  * (see the append block in processBatch): foreachBatch is at-least-once,
+  * and a replay after a crash must recompute a content's candidates/edges
+  * unless ALL of them are already durable. The bounded-channel pipeline of
+  * the reference (main.rs:145-166) maps to micro-batch backpressure.
   *
   * Scale notes: signatures, candidates and verification shuffle and
-  * compute O(batch + its candidate pairs): the state band table, the
-  * stored signatures and the stored texts are scanned map-side against
-  * batch-sized key sets (pushdown-friendly parquet), never shuffled whole,
+  * compute O(batch + its candidate pairs): the stored signature rows are
+  * scanned map-side against batch-sized key sets (parquet column pruning:
+  * the key probe reads no text), never shuffled whole,
   * and hot bands are salted into bounded cells (same policy as batch ST2),
   * so boilerplate bands that accumulate members over months cannot make
   * per-batch work grow with stored-band size. Connected components run
@@ -68,84 +69,73 @@ import graft.model.GraftConfig
 object IncrementalDedup {
 
   final case class StateDirs(root: String) {
+    /** One row per distinct content, text included (so cross-batch pairs
+      * get the full ST3 verify); keyed by content hash, never stale. */
     val signatures = s"$root/signatures"
-    val bandIndex = s"$root/band_index"
     val members = s"$root/members"
-    /** (node_id, text) per distinct content, so that cross-batch pairs get
-      * the full ST3 verify. node_id is the content hash, so a row can be
-      * orphaned but never stale. */
-    val texts = s"$root/texts"
     val edges = s"$root/edges"
     val clusters = s"$root/clusters"
     val metrics = s"$root/metrics"
     val checkpoint = s"$root/_checkpoint"
     val versionFile = s"$root/_state_version.json"
     val remapJournal = s"$root/_remap_journal.json"
-    /** Every table a batch, migration, compaction or remap may replace. */
-    def tables: Seq[String] = Seq(signatures, bandIndex, members, texts, edges, clusters, metrics)
+    /** Every table a batch, upgrade, compaction or remap may replace. */
+    def tables: Seq[String] = Seq(signatures, members, edges, clusters, metrics)
   }
 
-  /** Current state-schema version: 4 means every signature row has its
-    * text in `texts`, so every cross-batch pair is verified exactly.
-    * Versions 1-3 kept no texts (their cross pairs were accepted on
-    * signature estimates), so a root of theirs that holds tables cannot be
-    * brought to v4 from its own state and is refused with a request to
-    * rebuild it from its pages; a NEWER version is refused too (never
-    * silently reinterpreted by old code). Mirrors the reference's
-    * schema_version gate (/root/reference/src/file_db.rs:66-77). */
-  final val StateVersion = 4
+  /** Current state-schema version: 5 means each content's text is a column
+    * of its signature row, whose band keys are derived at probe time. A v4
+    * root is upgraded in place ([[upgradeV4]]). Versions 1-3 kept no texts
+    * (their cross pairs were accepted on signature estimates), so a root of
+    * theirs that holds tables is refused with a request to rebuild it from
+    * its pages; a NEWER version is refused too (never silently
+    * reinterpreted by old code). Mirrors the reference's schema_version
+    * gate (/root/reference/src/file_db.rs:66-77). */
+  final val StateVersion = 5
 
   private def hconf(spark: SparkSession) = spark.sparkContext.hadoopConfiguration
 
   private def exists(spark: SparkSession, p: String): Boolean =
     FsOps.exists(hconf(spark), new Path(p))
 
-  private def writeVersion(spark: SparkSession, cfg: GraftConfig, dirs: StateDirs,
-      bandChunks: Int): Unit =
+  private def writeVersion(spark: SparkSession, dirs: StateDirs, sigConfig: String): Unit =
     FsOps.writeRecord(hconf(spark), new Path(dirs.versionFile), Seq(
-      "version" -> StateVersion, "band_chunks" -> bandChunks, "sig_config" -> sigConfigOf(cfg)))
-
-  private def tierEnabled(cfg: GraftConfig): Boolean =
-    cfg.simhashTier && cfg.maxHamming >= 0
-
-  /** How many SimHash pigeonhole chunk-key families this config's band
-    * index carries (0 = MinHash-only). The chunk count is maxHamming + 1
-    * (Pipeline.simhashChunkKeys), so a maxHamming change with the tier on
-    * changes every stored chunk key — same rebuild obligation as the
-    * on/off toggle. */
-  private def wantBandChunks(cfg: GraftConfig): Int =
-    if (tierEnabled(cfg)) cfg.maxHamming + 1 else 0
+      "version" -> StateVersion, "sig_config" -> sigConfig))
 
   /** The durable-state signature fingerprint: every knob that changes the
     * MEANING of stored band_hashes/simhash rows. A restart with a
     * different value cannot be reconciled with existing signature state —
     * new band keys would never match stored ones (silent, permanent
     * cross-batch recall loss) — so `ensureStateVersion` refuses it
-    * loudly. Thresholds (minJaccard, maxHamming-as-verify-gate, LCS)
-    * are deliberately NOT in the fingerprint: they gate future decisions,
-    * not the validity of stored rows. */
+    * loudly. Thresholds (minJaccard, maxHamming, LCS) and the SimHash
+    * chunk tier are deliberately NOT in the fingerprint: they gate future
+    * decisions or derive probe keys from the stored rows, not the validity
+    * of those rows. */
   private[streaming] def sigConfigOf(cfg: GraftConfig): String =
     s"k${cfg.shingleK}|p${cfg.numPerm}|b${cfg.bands}|s${cfg.seed}"
 
-  /** The durable band index holds the key families of whichever tiers were
-    * enabled when its rows were appended, so a `simhashTier` toggle — or a
-    * `maxHamming` change while the tier is on, which redraws every chunk
-    * boundary — on existing state must REBUILD it: otherwise pre-change
-    * docs silently lack (or carry stale) chunk keys and the cross-batch
-    * Hamming recall the knob promises never materializes (and a toggle OFF
-    * would strand chunk keys forever). The rebuild is a deterministic
-    * projection of the signature state (band_hashes and simhash are both
-    * retained per node) — no text is recomputed — via the same crash-safe
-    * swap as every state rewrite. `have` is the chunk count the version
-    * record names; a record without one is rebuilt and stamped. */
-  private def ensureBandIndex(spark: SparkSession, cfg: GraftConfig, dirs: StateDirs,
-      have: Option[Int]): Unit = {
-    val want = wantBandChunks(cfg)
-    if (!have.contains(want)) {
-      if (exists(spark, dirs.signatures))
-        replaceTable(Pipeline.bandKeys(FsOps.readParquet(spark, dirs.signatures), cfg), dirs.bandIndex)
-      writeVersion(spark, cfg, dirs, want)
+  /** Bring a v4 root, which kept texts and band keys in tables of their
+    * own, to v5 in place without loss: heal their interrupted swaps,
+    * rewrite `signatures` joined to one text per node (every v4 signature
+    * row has one: texts were appended first), delete the two tables and
+    * stamp v5 with `sigConfig`. Each step is idempotent (a `signatures`
+    * table holding `text` is not rewritten), so re-running an interrupted
+    * upgrade converges to the same state. */
+  private def upgradeV4(spark: SparkSession, dirs: StateDirs, sigConfig: String): Unit = {
+    val conf = hconf(spark)
+    val legacy = Seq("texts", "band_index").map(t => new Path(s"${dirs.root}/$t"))
+    legacy.foreach(FsOps.recoverSwap(conf, _))
+    val texts = legacy.head
+    if (exists(spark, dirs.signatures) &&
+        !FsOps.readParquet(spark, dirs.signatures).columns.contains("text")) {
+      if (!FsOps.exists(conf, texts)) throw new IllegalStateException(
+        s"incremental state at ${dirs.root} is schema v4 without its texts table - rebuild it")
+      replaceTable(FsOps.readParquet(spark, dirs.signatures).join(
+        FsOps.readParquet(spark, texts.toString).select("node_id", "text").dropDuplicates("node_id"),
+        Seq("node_id")), dirs.signatures)
     }
+    legacy.foreach(FsOps.deleteRecursive(conf, _))
+    writeVersion(spark, dirs, sigConfig)
   }
 
   /** The refusal of a root holding tables of schema version `v` (absent:
@@ -162,8 +152,8 @@ object IncrementalDedup {
     })
 
   /** Version gate, run once per batch (one record read): an empty root is
-    * stamped with the current version; a root of another version that
-    * holds tables is refused (see [[StateVersion]]). */
+    * stamped with the current version, a v4 root is upgraded, and a root of
+    * another version that holds tables is refused (see [[StateVersion]]). */
   private[streaming] def ensureStateVersion(spark: SparkSession, cfg: GraftConfig, dirs: StateDirs): Unit = {
     // Heal interrupted swaps first: every swapped table must be present (or
     // restored from its aside copy) before any state is read this batch.
@@ -180,12 +170,12 @@ object IncrementalDedup {
     // meaningful under the (shingleK, numPerm, bands, seed) that computed
     // them. A silent mismatch is the worst failure mode this state has —
     // new band keys never match stored ones, so every cross-batch
-    // near-duplicate goes undetected with no error. Every v4 record
+    // near-duplicate goes undetected with no error. Every v4 and v5 record
     // carries the stamp, so an absent one is refused as a mismatch.
     val version = FsOps.readRecord(conf, new Path(dirs.versionFile)).getOrElse(Map.empty)
+    val cur = sigConfigOf(cfg)
     version.get("version").map(_.toInt) match {
-      case Some(StateVersion) => // current; key-family toggle still possible
-        val cur = sigConfigOf(cfg)
+      case Some(v) if v == StateVersion || v == 4 =>
         if (!version.get("sig_config").contains(cur))
           throw new IllegalStateException(
             s"incremental state at ${dirs.root} was built with signature config " +
@@ -193,17 +183,17 @@ object IncrementalDedup {
               "(shingleK|numPerm|bands|seed) - stored signatures and band keys are " +
               "incompatible with the new config. Revert the config, point at a fresh " +
               "state root, or rebuild state from the original pages")
-        ensureBandIndex(spark, cfg, dirs, version.get("band_chunks").map(_.toInt))
+        if (v == 4) upgradeV4(spark, dirs, cur)
       case Some(v) if v > StateVersion => throw versionRefusal(dirs, Some(v))
       case v => // absent or older: only an empty root may be stamped
         if (dirs.tables.exists(exists(spark, _))) throw versionRefusal(dirs, v)
-        writeVersion(spark, cfg, dirs, wantBandChunks(cfg))
+        writeVersion(spark, dirs, cur)
     }
   }
 
   private def readOrEmpty(spark: SparkSession, path: String, schemaOf: DataFrame): DataFrame =
     if (exists(spark, path)) FsOps.readParquet(spark, path)
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schemaOf.schema)
+    else spark.createDataFrame(java.util.List.of[org.apache.spark.sql.Row](), schemaOf.schema)
 
   /** Process one micro-batch of pages against the state under `dirs`.
     * Exposed for testing; `start` wires it into foreachBatch.
@@ -267,31 +257,30 @@ object IncrementalDedup {
       .localCheckpoint(false)
     if (newMemberRows.isEmpty) return
 
-    // ---- new contents = not yet in the signature state
-    val contents =
-      if (!exists(spark, dirs.signatures)) newContents
-      else newContents.join(FsOps.readParquet(spark, dirs.signatures).select("node_id"),
-        Seq("node_id"), "left_anti")
-    val sigs = Pipeline.signatures(contents, cfg).localCheckpoint(false)
+    // ---- new contents = not yet in the signature state; their rows carry
+    // the text, computed in the signature projection itself
+    val stored = readOrEmpty(spark, dirs.signatures,
+      Pipeline.signatures(newContents, cfg, withText = true))
+    val contents = newContents.join(stored.select("node_id"), Seq("node_id"), "left_anti")
+    val sigs = Pipeline.signatures(contents, cfg, withText = true).localCheckpoint(false)
 
     // ---- candidates: ONE banded pass over the batch's band rows and the
-    // stored rows sharing their keys (crossBatchCandidates). bandKeys
-    // includes the SimHash chunk keys when cfg.simhashTier is on, so the
-    // stored index probes every enabled tier.
+    // stored rows sharing their keys (crossBatchCandidates). Both sides'
+    // keys come from bandKeys under THIS config, so the probe follows any
+    // simhashTier or maxHamming change with no stored key to rebuild.
     val newBands = Pipeline.bandKeys(sigs, cfg)
-    val pairs = crossBatchCandidates(newBands, readOrEmpty(spark, dirs.bandIndex, newBands), cfg)
+    val pairs = crossBatchCandidates(newBands, Pipeline.bandKeys(stored, cfg), cfg)
       .localCheckpoint(false)
 
     // ---- verify: ONE exact pass by batch ST3's rule (exact shingle
     // Jaccard, SimHash Hamming, suffix-automaton LCS) over every pair. The
     // texts are this batch's contents plus the stored texts of the pairs'
-    // stored endpoints: the texts table is the one state dir whose BYTES
+    // stored endpoints: the text column is the state's one whose BYTES
     // grow with the live corpus, so only those rows are read (a node_id
     // semi-join before any shuffle) and per-batch text I/O is O(batch +
     // cross candidates). A re-published known content verifies on the
     // batch's copy of its text.
-    val texts = readOrEmpty(spark, dirs.texts, newContents.select("node_id", "text"))
-      .select("node_id", "text")
+    val texts = stored.select("node_id", "text")
       .join(pairs.select(col("stored_id").as("node_id")), Seq("node_id"), "left_semi")
       .unionByName(newContents.select("node_id", "text"))
       .dropDuplicates("node_id").localCheckpoint(false)
@@ -304,16 +293,14 @@ object IncrementalDedup {
     // derives "contents still to process" from presence in the SIGNATURES
     // table alone — so signatures must land LAST. A crash anywhere earlier
     // leaves the content absent from signatures and the replay recomputes
-    // everything (duplicate band/edge/text/member rows from the partial
-    // attempt are harmless: every consumer dedups — CC ignores repeated
-    // edges, the census distincts pairs, texts/members resolve per key —
-    // and compaction merges them durably). Signatures-first would invert
-    // that: a crash between it and the edges append would make the replay
-    // see "already processed" and the batch's candidate edges would be
-    // lost FOREVER (silent recall loss).
-    appendState(newBands, dirs.bandIndex)
+    // everything (duplicate edge/member rows from the partial attempt are
+    // harmless: CC ignores repeated edges and members resolve per url —
+    // and compaction merges them durably). A content's bands and text ride
+    // in its signature row, so they are never durable without it.
+    // Signatures-first would invert that: a crash between it and the edges
+    // append would make the replay see "already processed" and the batch's
+    // candidate edges would be lost FOREVER (silent recall loss).
     appendState(verified, dirs.edges)
-    appendState(contents.select("node_id", "text"), dirs.texts)
     appendState(newMemberRows, dirs.members)
     appendState(sigs, dirs.signatures) // LAST: gates replay recompute
     // The per-batch metrics row (the durable audit of a stream's candidate
@@ -422,8 +409,9 @@ object IncrementalDedup {
 
   /** The candidate pairs of a batch, new-vs-new and new-vs-stored, from
     * ONE banded pass ([[Pipeline.bandedPairs]]: census, salting, grouping)
-    * over the batch's band rows plus the stored band rows that share a key
-    * with them. Only pairs with at least one new endpoint are kept, as
+    * over the batch's band rows plus the stored band rows (`bandKeys` of
+    * the stored signature rows) that share a key with them. Only pairs
+    * with at least one new endpoint are kept, as
     * (id_a, id_b, stored_id), `stored_id` null for a new-vs-new pair.
     *
     * The census counts stored and new members together, so every cell is
@@ -433,18 +421,15 @@ object IncrementalDedup {
     * new-vs-new pair in a band that is hot only once its stored members
     * count is salted (or, beyond hardMaxBandGroup, dropped) too. The stored
     * side is semi-joined to the batch's band keys (broadcast: the stored
-    * index can hold billions of keys, the batch thousands), so the pass is
+    * rows can hold billions of keys, the batch thousands), so the pass is
     * O(batch bands + their stored groups).
     *
-    * Replay hygiene: foreachBatch is at-least-once and band rows land
-    * BEFORE the signature gate, so a crashed prior attempt of THIS batch
-    * may have already appended this batch's own band rows, and earlier
-    * crashed batches can leave duplicate rows in the index until
-    * compaction dedups it. The combined table is therefore reduced to one
-    * row per (node, key), a batch node staying new — a raw row count would
-    * inflate a band across maxBandGroup (spurious salting, partial recall)
-    * or hardMaxBandGroup (the band silently dropped, and its cross pairs
-    * are never re-probed once both sides hold signatures). */
+    * The combined table is reduced to one row per (node, key), a batch node
+    * staying new. A batch appends only contents absent from the stored
+    * rows, so they hold each node once, but over a root that holds one
+    * twice (hand-merged state) a raw row count would push a band across
+    * maxBandGroup (spurious salting) or hardMaxBandGroup (the band silently
+    * dropped, its cross pairs never re-probed). */
   private[graft] def crossBatchCandidates(newBands: DataFrame, storedBands: DataFrame,
       cfg: GraftConfig): DataFrame = {
     val stored = storedBands.select("node_id", "band_key")
@@ -495,8 +480,9 @@ object IncrementalDedup {
     * reference's device-number remap maintenance op
     * (/root/reference/src/file_db.rs:656-794): when the node-id derivation
     * changes (e.g. a hash-config migration), stored state is RE-KEYED under
-    * an (old_id, new_id) mapping instead of recomputed — signatures, band
-    * index, member bindings, edges, and cluster labels all carry over.
+    * an (old_id, new_id) mapping instead of recomputed — signature rows,
+    * member bindings, edges, and cluster labels all carry over. A v4 root
+    * is first upgraded in place, as `processBatch` does.
     * The mapping's provenance is the caller's (e.g. joining old and new
     * ST0 outputs on url or exact_hash); ids absent from the mapping pass
     * through unchanged.
@@ -516,12 +502,19 @@ object IncrementalDedup {
     dirs.tables.foreach(t => FsOps.recoverSwap(conf, new Path(t)))
     // Version gate BEFORE any journal write: a remap over state of another
     // version would journal and rewrite tables that processBatch refuses
-    // anyway, or fail midway on their older columns. Refuse up front, as
-    // processBatch does.
+    // anyway, or fail midway on their older columns. Upgrade a v4 root
+    // (unless a v4 remap left its tables keyed inconsistently) and refuse
+    // any other, as processBatch does.
     if (dirs.tables.exists(exists(spark, _))) {
-      val v = FsOps.readRecord(conf, new Path(dirs.versionFile))
-        .flatMap(_.get("version")).map(_.toInt)
-      if (!v.contains(StateVersion)) throw versionRefusal(dirs, v)
+      val record = FsOps.readRecord(conf, new Path(dirs.versionFile)).getOrElse(Map.empty)
+      record.get("version").map(_.toInt) match {
+        case Some(StateVersion) =>
+        case Some(4) if exists(spark, dirs.remapJournal) =>
+          throw new IllegalStateException(s"incremental state at ${dirs.root} is schema v4 " +
+            "with an interrupted remap - finish it with the release that started it")
+        case Some(4) => upgradeV4(spark, dirs, record.getOrElse("sig_config", ""))
+        case v => throw versionRefusal(dirs, v)
+      }
     }
     val m = mapping.select(col("old_id").cast("long").as("old_id"),
       col("new_id").cast("long").as("new_id")).distinct().localCheckpoint(true)
@@ -531,7 +524,7 @@ object IncrementalDedup {
       s"remap mapping is not 1-to-1 ($dupOld duplicated old ids, $dupNew duplicated new ids) " +
         "- refusing: applying it would merge or split content identities")
 
-    // Multi-table journal: the remap rewrites six tables and a crash in
+    // Multi-table journal: the remap rewrites four tables and a crash in
     // between leaves them keyed inconsistently. The journal (mapping hash +
     // completed-table list, atomically renamed after each table) makes the
     // op RESUMABLE: re-running the same mapping skips completed tables and
@@ -555,13 +548,12 @@ object IncrementalDedup {
     // a new id colliding with a stored id the mapping does NOT touch would
     // merge two distinct contents under one key (checked over the tables
     // not yet rewritten — completed ones legitimately hold the new ids).
-    // edges/band_index ids are normally subsets of the node-id tables, but
-    // the scan includes them anyway: if that invariant is ever broken (e.g.
+    // edges ids are normally subsets of the node-id tables, but the scan
+    // includes them anyway: if that invariant is ever broken (e.g.
     // partial manual state surgery), a collision there must refuse too,
     // not silently merge — the extra scan is cheap next to the rewrite.
     val nodeIdTables =
-      Seq("signatures" -> dirs.signatures, "members" -> dirs.members, "clusters" -> dirs.clusters,
-        "band_index" -> dirs.bandIndex, "texts" -> dirs.texts)
+      Seq("signatures" -> dirs.signatures, "members" -> dirs.members, "clusters" -> dirs.clusters)
         .filter { case (name, p) => !done.contains(name) && exists(spark, p) }
         .map { case (_, p) => FsOps.readParquet(spark, p).select(col("node_id").as("id")) }
     val edgeIdTables =
@@ -600,8 +592,6 @@ object IncrementalDedup {
       }
     }
     rewrite("signatures", dirs.signatures)(remapCol(_, "node_id"))
-    rewrite("texts", dirs.texts)(remapCol(_, "node_id"))
-    rewrite("band_index", dirs.bandIndex)(remapCol(_, "node_id"))
     rewrite("members", dirs.members)(remapCol(_, "node_id"))
     rewrite("edges", dirs.edges) { e =>
       val r = remapCol(remapCol(e.withColumnRenamed("id_a", "a").withColumnRenamed("id_b", "b"),
@@ -623,27 +613,26 @@ object IncrementalDedup {
 
   /** Rewrite accumulated state compacted when any dir's file count exceeds
     * cfg.incCompactFileThreshold. Without this, `appendParquet` adds files
-    * per batch forever, and every batch's scans of the edges, band index,
-    * signatures and texts tables (map-side, against batch-sized key sets)
-    * pay for each file and each duplicate or dead row of the whole history.
+    * per batch forever, and every batch's scans of the edges and signatures
+    * tables (map-side, against batch-sized key sets) pay for each file and
+    * each duplicate or dead row of the whole history.
     * Compaction:
     *  - members -> latest binding per url (exactly the reduction every
     *    resolution path computes; superseded history carries no signal);
     *  - edges -> distinct, endpoints restricted to LIVE nodes (an edge on a
     *    node no url binds cannot affect clustering; cluster time retires
     *    them anyway — compaction just stops paying to rescan them);
-    *  - band_index / signatures / texts -> live nodes only. This trades the
-    *    "resurrected content needs no recompute" property for bounded
-    *    state: a url reverting to GC'd content re-enters as new content
-    *    (the batch carries its text, so the signature is recomputed and
-    *    re-indexed — same clusters, one extra signature's compute).
+    *  - signatures -> live nodes only. This trades the "resurrected
+    *    content needs no recompute" property for bounded state: a url
+    *    reverting to GC'd content re-enters as new content (the batch
+    *    carries its text, so the signature row is recomputed — same
+    *    clusters, one extra signature's compute).
     * Returns true when a compaction ran (test hook). */
   private[streaming] def compactStateIfNeeded(spark: SparkSession, cfg: GraftConfig,
       dirs: StateDirs): Boolean = {
     val threshold = cfg.incCompactFileThreshold
     if (threshold <= 0 || !exists(spark, dirs.clusters)) return false
-    val dirsToWatch = Seq(dirs.members, dirs.edges, dirs.bandIndex, dirs.signatures,
-      dirs.metrics, dirs.texts)
+    val dirsToWatch = Seq(dirs.members, dirs.edges, dirs.signatures, dirs.metrics)
     if (!dirsToWatch.exists(p => FsOps.fileCount(hconf(spark), new Path(p)) > threshold))
       return false
 
@@ -653,10 +642,6 @@ object IncrementalDedup {
       if (exists(spark, path)) replaceTable(f(FsOps.readParquet(spark, path)), path)
     rewrite(dirs.members)(latestBinding)
     rewrite(dirs.signatures)(_.join(live, Seq("node_id"), "left_semi"))
-    // texts: live nodes only, one row per node (a replayed batch may have
-    // appended a content twice)
-    rewrite(dirs.texts)(_.dropDuplicates("node_id").join(live, Seq("node_id"), "left_semi"))
-    rewrite(dirs.bandIndex)(_.distinct().join(live, Seq("node_id"), "left_semi"))
     rewrite(dirs.edges) { e =>
       e.distinct()
         .join(live.withColumnRenamed("node_id", "id_a"), Seq("id_a"), "left_semi")
@@ -671,7 +656,7 @@ object IncrementalDedup {
   }
 
   /** Replace the table at `path` with `df`, which may read that very table
-    * (clusters derive from the previous clusters; migration, compaction and
+    * (clusters derive from the previous clusters; upgrade, compaction and
     * remap rewrite a table from itself): `df` is written to a fresh
     * `<path>.tmp-*` dir and swapped in only once complete — never an
     * in-place overwrite of its own input. [[FsOps.swapDir]] keeps the old or

@@ -24,8 +24,7 @@ class CodecSpec extends SparkSpec {
   private val cfg = GraftConfig(ccLocalThreshold = 0L)
   private val stages = Seq("st0_extracted", "st1_signatures", "st2_candidates",
     "st3_verified", "st4_clusters", "st5_report")
-  private val stateTables = Set("signatures", "band_index", "members", "texts", "edges",
-    "clusters", "metrics")
+  private val stateTables = Set("signatures", "members", "edges", "clusters", "metrics")
 
   private def conf = spark.sparkContext.hadoopConfiguration
 

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import graft.checkpoint.FsOps
 import graft.fixtures.PagesGen
 
 /** The spark-submit entrypoint (graft.Main): CLI parsing, output layout,
@@ -168,6 +169,27 @@ class MainSpec extends SparkSpec {
     // loads are; an inferring read would make this resume 11 jobs.
     val dir = Files.createTempDirectory("graft-main-resume-jobs").toString
     PagesGen.pages(spark, PagesGen.Spec(nUnits = 30)).write.parquet(s"$dir/pages")
+    def argv(out: String) = Main.parse(Seq("--input", s"$dir/pages", "--output", s"$dir/$out",
+      "--checkpoint", s"$dir/ck"))
+    Main.run(spark, argv("out1"))
+    val (_, n) = countingJobs(Main.run(spark, argv("out2")))
+    val metrics = new String(Files.readAllBytes(java.nio.file.Paths.get(s"$dir/out2/metrics.json")))
+    """"wall_ms":(\d+)""".r.findAllMatchIn(metrics).map(_.group(1)).toSet shouldBe Set("0")
+    assert(n <= 10, s"resumed Main.run started $n Spark jobs")
+  }
+
+  test("a fully resumed Main.run on a partitioned input starts no schema-inference job") {
+    // The footer schema comes from the first file under the k=v dirs, and
+    // Spark appends the partition columns it discovers from their names,
+    // as an inferring read does; an inferring read would make this 11.
+    import org.apache.spark.sql.functions.{col, pmod, xxhash64}
+    val dir = Files.createTempDirectory("graft-main-resume-parts").toString
+    PagesGen.pages(spark, PagesGen.Spec(nUnits = 30))
+      .withColumn("half", pmod(xxhash64(col("url")), org.apache.spark.sql.functions.lit(2)))
+      .write.partitionBy("half").parquet(s"$dir/pages")
+    val inferred = spark.read.parquet(s"$dir/pages").schema
+    FsOps.readParquet(spark, s"$dir/pages").schema shouldBe inferred
+    inferred.fieldNames.last shouldBe "half"
     def argv(out: String) = Main.parse(Seq("--input", s"$dir/pages", "--output", s"$dir/$out",
       "--checkpoint", s"$dir/ck"))
     Main.run(spark, argv("out1"))
