@@ -28,6 +28,10 @@ import graft.model.GraftConfig
   *                               written; one small JSON array; `bytes` is
   *                               the committed snapshot's file bytes)
   *
+  * Once they are written, the checkpoint retires every stage but the
+  * ST4/ST5 snapshots the sinks read (each stage keeps its manifest), so a
+  * finished checkpoint holds no copy of the page text.
+  *
   * The outputs keep the session's parquet codec; only the engine's own
   * durable tables are always zstd ([[graft.checkpoint.FsOps.writeParquet]]).
   *
@@ -121,6 +125,20 @@ object Main {
     run(builder.getOrCreate(), args)
   }
 
+  /** The key a `--checkpoint` run stamps on its snapshots: the config hash
+    * with the INPUT LOCATOR folded in. ParquetSnapshotIO reuses any stage
+    * committed under the same key, and a checkpoint dir pointed at a
+    * different --input/--table must never silently serve the previous
+    * corpus's stages. (Locator identity, not content identity — re-running
+    * after in-place input mutation is the operator's call, same as the
+    * reference's resume flags.) */
+  def snapshotKey(args: CliArgs): String =
+    args.cfg.configHash + "-" + java.lang.Long.toHexString(
+      graft.util.Hashing.hashString(args.table.getOrElse(args.input.get), 7L))
+
+  /** The stages the sinks read; a finished run retires the others. */
+  private val SinkStages = Set("st4_clusters", "st5_report")
+
   /** Session-injected body (tests drive this directly; main wraps it). */
   def run(spark: SparkSession, args: CliArgs): Unit = {
     val pages = args.table match {
@@ -129,17 +147,8 @@ object Main {
       // schema (no inference job); other inputs fall back to inference
       case None    => FsOps.readParquet(spark, args.input.get)
     }
-    // The snapshot key folds the INPUT LOCATOR into the config hash:
-    // ParquetSnapshotIO reuses any stage committed under the same key, and
-    // a checkpoint dir pointed at a different --input/--table must never
-    // silently serve the previous corpus's stages. (Locator identity, not
-    // content identity — re-running after in-place input mutation is the
-    // operator's call, same as the reference's resume flags.)
-    val inputId = args.table.getOrElse(args.input.get)
-    val snapshotKey = args.cfg.configHash + "-" +
-      java.lang.Long.toHexString(graft.util.Hashing.hashString(inputId, 7L))
     val io: TableIO = args.checkpoint match {
-      case Some(dir) => new ParquetSnapshotIO(dir, snapshotKey)
+      case Some(dir) => new ParquetSnapshotIO(dir, snapshotKey(args))
       case None      => NoCheckpointIO
     }
     val out = args.output.get
@@ -163,6 +172,10 @@ object Main {
     val os = fs.create(outPath, true)
     try os.write(metricsJson.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally os.close()
+
+    // Every output is written: a resume reads only ST4 and ST5, so the
+    // checkpoint drops the rest (page text included) and keeps manifests.
+    io.retire(spark, SinkStages)
 
     val stageSummary = metrics.map(m => s"${m.stage}=${m.rows_out}").mkString(" ")
     println(s"[graft] done: $stageSummary -> $out")

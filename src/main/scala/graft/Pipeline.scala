@@ -21,7 +21,9 @@ import graft.checkpoint.{Manifest, NoCheckpointIO, TableIO}
   * /root/reference/src/main.rs:114-131).
   * Six stages commit. Like the reference's checkpoint database, which keeps
   * hashes and sizes rather than file contents, a durable run stores the
-  * page text once (in ST0) and only what a later stage reads.
+  * page text once (in ST0) and only what a later stage reads, and a
+  * finished `Main.run` retires ST0-ST3: its checkpoint keeps the ST4/ST5
+  * snapshots its resume reads and every stage's manifest, no page text.
   *
   * Scale design (100 TB):
   *  - ST1 computes each signature once per distinct text
@@ -43,19 +45,30 @@ import graft.checkpoint.{Manifest, NoCheckpointIO, TableIO}
   */
 object Pipeline {
 
-  final case class Result(
-      extracted: DataFrame,
-      signatures: DataFrame,
-      candidates: DataFrame,
-      verified: DataFrame,
-      clusters: DataFrame,
-      report: DataFrame,
+  /** The six committed stages' frames, each resolved on first use: loaded
+    * when committed, else computed (with whatever it reads) and committed.
+    * `run` resolves `report`, and with it every stage that must be computed
+    * for it; any other frame resolves only when a caller asks for it. */
+  final class Result(
+      st0: => DataFrame,
+      st1: => DataFrame,
+      st2: => DataFrame,
+      st3: => DataFrame,
+      st4: => DataFrame,
+      val report: DataFrame,
       metricsFn: () => Seq[StageMetrics]
   ) {
-    /** Stage metrics. Evaluated on demand: the ST2 band-guard counters ride
-      * on the cached census table, so reading them runs one tiny job over
-      * cached partitions instead of forcing a driver sync inside the
-      * pipeline itself (the Amdahl floor the north rule measures). */
+    def extracted: DataFrame = st0
+    def signatures: DataFrame = st1
+    def candidates: DataFrame = st2
+    def verified: DataFrame = st3
+    def clusters: DataFrame = st4
+
+    /** Stage metrics, one row per stage in pipeline order, as of the first
+      * read. Evaluated on demand: the ST2 band-guard counters ride on the
+      * cached census table, so reading them runs one tiny job over cached
+      * partitions instead of forcing a driver sync inside the pipeline
+      * itself (the Amdahl floor the north rule measures). */
     lazy val metrics: Seq[StageMetrics] = metricsFn()
   }
 
@@ -325,7 +338,8 @@ object Pipeline {
   /** Exact verification of candidate pairs: shingle Jaccard, SimHash
     * Hamming, suffix-automaton LCS. Pure typed mapPartitions — no UDF.
     * Pass rule (SURVEY.md §3.4 ST3): (J >= minJaccard OR hamming <=
-    * maxHamming) AND lcs_ratio >= minLcsRatio. */
+    * maxHamming) AND lcs_ratio >= minLcsRatio; `lcs_ratio` is computed
+    * only where the second clause can decide (see GraftConfig.minLcsRatio). */
   def verifyPairs(
       candidates: DataFrame,
       contents: DataFrame, // (node_id, text) one row per distinct content
@@ -390,11 +404,12 @@ object Pipeline {
         // the pass rule only ANDs the lcs floor onto J-OR-Hamming, so a
         // pair the cheap clause rejects is rejected at ANY floor and its
         // automaton is pure waste. Skipped pairs carry lcs_ratio = NaN
-        // ("not computed"), never a fabricated number — NaN >= floor is
-        // false, so downstream re-scoring at other floors stays correct.
+        // ("not computed"), never a fabricated number.
+        // At a floor of 0 no computed ratio (always >= 0) can reject a
+        // pair, so the automaton runs only when the floor is positive.
         val cheap = j >= minJ || ham <= maxH
-        val lcs = if (cheap) Lcs.lcsRatio(ta, tb) else Double.NaN
-        val passed = cheap && lcs >= minL
+        val lcs = if (cheap && minL > 0) Lcs.lcsRatio(ta, tb) else Double.NaN
+        val passed = cheap && (minL <= 0 || lcs >= minL)
         VerifiedPair(idA, idB, j, ham, lcs, passed)
       }
     }.toDF()
@@ -571,75 +586,89 @@ object Pipeline {
   }
 
   // ------------------------------------------------------------- runner
-  /** Run all stages through `io` with per-stage atomic commits, resume, and
-    * metrics rows. Stages already committed under the same config hash are
-    * loaded, not recomputed. */
+  /** The committed stages, in pipeline order. */
+  val Stages: Seq[String] = Seq("st0_extracted", "st1_signatures", "st2_candidates",
+    "st3_verified", "st4_clusters", "st5_report")
+
+  /** Run the stages through `io` with per-stage atomic commits, resume, and
+    * metrics rows. Every stage committed under the same config hash is
+    * loaded (a load starts no Spark job). A stage that is not is computed
+    * only if a stage being computed reads it, ST5 always being resolved:
+    * the reference's "resume at the highest committed stage". A missing
+    * stage that nothing reads is listed in the metrics from its manifest,
+    * with `bytes` and `wall_ms` 0, and computed only if a caller asks for
+    * its frame. */
   def run(
       spark: SparkSession,
       pages: DataFrame,
       cfg: GraftConfig,
       io: TableIO = NoCheckpointIO
   ): Result = {
-    val metrics = scala.collection.mutable.ArrayBuffer[StageMetrics]()
-    var prevRows = -1L // rows_in of stage N = rows_out of stage N-1
+    val committed = Stages.flatMap(st => io.load(spark, st).map(st -> _)).toMap
+    // (manifest, wall_ms) of every stage computed so far
+    val computed = scala.collection.mutable.Map[String, (Manifest, Long)]()
+    var nestedNs = 0L // time spent resolving the stages a computing stage reads
 
-    def stage(name: String)(compute: => DataFrame): DataFrame = {
-      io.load(spark, name) match {
-        case Some((df, m)) =>
-          // rows_in is the PREVIOUS stage's row count even for a loaded
-          // stage — filling it with the stage's own rowCount would make
-          // every resumed stage report selectivity 1.0 in the lineage.
-          metrics += StageMetrics(name, m.snapshotId, -1, prevRows, m.rowCount, 0, m.bytes, 0, m.configHash)
-          prevRows = m.rowCount
-          df
-        case None =>
-          val t0 = System.nanoTime()
-          val (df, m) = io.commit(compute, name)
-          val wallMs = (System.nanoTime() - t0) / 1000000
-          metrics += StageMetrics(name, m.snapshotId, -1, prevRows, m.rowCount, 0, m.bytes, wallMs, m.configHash)
-          prevRows = m.rowCount
-          df
-      }
+    def stage(name: String)(compute: => DataFrame): DataFrame = committed.get(name) match {
+      case Some((df, _)) => df
+      case None =>
+        // A stage's inputs resolve inside `compute`: their time is theirs,
+        // so it is taken out of this stage's wall.
+        val outer = nestedNs
+        nestedNs = 0L
+        val t0 = System.nanoTime()
+        val (df, m) = io.commit(compute, name)
+        val total = System.nanoTime() - t0
+        computed(name) = (m, (total - nestedNs) / 1000000)
+        nestedNs = outer + total
+        df
     }
 
-    // ST0 holds the only committed copy of the page text: ST1 and ST3 each
-    // derive the distinct contents from it inline (ST3's is pruned to the
-    // candidate ids before its dedup shuffle, see verifyInput).
-    val extracted = stage("st0_extracted")(extract(pages, cfg))
-    val sigs = stage("st1_signatures")(signatures(distinctContents(extracted), cfg))
+    // ST0 is the committed copy of the page text while a run is under way:
+    // ST1 and ST3 each derive the distinct contents from it inline (ST3's
+    // is pruned to the candidate ids before its dedup shuffle, see
+    // verifyInput); a finished Main.run retires it with ST1-ST3.
+    lazy val extracted = stage("st0_extracted")(extract(pages, cfg))
+    lazy val sigs = stage("st1_signatures")(signatures(distinctContents(extracted), cfg))
 
     var bandStats: Option[() => BandStats] = None
-    val candidates = stage("st2_candidates") {
+    lazy val candidates = stage("st2_candidates") {
       val c = candidatePairs(sigs, cfg)
       bandStats = Some(c.stats)
       c.pairs
     }
 
-    val verified = stage("st3_verified")(verifyPairs(candidates, distinctContents(extracted), cfg))
+    lazy val verified = stage("st3_verified")(verifyPairs(candidates, distinctContents(extracted), cfg))
     // Durable IOs extend resume INSIDE ST4: the CC loop commits its edge
     // table per round under io.ccDurableDir, so a crash mid-loop resumes
     // from the last committed round, not from scratch.
-    val clusters = stage("st4_clusters")(cluster(extracted, verified, cfg, io.ccDurableDir))
+    lazy val clusters = stage("st4_clusters")(cluster(extracted, verified, cfg, io.ccDurableDir))
     val rep = stage("st5_report")(report(clusters))
 
-    val base = metrics.toSeq
-    // Band-guard counters attach lazily: reading Result.metrics runs one
-    // tiny job over the cached ST2 census; the pipeline itself keeps zero
-    // metric-only driver actions (the serial floor the north rule measures).
-    val metricsFn = () => bandStats match {
-      case Some(f) =>
-        val s = f()
-        base.map {
-          // bandStats is Some only when ST2 was COMPUTED this run (a
-          // loaded stage never assigns it).
-          case m if m.stage == "st2_candidates" =>
-            m.copy(dropped_by_guard = s.droppedBandGroups,
-              salted_groups = s.saltedBandGroups, salted_members = s.saltedMembers)
-          case m => m
+    val metricsFn = () => {
+      var prevRows = -1L // rows_in of stage N = rows_out of stage N-1
+      Stages.map { st =>
+        val (m, wallMs) = computed.get(st)
+          .orElse(committed.get(st).map { case (_, m) => (m, 0L) })
+          .orElse(io.manifest(spark, st).map(m => (m.copy(bytes = 0L), 0L))) // retired: data gone
+          .getOrElse((Manifest("none", "none", -1L, st), 0L)) // no record at all
+        // rows_in is the PREVIOUS stage's row count even for a loaded
+        // stage — filling it with the stage's own rowCount would make
+        // every resumed stage report selectivity 1.0 in the lineage.
+        val row = StageMetrics(st, m.snapshotId, -1, prevRows, m.rowCount, 0, m.bytes, wallMs, m.configHash)
+        prevRows = m.rowCount
+        // Band-guard counters attach lazily: reading them runs one tiny job
+        // over the cached ST2 census; the pipeline itself keeps zero
+        // metric-only driver actions (the serial floor the north rule
+        // measures). bandStats is Some only when ST2 was COMPUTED this run.
+        bandStats.filter(_ => st == "st2_candidates").fold(row) { f =>
+          val s = f()
+          row.copy(dropped_by_guard = s.droppedBandGroups,
+            salted_groups = s.saltedBandGroups, salted_members = s.saltedMembers)
         }
-      case None => base
+      }
     }
 
-    Result(extracted, sigs, candidates, verified, clusters, rep, metricsFn)
+    new Result(extracted, sigs, candidates, verified, clusters, rep, metricsFn)
   }
 }

@@ -12,7 +12,12 @@ import org.apache.spark.sql.functions._
   * snapshot table per stage plus a `_manifest.json` whose existence+content
   * is the commit record. Resume = "highest stage with a committed snapshot
   * under the current config hash", exactly generalizing the reference's
-  * `--resume-stage3/4` entry points (/root/reference/src/main.rs:114-119).
+  * `--resume-stage3/4` entry points (reference src/main.rs:114-119):
+  * `Pipeline.run` computes a stage only when a stage it computes reads it.
+  *
+  * A finished run [[retire]]s the snapshots its resume does not read, so a
+  * completed checkpoint keeps only those plus every stage's manifest, as
+  * the reference's database keeps hashes and sizes, never file contents.
   *
   * The durable impl is zstd Parquet ([[FsOps.writeParquet]]) plus a
   * rename-based atomic manifest on any Hadoop filesystem; all resume
@@ -21,6 +26,16 @@ import org.apache.spark.sql.functions._
 trait TableIO {
   /** Committed snapshot for `stage` under `configHash`, if any. */
   def load(spark: SparkSession, stage: String): Option[(DataFrame, Manifest)]
+
+  /** The commit record of `stage` under `configHash`, also when its data
+    * has been retired: the record that the stage ran, and its row count. */
+  def manifest(spark: SparkSession, stage: String): Option[Manifest] = load(spark, stage).map(_._2)
+
+  /** Drop the data of every committed stage outside `keep`, and any scratch
+    * state that only a stage still to be computed reads. Called once a
+    * run's outputs are written; a resume that reads only `keep` is
+    * unaffected, and any other stage is recomputed if a resume needs it. */
+  def retire(spark: SparkSession, keep: Set[String]): Unit = ()
 
   /** Atomically commit `df` as the snapshot for `stage`. Returns the
     * re-loaded (durable) DataFrame plus the manifest written. */
@@ -86,6 +101,11 @@ object Manifest {
   * of the reference's atomic progress counters (process_matches.rs:85-96),
   * built on read from the files' footers and the manifest.
   *
+  * Layout: `<root>/<stage>/_manifest.json` and the `snap-*` data dir it
+  * names, plus ST4's per-round CC store under `<root>/st4_cc/<hash>`.
+  * [[retire]] deletes the `snap-*` dirs of the stages it does not keep and
+  * the CC store, and keeps every manifest.
+  *
   * A commit runs one Spark job, the data write. Row count and bytes are
   * read from the written files' footers, and the read-back passes the
   * written schema. A load passes the schema Spark stored in the snapshot's
@@ -137,6 +157,24 @@ final class ParquetSnapshotIO(root: String, configHash: String) extends TableIO 
     committed(spark, stage)
       .filter(_._1.configHash == configHash) // stale-config snapshots are ignored
       .map { case (m, data) => (FsOps.readParquet(spark, data.toString), m) }
+
+  override def manifest(spark: SparkSession, stage: String): Option[Manifest] =
+    FsOps.readRecord(hconf(spark), manifestPath(stage)).flatMap(Manifest.fromRecord)
+      .filter(_.configHash == configHash)
+
+  /** Every stage dir under `root` outside `keep` loses its `snap-*` dirs,
+    * and this config's CC round store goes (it is read only while ST4 is
+    * computed). Manifests stay. Best effort, like the commit GC: a dir that
+    * resists is swept by the next retire, and a crash midway leaves stages
+    * that the next finished run retires. */
+  override def retire(spark: SparkSession, keep: Set[String]): Unit = {
+    val conf = hconf(spark)
+    FsOps.listDirs(conf, new Path(root))
+      .filter(d => !keep(d.getName) && FsOps.exists(conf, manifestPath(d.getName)))
+      .flatMap(FsOps.listDirs(conf, _)).filter(_.getName.startsWith("snap-"))
+      .foreach(FsOps.deleteRecursive(conf, _))
+    FsOps.deleteRecursive(conf, new Path(stageDir("st4_cc"), configHash))
+  }
 
   /** Per-file lineage rows of the committed snapshot (resolved through the
     * manifest — snapshot ids are unique per commit, see commit()): one row

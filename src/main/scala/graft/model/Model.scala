@@ -25,13 +25,15 @@ final case class GraftConfig(
       * come from similar shingle sets), so the default spends no extra
       * shuffle on the chunk keys; corpora where the Hamming gate must not
       * ride the s-curve turn it on. Incremental mode inherits the knob —
-      * chunk keys are stored in the same durable band index. */
+      * a batch derives the stored rows' chunk keys from their `simhash` at
+      * probe time (`Pipeline.bandKeys`), so toggling it needs no rebuild. */
     simhashTier: Boolean = false,
     /** Longest-common-substring ratio (lcs_len / min(len_a, len_b)) floor.
-      * 0.0 disables the LCS gate; lcs_ratio is computed for every pair that
-      * passes the cheap J-OR-Hamming clause (cheap-rejected pairs skip the
-      * suffix automaton and carry NaN — the floor only ANDs onto the cheap
-      * clause, so their verdict is floor-independent).
+      * 0.0 disables the LCS gate. Above 0, lcs_ratio is computed for every
+      * pair that passes the cheap J-OR-Hamming clause; every other pair
+      * carries NaN and skips the suffix automaton: a cheap-rejected pair
+      * fails at any floor (the floor only ANDs onto the cheap clause), and
+      * at 0 no ratio, which is never below 0, can reject a pair.
       * The 0.0 default is the measured planted-truth optimum (PipelineSpec
       * "LCS gate A/B"): every floor in {0.3, 0.5} gains zero precision (the
       * J-OR-Hamming gate already rejects all planted negatives, and the

@@ -58,6 +58,11 @@ class CodecSpec extends SparkSpec {
     val dir = tmp("graft-codec")
     val pages = PagesGen.pages(spark, PagesGen.Spec(nUnits = 40))
     pages.write.parquet(s"$dir/pages")
+    // a durable Pipeline.run root is never retired: every stage snapshot and
+    // the CC round store stay
+    val pipelineCk = s"$dir/pipeline-ck"
+    Pipeline.run(spark, spark.read.parquet(s"$dir/pages"), cfg, new ParquetSnapshotIO(pipelineCk, cfg.configHash))
+    // a finished Main.run keeps the ST4/ST5 snapshots its resume reads
     val (ck, out) = (s"$dir/ck", s"$dir/out")
     Main.run(spark, Main.parse(Seq("--input", s"$dir/pages", "--output", out,
       "--checkpoint", ck)).copy(cfg = cfg))
@@ -66,7 +71,11 @@ class CodecSpec extends SparkSpec {
       IncrementalDedup.processBatch(b, cfg, dirs, i + 1L)
     }
 
-    val durable = codecsUnder(ck) ++ codecsUnder(dirs.root).map { case (d, c) => s"state/$d" -> c }
+    val retained = codecsUnder(ck)
+    assert(retained.keys.map(_.takeWhile(_ != '/')).toSet == Set("st4_clusters", "st5_report") &&
+      retained.keys.forall(_.contains("/snap-")), s"a finished Main.run root holds ${retained.keys}")
+    val durable = codecsUnder(pipelineCk) ++ retained.map { case (d, c) => s"main/$d" -> c } ++
+      codecsUnder(dirs.root).map { case (d, c) => s"state/$d" -> c }
     stages.foreach(st =>
       assert(durable.keys.exists(_.startsWith(s"$st/snap-")), s"no $st snapshot in ${durable.keys}"))
     assert(durable.keys.exists(_.startsWith("st4_cc/")), s"no CC round store in ${durable.keys}")

@@ -138,8 +138,9 @@ class MainSpec extends SparkSpec {
       "st3_verified", "st4_clusters", "st5_report")
     all(stageBytes.values) should be > 0L
 
-    // second run under the same checkpoint RESUMES (loads every committed
-    // stage — wall_ms 0 markers in metrics) and reproduces the outputs
+    // second run under the same checkpoint RESUMES (loads the ST4/ST5
+    // snapshots the first run kept — wall_ms 0 markers in metrics) and
+    // reproduces the outputs
     // (fresh output dir: Spark's session-level file index caches the first
     // run's part files, so overwriting in place would poison the re-read)
     val argv2 = Seq("--input", inPath, "--output", s"$dir/out2",
@@ -162,6 +163,51 @@ class MainSpec extends SparkSpec {
       java.nio.file.Paths.get(s"$dir/out3/metrics.json")))
     metrics3 should not include "\"wall_ms\":0"
     spark.read.parquet(s"$dir/out3/report").count() should not be report.count()
+  }
+
+  /** (stage, rows_in, rows_out, wall_ms) of every row of a metrics.json. */
+  private def stageRows(metricsJson: String): Seq[(String, Long, Long, Long)] =
+    """"stage":"(\w+)","rows_in":(-?\d+),"rows_out":(-?\d+),[^\n]*"wall_ms":(\d+)""".r
+      .findAllMatchIn(metricsJson)
+      .map(m => (m.group(1), m.group(2).toLong, m.group(3).toLong, m.group(4).toLong)).toSeq
+
+  test("a finished checkpointed Main.run keeps only what its resume reads") {
+    import java.nio.file.{Path => JPath, Paths}
+    import scala.jdk.CollectionConverters._
+    val dir = Files.createTempDirectory("graft-main-retire").toString
+    PagesGen.pages(spark, PagesGen.Spec(nUnits = 40)).write.parquet(s"$dir/pages")
+    // the distributed CC path, so a per-round CC store is written too
+    val cfg = graft.model.GraftConfig(ccLocalThreshold = 0L)
+    def argv(out: String) = Main.parse(Seq("--input", s"$dir/pages", "--output", s"$dir/$out",
+      "--checkpoint", s"$dir/ck")).copy(cfg = cfg)
+    Main.run(spark, argv("out1"))
+
+    val ck = Paths.get(s"$dir/ck")
+    def children(p: JPath): Seq[String] =
+      if (!Files.exists(p)) Nil else Files.list(p).iterator().asScala.map(_.getFileName.toString).toSeq
+    val withData = Pipeline.Stages.filter(st => children(ck.resolve(st)).exists(_.startsWith("snap-")))
+    withData shouldBe Seq("st4_clusters", "st5_report")
+    Pipeline.Stages.foreach { st =>
+      assert(Files.exists(ck.resolve(st).resolve("_manifest.json")), s"$st lost its manifest")
+    }
+    assert(children(ck.resolve("st4_cc")).isEmpty, s"CC store left: ${children(ck.resolve("st4_cc"))}")
+
+    val (_, n) = countingJobs(Main.run(spark, argv("out2")))
+    def rows(out: String, t: String) = {
+      val df = if (t == "reference_json") spark.read.text(s"$dir/$out/$t") else spark.read.parquet(s"$dir/$out/$t")
+      df.collect().map(_.toString).toSeq.sorted
+    }
+    Seq("report", "canonical_map", "reference_json").foreach { t =>
+      assert(rows("out1", t).nonEmpty, s"$t is empty")
+      rows("out2", t) shouldBe rows("out1", t)
+    }
+    val metrics = stageRows(new String(Files.readAllBytes(Paths.get(s"$dir/out2/metrics.json"))))
+    metrics.map(_._1) shouldBe Pipeline.Stages
+    metrics.head._2 shouldBe -1L
+    assert(metrics.zip(metrics.tail).forall { case (p, m) => m._2 == p._3 && m._2 >= 0 },
+      s"broken lineage chain: $metrics")
+    metrics.map(_._4).toSet shouldBe Set(0L)
+    assert(n <= 10, s"resumed Main.run started $n Spark jobs")
   }
 
   test("a fully resumed Main.run on a flat input starts no schema-inference job") {

@@ -119,19 +119,48 @@ class PipelineSpec extends SparkSpec {
     assert(memberUrls.subsetOf(corpusUrls))
   }
 
+  /** node_id -> text of the default run's distinct contents. */
+  private lazy val texts: Map[Long, String] = Pipeline.distinctContents(result.extracted)
+    .select("node_id", "text").collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+
+  /** The LCS ratio of a verified row's two texts, computed here. */
+  private def lcsOf(r: org.apache.spark.sql.Row): Double =
+    graft.verify.Lcs.lcsRatio(texts(r.getAs[Long]("id_a")), texts(r.getAs[Long]("id_b")))
+
+  private def cheap(r: org.apache.spark.sql.Row): Boolean =
+    r.getAs[Double]("jaccard") >= cfg.minJaccard || r.getAs[Int]("hamming") <= cfg.maxHamming
+
   test("verified measures are sane (jaccard/hamming/lcs populated)") {
     val rows = result.verified.collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val j = r.getAs[Double]("jaccard")
       val h = r.getAs[Int]("hamming")
-      val l = r.getAs[Double]("lcs_ratio")
       assert(j >= 0.0 && j <= 1.0); assert(h >= 0 && h <= 64)
-      // lcs is computed iff the cheap J-OR-Hamming clause holds (the floor
-      // only ANDs onto it); cheap-rejected pairs carry NaN, not a number.
-      if (j >= cfg.minJaccard || h <= cfg.maxHamming)
+      // at the default floor 0 no ratio can reject a pair, so ST3 runs no
+      // LCS automaton: every pair carries NaN and passes on the cheap
+      // J-OR-Hamming clause alone
+      val stored = r.getAs[Double]("lcs_ratio")
+      assert(stored.isNaN, s"lcs computed at floor 0: $stored")
+      assert(r.getAs[Boolean]("passed") == cheap(r))
+      if (cheap(r)) {
+        val l = lcsOf(r)
         assert(l >= 0.0 && l <= 1.0, s"computed lcs out of range: $l")
-      else assert(l.isNaN, s"lcs must be NaN for cheap-rejected pairs, got $l")
+      }
+    }
+    // at a positive floor lcs is computed iff the cheap clause holds (the
+    // floor only ANDs onto it); cheap-rejected pairs carry NaN, not a number
+    val floor = 0.3
+    val gated = Pipeline.verifyPairs(result.candidates, Pipeline.distinctContents(result.extracted),
+      cfg.copy(minLcsRatio = floor)).collect()
+    assert(gated.length == rows.length)
+    gated.foreach { r =>
+      val l = r.getAs[Double]("lcs_ratio")
+      if (cheap(r)) {
+        assert(l >= 0.0 && l <= 1.0, s"computed lcs out of range: $l")
+        assert(l == lcsOf(r))
+      } else assert(l.isNaN, s"lcs must be NaN for cheap-rejected pairs, got $l")
+      assert(r.getAs[Boolean]("passed") == (cheap(r) && l >= floor))
     }
     // passed pairs dominated by high jaccard
     val passed = rows.filter(_.getAs[Boolean]("passed"))
@@ -140,9 +169,10 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("LCS gate A/B (minLcsRatio 0/0.3/0.5): floors lose recall, gain no precision") {
-    // Justifies the minLcsRatio = 0.0 default (Model.scala): lcs_ratio is
-    // computed per verified pair, so alternate floors are evaluated offline
-    // from ONE pipeline run by re-deriving the pass rule
+    // Justifies the minLcsRatio = 0.0 default (Model.scala): the LCS ratio
+    // of each cheap-passing verified pair is computed here from its texts
+    // (ST3 computes none at floor 0), so alternate floors are evaluated
+    // offline from ONE pipeline run by re-deriving the pass rule
     // (J >= minJaccard OR hamming <= maxHamming) AND lcs >= floor.
     val urlToNode = Pipeline.extract(pages, cfg).select("url", "node_id")
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -161,7 +191,7 @@ class PipelineSpec extends SparkSpec {
     val vrows = result.verified.collect().map { r =>
       val a = r.getAs[Long]("id_a"); val b = r.getAs[Long]("id_b")
       (math.min(a, b), math.max(a, b), r.getAs[Double]("jaccard"),
-        r.getAs[Int]("hamming"), r.getAs[Double]("lcs_ratio"))
+        r.getAs[Int]("hamming"), if (cheap(r)) lcsOf(r) else Double.NaN)
     }
     def passedAt(minL: Double): Set[(Long, Long)] = vrows.collect {
       case (a, b, j, h, l)

@@ -91,6 +91,88 @@ class ResumeSpec extends SparkSpec {
     assert(r.report.count() > 0)
   }
 
+  /** The `snap-*` data dirs under a checkpoint root's stage dir. */
+  private def snapshots(root: String, stage: String): Seq[java.nio.file.Path] = {
+    import scala.jdk.CollectionConverters._
+    val d = java.nio.file.Paths.get(root, stage)
+    if (!Files.exists(d)) Nil
+    else Files.list(d).iterator().asScala.filter(_.getFileName.toString.startsWith("snap-")).toSeq
+  }
+
+  private def deleteData(root: String, stage: String): Unit =
+    snapshots(root, stage).foreach(p => FsOps.deleteRecursive(spark.sparkContext.hadoopConfiguration,
+      new org.apache.hadoop.fs.Path(p.toUri)))
+
+  private def manifestText(root: String, stage: String): String =
+    new String(Files.readAllBytes(java.nio.file.Paths.get(root, stage, "_manifest.json")))
+
+  /** A pages parquet dir, the Main.run args over it, and a reader of an
+    * output of that run as sorted rows. */
+  private def mainFixture(prefix: String) = {
+    val dir = Files.createTempDirectory(prefix).toString
+    PagesGen.pages(spark, spec).write.parquet(s"$dir/pages")
+    def args(out: String) = Main.parse(Seq("--input", s"$dir/pages", "--output", s"$dir/$out",
+      "--checkpoint", s"$dir/ck"))
+    def rows(out: String, t: String) = {
+      val p = s"$dir/$out/$t"
+      (if (t == "reference_json") spark.read.text(p) else spark.read.parquet(p))
+        .collect().map(_.toString).toSeq.sorted
+    }
+    (dir, args _, rows _)
+  }
+
+  private val outputs = Seq("report", "canonical_map", "reference_json")
+
+  test("a retired root missing ST5's data computes ST5 alone") {
+    val (dir, args, rows) = mainFixture("graft-frontier-st5")
+    val ck = s"$dir/ck"
+    Main.run(spark, args("out1"))
+    deleteData(ck, "st5_report")
+    val before = Pipeline.Stages.init.map(manifestText(ck, _))
+
+    val (_, n) = countingJobs(Main.run(spark, args("out2")))
+    val metrics = """"stage":"(\w+)"[^\n]*"wall_ms":(\d+)""".r
+      .findAllMatchIn(new String(Files.readAllBytes(java.nio.file.Paths.get(s"$dir/out2/metrics.json"))))
+      .map(m => m.group(1) -> m.group(2).toLong).toSeq
+    assert(metrics.map(_._1) == Pipeline.Stages)
+    assert(metrics.filter(_._2 > 0).map(_._1) == Seq("st5_report"), s"stage walls: $metrics")
+    // no lower stage ran: a computed stage commits a new manifest
+    assert(Pipeline.Stages.init.map(manifestText(ck, _)) == before)
+    // the 10 jobs of a full resume plus ST5's commit: its sort's sample
+    // and range-partitioning jobs and the write
+    assert(n <= 13, s"computing ST5 on a retired root started $n Spark jobs")
+    outputs.foreach(t => assert(rows("out2", t) == rows("out1", t), s"$t differs"))
+    assert(snapshots(ck, "st5_report").size == 1)
+  }
+
+  test("an interrupted retirement resumes with no stage computed; Main.run finishes it") {
+    val (dir, args, rows) = mainFixture("graft-frontier-partial")
+    val ck = s"$dir/ck"
+    val a = args("out")
+    val pages = FsOps.readParquet(spark, s"$dir/pages")
+    def io = new ParquetSnapshotIO(ck, Main.snapshotKey(a))
+    val r1 = Pipeline.run(spark, pages, a.cfg, io)
+    val report = r1.report.collect().map(_.toString).sorted
+    val sigs = r1.signatures.collect().map(_.toString).sorted
+    Seq("st1_signatures", "st2_candidates").foreach(deleteData(ck, _))
+
+    val r2 = Pipeline.run(spark, pages, a.cfg, io)
+    assert(r2.metrics.forall(_.wall_ms == 0), s"computed: ${r2.metrics.filter(_.wall_ms > 0).map(_.stage)}")
+    assert(r2.metrics.map(m => (m.stage, m.rows_in, m.rows_out)) ==
+      r1.metrics.map(m => (m.stage, m.rows_in, m.rows_out)))
+    assert(r2.metrics.filter(_.bytes == 0).map(_.stage) == Seq("st1_signatures", "st2_candidates"))
+    assert(r2.report.collect().map(_.toString).sorted.sameElements(report))
+    // a frame nothing read is computed (and committed) once a caller asks
+    assert(snapshots(ck, "st1_signatures").isEmpty)
+    assert(r2.signatures.collect().map(_.toString).sorted.sameElements(sigs))
+    assert(snapshots(ck, "st1_signatures").size == 1)
+
+    Main.run(spark, a)
+    assert(Pipeline.Stages.filter(st => snapshots(ck, st).nonEmpty) == Seq("st4_clusters", "st5_report"))
+    assert(rows("out", "report") == report.toSeq)
+    outputs.foreach(t => assert(rows("out", t).nonEmpty, s"$t is empty"))
+  }
+
   test("per-partition lineage metrics written alongside every commit") {
     val root = Files.createTempDirectory("graft-metrics").toString
     val pages = PagesGen.pages(spark, spec)
