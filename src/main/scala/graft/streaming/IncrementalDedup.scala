@@ -14,7 +14,7 @@ import graft.model.GraftConfig
   * NEW urls only, against durable state tables —
   *
   *   signatures(node_id, n_bytes, simhash, band_hashes, text)       [state:
-  *     one row per distinct content]
+  *     one row per distinct content, stored by near-dup component]
   *   members(url, node_id, n_bytes, warc_ts, batch_id)              [state]
   *   edges(id_a, id_b)                                              [state]
   *   clusters(url, node_id, cluster_id, n_bytes, warc_ts, batch_id) [state+output:
@@ -29,9 +29,16 @@ import graft.model.GraftConfig
   * under the current config (new-vs-new and new-vs-stored pairs, salted by
   * the combined census; see crossBatchCandidates) -> ONE exact verify of
   * every pair by batch ST3's pass rule, over the batch's texts and the
-  * stored texts of its stored endpoints -> append state -> connected
-  * components over the AFFECTED components only -> swap in the updated
-  * clusters table (untouched clusters carried forward verbatim).
+  * stored texts of its stored endpoints -> append edges and members ->
+  * connected components over the AFFECTED components only -> append the
+  * signature rows, partitioned and sorted by their component -> swap in
+  * the updated clusters table (untouched clusters carried forward
+  * verbatim).
+  *
+  * Where the reference hard-links the duplicates it finds
+  * (consolidation.rs), the state stores a near-dup family about once: its
+  * signature rows sit side by side (see byComponent), so zstd compresses
+  * their near-identical texts and band hashes together.
   *
   * This is the reference's checkpoint-resume design (nullable-checksum
   * columns as "already computed" state, file_db.rs:375-388) turned into
@@ -207,18 +214,20 @@ object IncrementalDedup {
     * that introduces no new (url, node_id) binding is a no-op: state and
     * clusters are left untouched. */
   def processBatch(batch: DataFrame, cfg: GraftConfig, dirs: StateDirs, batchId: Long = 0L,
-      crashAfterAppends: Int = Int.MaxValue): Unit = {
+      crashAfterWrites: Int = Int.MaxValue): Unit = {
     val spark = batch.sparkSession
     ensureStateVersion(spark, cfg, dirs)
     // Test hook mirroring remapNodeIds' crashAfterTables: die before the
-    // (crashAfterAppends+1)-th state append, so the replay-resume contract
-    // (see the append block below) is exercisable at every crash point.
-    var appendsDone = 0
-    def appendState(df: DataFrame, path: String): Unit = {
-      if (appendsDone >= crashAfterAppends)
-        throw new RuntimeException(s"injected crash before state append #${appendsDone + 1}")
-      appendsDone += 1
-      appendParquet(df, path)
+    // (crashAfterWrites+1)-th state write - the edges, members and
+    // signatures appends, then the clusters swap - so the replay-resume
+    // contract (see the append block below) is exercisable at every crash
+    // point.
+    var writesDone = 0
+    def stateWrite(write: => Unit): Unit = {
+      if (writesDone >= crashAfterWrites)
+        throw new RuntimeException(s"injected crash before state write #${writesDone + 1}")
+      writesDone += 1
+      write
     }
 
     val extracted = Pipeline.extract(batch, cfg).localCheckpoint(false)
@@ -299,10 +308,13 @@ object IncrementalDedup {
     // in its signature row, so they are never durable without it.
     // Signatures-first would invert that: a crash between it and the edges
     // append would make the replay see "already processed" and the batch's
-    // candidate edges would be lost FOREVER (silent recall loss).
-    appendState(verified, dirs.edges)
-    appendState(newMemberRows, dirs.members)
-    appendState(sigs, dirs.signatures) // LAST: gates replay recompute
+    // candidate edges would be lost FOREVER (silent recall loss). The
+    // signatures append waits for the batch's connected components below,
+    // whose labels set its row layout, and lands before the clusters swap:
+    // a replay after a crash between the two finds no content left to
+    // process and reclusters from the durable edges and members.
+    stateWrite(appendParquet(verified, dirs.edges))
+    stateWrite(appendParquet(newMemberRows, dirs.members))
     // The per-batch metrics row (the durable audit of a stream's candidate
     // and edge counts) is computed here but appended AFTER the clusters
     // swap: appended earlier, a crash before the swap would make the
@@ -326,19 +338,27 @@ object IncrementalDedup {
         .toDF("batch_id", "candidates_new", "candidates_cross",
           "edges_exact_verified", "edges_est_only", "committed_ms")
 
-    // ---- recluster, bounded to AFFECTED components.
-    // Closure argument: an old component's labels can change only through
-    // (a) a new edge — whose endpoints are batch-touched nodes — or (b) a
-    // node death — which only happens when one of its urls re-binds, so the
-    // node is batch-touched too. Components not intersecting the touched
-    // set A0 are therefore carried forward verbatim; per-batch CC work is
-    // O(affected dup-graph), not O(all accumulated edges).
-    if (prevC == null) {
-      rebuildClusters(spark, cfg, dirs) // first batch ever / state recovery
-      appendParquet(metricsRow, dirs.metrics) // after the swap, see above
-      compactStateIfNeeded(spark, cfg, dirs)
-      return
-    }
+    val (cc, clusters) =
+      if (prevC == null) rebuildClusters(spark, cfg, dirs) // first batch ever / state recovery
+      else reclusterAffected(spark, cfg, dirs, prevC, newMemberRows, verified)
+    // LAST append (see above); a content with no edge has no CC label
+    stateWrite(appendParquet(byComponent(
+      sigs.join(cc.withColumnRenamed("id", "node_id"), Seq("node_id"), "left")), dirs.signatures))
+    stateWrite(replaceTable(clusters, dirs.clusters))
+    appendParquet(metricsRow, dirs.metrics) // after the swap, see above
+    compactStateIfNeeded(spark, cfg, dirs)
+  }
+
+  /** The batch's recluster, bounded to AFFECTED components: the CC labels
+    * (id, cluster_id) of the affected live nodes and the next clusters
+    * table. Closure argument: an old component's labels can change only
+    * through (a) a new edge — whose endpoints are batch-touched nodes — or
+    * (b) a node death — which only happens when one of its urls re-binds,
+    * so the node is batch-touched too. Components not intersecting the
+    * touched set A0 are therefore carried forward verbatim; per-batch CC
+    * work is O(affected dup-graph), not O(all accumulated edges). */
+  private def reclusterAffected(spark: SparkSession, cfg: GraftConfig, dirs: StateDirs,
+      prevC: DataFrame, newMemberRows: DataFrame, verified: DataFrame): (DataFrame, DataFrame) = {
     val batchUrls = newMemberRows.select("url") // one row per url already
 
     // winner binding per batch url: its previous binding vs the batch rows
@@ -398,13 +418,9 @@ object IncrementalDedup {
 
     val cc = graft.cluster.ConnectedComponents.run(spark, affEdges,
       localThreshold = cfg.ccLocalThreshold)
-    val newAff = labeled(affResolved, cc)
-
     val untouched = prevC.join(affClusters, Seq("cluster_id"), "left_anti")
       .select("url", "node_id", "cluster_id", "n_bytes", "warc_ts", "batch_id")
-    replaceTable(untouched.unionByName(newAff), dirs.clusters)
-    appendParquet(metricsRow, dirs.metrics) // after the swap, see above
-    compactStateIfNeeded(spark, cfg, dirs)
+    (cc, untouched.unionByName(labeled(affResolved, cc)))
   }
 
   /** The candidate pairs of a batch, new-vs-new and new-vs-stored, from
@@ -424,28 +440,27 @@ object IncrementalDedup {
     * rows can hold billions of keys, the batch thousands), so the pass is
     * O(batch bands + their stored groups).
     *
-    * The combined table is reduced to one row per (node, key), a batch node
-    * staying new. A batch appends only contents absent from the stored
-    * rows, so they hold each node once, but over a root that holds one
-    * twice (hand-merged state) a raw row count would push a band across
-    * maxBandGroup (spurious salting) or hardMaxBandGroup (the band silently
-    * dropped, its cross pairs never re-probed). */
+    * The census counts rows, so it needs each (node, key) once, and it
+    * gets that with no reduction: a v5 root holds each node once (a batch
+    * appends only contents absent from the stored rows, and compaction
+    * keeps one row per live node), and `newBands` comes from contents
+    * anti-joined to those rows, so no batch node is on the stored side. */
   private[graft] def crossBatchCandidates(newBands: DataFrame, storedBands: DataFrame,
       cfg: GraftConfig): DataFrame = {
     val stored = storedBands.select("node_id", "band_key")
       .join(broadcast(newBands.select("band_key")), Seq("band_key"), "left_semi")
     val bands = newBands.select(col("node_id"), col("band_key"), lit(true).as("is_new"))
       .unionByName(stored.select(col("node_id"), col("band_key"), lit(false).as("is_new")))
-      .groupBy("node_id", "band_key").agg(max(col("is_new")).as("is_new"))
     Pipeline.bandedPairs(bands, cfg.maxBandGroup, cfg.hotBandCap).pairs
   }
 
   /** Full recluster from ground-truth state (members + edges): latest
-    * binding per url, live-edge CC, every url labeled. Used for the first
-    * batch and cluster-state recovery; per-batch processing
-    * uses the bounded affected-component path instead. */
-  private def rebuildClusters(spark: SparkSession, cfg: GraftConfig, dirs: StateDirs): Unit = {
-    if (!exists(spark, dirs.members)) return
+    * binding per url, live-edge CC, every url labeled. Returns the CC labels
+    * (id, cluster_id) and the clusters table. Used for the first batch and
+    * cluster-state recovery; per-batch processing uses the bounded
+    * affected-component path ([[reclusterAffected]]) instead. */
+  private def rebuildClusters(spark: SparkSession, cfg: GraftConfig,
+      dirs: StateDirs): (DataFrame, DataFrame) = {
     val resolved = latestBinding(FsOps.readParquet(spark, dirs.members)).localCheckpoint(false)
     val liveA = resolved.select(col("node_id").as("id_a")) // keys semi-joins only
     val liveEdges = // CC ignores repeated edges
@@ -455,7 +470,20 @@ object IncrementalDedup {
         .join(liveA.select(col("id_a").as("id_b")), Seq("id_b"), "left_semi")
     val cc = graft.cluster.ConnectedComponents.run(spark, liveEdges,
       localThreshold = cfg.ccLocalThreshold)
-    replaceTable(labeled(resolved, cc), dirs.clusters)
+    (cc, labeled(resolved, cc))
+  }
+
+  /** The one layout of `signatures` rows, for the batch append and for
+    * compaction: hash-partitioned by component label and sorted by
+    * (component, node_id). A near-dup family's rows, whose texts and band
+    * hashes nearly repeat, then sit side by side in one file, where zstd
+    * (which compresses each parquet page on its own) stores the family
+    * about once; in node_id order its copies land in different files and
+    * pages. `rows` holds the signature columns plus a `cluster_id` label,
+    * null for a node without one (its own node_id is its label). */
+  private def byComponent(rows: DataFrame): DataFrame = {
+    val component = coalesce(col("cluster_id"), col("node_id"))
+    rows.repartition(component).sortWithinPartitions(component, col("node_id")).drop("cluster_id")
   }
 
   /** The latest binding of every url among `members` (url, node_id,
@@ -622,11 +650,13 @@ object IncrementalDedup {
     *  - edges -> distinct, endpoints restricted to LIVE nodes (an edge on a
     *    node no url binds cannot affect clustering; cluster time retires
     *    them anyway — compaction just stops paying to rescan them);
-    *  - signatures -> live nodes only. This trades the "resurrected
-    *    content needs no recompute" property for bounded state: a url
-    *    reverting to GC'd content re-enters as new content (the batch
-    *    carries its text, so the signature row is recomputed — same
-    *    clusters, one extra signature's compute).
+    *  - signatures -> live nodes only, in the component layout under the
+    *    live clusters' labels ([[byComponent]]), so a family that grew
+    *    across batches shares one file again. This trades the
+    *    "resurrected content needs no recompute" property for bounded
+    *    state: a url reverting to GC'd content re-enters as new content
+    *    (the batch carries its text, so the signature row is recomputed —
+    *    same clusters, one extra signature's compute).
     * Returns true when a compaction ran (test hook). */
   private[streaming] def compactStateIfNeeded(spark: SparkSession, cfg: GraftConfig,
       dirs: StateDirs): Boolean = {
@@ -636,12 +666,13 @@ object IncrementalDedup {
     if (!dirsToWatch.exists(p => FsOps.fileCount(hconf(spark), new Path(p)) > threshold))
       return false
 
+    // each live node with its component label (one per node)
     val live = FsOps.readParquet(spark, dirs.clusters)
-      .select("node_id").distinct().localCheckpoint(true)
+      .select("node_id", "cluster_id").distinct().localCheckpoint(true)
     def rewrite(path: String)(f: DataFrame => DataFrame): Unit =
       if (exists(spark, path)) replaceTable(f(FsOps.readParquet(spark, path)), path)
     rewrite(dirs.members)(latestBinding)
-    rewrite(dirs.signatures)(_.join(live, Seq("node_id"), "left_semi"))
+    rewrite(dirs.signatures)(s => byComponent(s.join(live, Seq("node_id"))))
     rewrite(dirs.edges) { e =>
       e.distinct()
         .join(live.withColumnRenamed("node_id", "id_a"), Seq("id_a"), "left_semi")

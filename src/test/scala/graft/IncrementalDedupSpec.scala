@@ -477,28 +477,107 @@ class IncrementalDedupSpec extends SparkSpec {
     assert(gotNew == expectedNew, s"expected new-vs-new pairs $expectedNew, got $gotNew")
   }
 
-  test("replay duplicates cannot shift a band across the salt/drop thresholds") {
-    val cfgC = cfg.copy(maxBandGroup = 8, hardMaxBandGroup = 10)
-    val key = 77L
-    // True state: 4 distinct stored members. A crashed earlier batch left
-    // every historical row duplicated, and a crashed attempt of THIS batch
-    // already appended its own 3 rows (bands land before the signature
-    // gate in the append-order contract). A raw census would count
-    // 8 + 3 stored rows + 3 batch rows = 14 > hardMaxBandGroup = 10 and
-    // silently drop the band — permanent recall loss, since these nodes
-    // are never re-probed once signatures land. The true combined size is
-    // 4 + 3 = 7 <= maxBandGroup: one cold cell emitting every cross pair
-    // and every new-vs-new pair, with the batch's own replay rows excluded
-    // from the stored side.
-    val storedTrue = Seq(1L, 2L, 3L, 4L)
-    val stored = (storedTrue ++ storedTrue ++ Seq(11L, 12L, 13L))
-      .map((_, key)).toDF("node_id", "band_key")
-    val batch = Seq(11L, 12L, 13L).map((_, key)).toDF("node_id", "band_key")
-    val (gotNew, got) = candidates(batch, stored, cfgC)
-    val expected = (for { n <- Seq(11L, 12L, 13L); s <- storedTrue }
-      yield (math.min(n, s), math.max(n, s))).toSet
-    assert(got == expected, s"expected the full cold cross product $expected, got $got")
-    assert(gotNew == Set((11L, 12L), (11L, 13L), (12L, 13L)), s"new-vs-new pairs: $gotNew")
+  test("signatures hold each node once after crash replays and a compaction") {
+    // The candidate pass counts band rows with no per-(node, key)
+    // reduction, so the stored rows must hold each node once. Each batch
+    // is crashed at every state write in turn (edges, members, signatures,
+    // clusters swap), each attempt getting further than the one before,
+    // then replayed to the end; a last batch forces a compaction.
+    val (_, batches) = plantedCorpus
+    val dirs = StateDirs(Files.createTempDirectory("graft-inc-once").toString)
+    def assertOnce(when: String): Unit = {
+      val ids = spark.read.parquet(dirs.signatures).select("node_id").collect().map(_.getLong(0)).toSeq
+      assert(ids.distinct.size == ids.size, s"$when: ${ids.diff(ids.distinct)} stored twice")
+    }
+    batches.take(2).zipWithIndex.foreach { case (b, i) =>
+      (0 to 3).foreach { k =>
+        val e = intercept[RuntimeException] {
+          IncrementalDedup.processBatch(df(b), cfg, dirs, batchId = i.toLong, crashAfterWrites = k)
+        }
+        assert(e.getMessage.contains("injected crash"))
+        if (Files.exists(Paths.get(dirs.signatures))) assertOnce(s"batch $i, crash point $k")
+      }
+      IncrementalDedup.processBatch(df(b), cfg, dirs, batchId = i.toLong)
+      assertOnce(s"batch $i replayed")
+    }
+    IncrementalDedup.processBatch(df(batches(2)), cfg.copy(incCompactFileThreshold = 1), dirs,
+      batchId = 2L)
+    assert(spark.read.parquet(dirs.members).count() == 10, "the compaction did not run")
+    assertOnce("compacted")
+    assert(clusterGroups(dirs) == plantedTruth)
+  }
+
+  /** Star families for the layout gate: 24 stars, each a 1,500-token base
+    * page of random words and six copies with one token changed. The text
+    * column (~1.7 MB) spans several parquet pages. */
+  private val starPages = {
+    val rnd = new scala.util.Random(7L)
+    (1 to 24).flatMap { s =>
+      val base = Array.fill(1500)(s"s${s}w${rnd.nextInt(4000)}")
+      (0 to 6).map { c =>
+        val t = base.clone()
+        if (c > 0) t(rnd.nextInt(t.length)) = s"zq${s}c$c"
+        page(s"u://star$s/$c", t.mkString(" "))
+      }
+    }
+  }
+
+  /** Every `signatures` data file in name order, each with its rows'
+    * (component label, node_id) in file order; the label is the node's
+    * `cluster_id` in the clusters table. */
+  private def signatureLayout(dirs: StateDirs): Seq[(String, Seq[(Long, Long)])] = {
+    import scala.jdk.CollectionConverters._
+    val label = spark.read.parquet(dirs.clusters).select("node_id", "cluster_id").collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    Files.list(Paths.get(dirs.signatures)).iterator().asScala.map(_.toString)
+      .filter(_.endsWith(".parquet")).toSeq.sorted
+      .map(f => f -> spark.read.parquet(f).select("node_id").collect()
+        .map(r => (label(r.getLong(0)), r.getLong(0))).toSeq)
+  }
+
+  /** Each component's rows sit in one file, contiguous and in (component,
+    * node_id) order: a file sorted by that key holds each of its
+    * components as one run. */
+  private def assertComponentLayout(dirs: StateDirs): Unit = {
+    val layout = signatureLayout(dirs)
+    layout.foreach { case (f, rows) =>
+      assert(rows == rows.sorted, s"$f is not ordered by (component, node_id): $rows") }
+    val filesOf = layout.flatMap { case (f, rows) => rows.map(_._1 -> f) }.groupBy(_._1)
+    filesOf.foreach { case (c, fs) =>
+      assert(fs.map(_._2).distinct.size == 1, s"component $c spans files ${fs.map(_._2).distinct}") }
+  }
+
+  test("signature rows are stored by component, smaller than in node_id order") {
+    val dirs = StateDirs(Files.createTempDirectory("graft-inc-layout").toString)
+    IncrementalDedup.processBatch(df(starPages).unionByName(EditChain.pages(spark, 12)),
+      cfg, dirs, batchId = 1L)
+    // the fixture is what it claims: 24 stars of 7 and one 12-page chain
+    val sizes = spark.read.parquet(dirs.clusters).groupBy("cluster_id").count()
+      .collect().map(_.getLong(1)).toSeq.sorted
+    assert(sizes == Seq.fill(24)(7L) :+ 12L, s"component sizes $sizes")
+    assertComponentLayout(dirs)
+
+    // the same rows in node_id order, through the same writer, take more
+    // bytes: there a family's copies fall into different pages, each
+    // compressed on its own
+    val conf = spark.sparkContext.hadoopConfiguration
+    def bytes(dir: String) = FsOps.parquetFiles(conf, new Path(dir)).map(_.bytes).sum
+    val byNode = Files.createTempDirectory("graft-inc-bynode").toString + "/signatures"
+    FsOps.writeParquet(spark.read.parquet(dirs.signatures).repartition(1).sortWithinPartitions("node_id"),
+      byNode, "errorifexists")
+    info(s"signatures: ${bytes(dirs.signatures)} B by component, ${bytes(byNode)} B by node_id")
+    assert(bytes(dirs.signatures) < bytes(byNode))
+
+    // a later copy of star 1 lands in its own batch's file; the compaction
+    // this batch forces rewrites the table in the same layout, so star 1,
+    // its new member included, shares one file again, as does every other
+    // live component
+    IncrementalDedup.processBatch(df(Seq(page("u://star1/7", starPages.head._4 + " tail"))),
+      cfg.copy(incCompactFileThreshold = 1), dirs, batchId = 2L)
+    val c = spark.read.parquet(dirs.clusters).collect().map(r => r.getString(0) -> r.getLong(2)).toMap
+    assert(c("u://star1/7") == c("u://star1/0"), "the late copy must join star 1")
+    assert(spark.read.parquet(dirs.members).count() == c.size, "the compaction did not run")
+    assertComponentLayout(dirs)
   }
 
   test("state keeps one row per content: signature, band hashes and text") {
@@ -781,26 +860,35 @@ class IncrementalDedupSpec extends SparkSpec {
     assert(control.exists(g => g.contains("u://a") && g.contains("u://b")),
       "sanity: the cross-batch near-dup pair must co-cluster in the control")
 
-    // kill batch 2 before its (k+1)-th state append (k=0..2: edges,
-    // members, signatures), then REPLAY it — foreachBatch is
-    // at-least-once. Whatever the crash point, the replay must converge to
-    // the control clusters (the signatures append runs LAST precisely so a
-    // replay recomputes anything not yet durable), and the metrics audit
-    // table must hold exactly one row for the replayed batch (it is
-    // appended after the clusters swap).
-    // Every crash point runs on a plain and on a file:// root.
-    for (uri <- Seq(false, true); k <- 0 to 2) {
-      val dirs = StateDirs(stateRoot(s"graft-inc-crash-$k", uri))
-      IncrementalDedup.processBatch(b1, cfg, dirs, batchId = 1L)
-      val e = intercept[RuntimeException] {
-        IncrementalDedup.processBatch(b2, cfg, dirs, batchId = 2L, crashAfterAppends = k)
+    // kill a batch before its (k+1)-th state write (k=0..3: the edges,
+    // members and signatures appends, then the clusters swap), then REPLAY
+    // it — foreachBatch is at-least-once. Whatever the crash point, the
+    // replay must converge to the control clusters (the signatures append
+    // runs LAST of the appends precisely so a replay recomputes anything
+    // not yet durable, and a replay after it reclusters from the durable
+    // edges and members), and the metrics audit table must hold exactly
+    // one row per batch (it is appended after the clusters swap).
+    // Batch 2 (the affected-component path) crashes at every point on a
+    // plain and on a file:// root; batch 1 (the full rebuild) on a plain one.
+    val runs = (for (uri <- Seq(false, true); k <- 0 to 3) yield (uri, 2L, k)) ++
+      (0 to 3).map(k => (false, 1L, k))
+    for ((uri, crashed, k) <- runs) {
+      val dirs = StateDirs(stateRoot(s"graft-inc-crash-$crashed-$k", uri))
+      for ((id, b) <- Seq(1L -> b1, 2L -> b2)) {
+        if (id == crashed) {
+          val e = intercept[RuntimeException] {
+            IncrementalDedup.processBatch(b, cfg, dirs, batchId = id, crashAfterWrites = k)
+          }
+          assert(e.getMessage.contains("injected crash"))
+        }
+        IncrementalDedup.processBatch(b, cfg, dirs, batchId = id)
       }
-      assert(e.getMessage.contains("injected crash"))
-      IncrementalDedup.processBatch(b2, cfg, dirs, batchId = 2L)
       assert(groups(dirs) == control,
-        s"${dirs.root}, crash point $k: replay must match the no-crash result")
-      assert(spark.read.parquet(dirs.metrics).where(col("batch_id") === 2L).count() == 1,
-        s"${dirs.root}, crash point $k: exactly one metrics row for the replayed batch")
+        s"${dirs.root}, batch $crashed, crash point $k: replay must match the no-crash result")
+      val perBatch = spark.read.parquet(dirs.metrics).groupBy("batch_id").count().collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(perBatch == Map(1L -> 1L, 2L -> 1L),
+        s"${dirs.root}, batch $crashed, crash point $k: one metrics row per batch, got $perBatch")
     }
   }
 
@@ -829,6 +917,7 @@ class IncrementalDedupSpec extends SparkSpec {
     val m = spark.read.parquet(dirs.metrics).where(col("batch_id") === 2L).head()
     assert(m.getAs[Long]("candidates_new") >= 1 && m.getAs[Long]("candidates_cross") >= 2)
     assert(m.getAs[Long]("edges_est_only") == 0 && m.getAs[Long]("edges_exact_verified") >= 3)
+    info(s"second batch: $n Spark jobs")
     assert(n <= 40, s"second batch ran $n Spark jobs")
   }
 
